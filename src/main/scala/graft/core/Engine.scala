@@ -19,10 +19,24 @@ import org.apache.spark.sql.functions._
   *   -> conditional floors, final = max(floor, score) (F13)
   *   -> risk category bins (F7)
   *
-  * Everything is a horizontal Column fold — no UDFs, no shuffles beyond
-  * whatever built the input panel; the whole scoring stage is one
-  * whole-stage-codegen projection, which is what makes it viable at
-  * 100 TB (scoring cost is a map over the panel, embarrassingly parallel).
+  * Everything is a horizontal Column expression — no UDFs, no shuffles
+  * beyond whatever built the input panel — built as one projection per
+  * dependency layer, each derived from the config tables:
+  *   1. every indicator's raw value, once, into a hidden `__raw_*` column;
+  *   2. the indicator scores, interpolated over those columns;
+  *   3. the domain scores with their multipliers;
+  *   4. the composite and the indicator count;
+  *   5. the floors; 6. the category, dropping the hidden columns.
+  * Six projections cost the same to analyze however many indicators a
+  * config has, where a `withColumn` per column re-analyzed the growing plan
+  * each time. The raw values get their own layer because the interpolation
+  * and the safe divides read a value five or more times: inlined, a ratio of
+  * component sums was copied into every `CASE` branch, out of reach of
+  * subexpression elimination, and the generated class grew with it. Over a
+  * computed column the optimizer keeps the layer (it does not inline a
+  * non-trivial expression read more than once), so each raw value is
+  * evaluated once per row. Float operations keep their order, so the
+  * scores are the same bits as a column-at-a-time build.
   */
 object Engine {
 
@@ -54,14 +68,18 @@ object Engine {
     val knownDomains = cfg.domains.map(_.name).toSet
     require(cfg.indicators.forall(i => knownDomains(i.domain)),
       "indicator references unknown domain")
+    def rawCol(name: String): String = s"__raw_$name"
 
-    // 1. indicator scores
-    val withInds = cfg.indicators.foldLeft(panel) { (df, i) =>
-      df.withColumn(indCol(i.name), Scoring.interpolate(i.raw, i.healthy, i.distress))
-    }
+    // 1. raw indicator values, each computed once
+    val raws = Layer(panel, cfg.indicators.map(i => rawCol(i.name) -> i.raw))
 
-    // 2. domain scores (0-100), with optional capped multiplier
-    val withDomains = cfg.domains.foldLeft(withInds) { (df, d) =>
+    // 2. indicator scores
+    val withInds = Layer(raws, cfg.indicators.map { i =>
+      indCol(i.name) -> Scoring.interpolate(col(rawCol(i.name)), i.healthy, i.distress)
+    })
+
+    // 3. domain scores (0-100), with optional capped multiplier
+    val withDomains = Layer(withInds, cfg.domains.map { d =>
       val members = cfg.indicators.filter(_.domain == d.name)
       val base = Scoring.weightedRenormMean(
         members.map(i => col(indCol(i.name)) -> i.weight))
@@ -72,27 +90,24 @@ object Engine {
           when(base.isNull, lit(null)).otherwise(least(lit(100.0), base * mult))
         case None => base
       }
-      df.withColumn(domCol(d.name), boosted)
-    }
+      domCol(d.name) -> boosted
+    })
 
-    // 3. composite over domain scores (already 0-100 -> scale 1)
+    // 4. composite over domain scores (already 0-100 -> scale 1), behind
+    // the completeness gate
     val composite = Scoring.weightedRenormMean(
       cfg.domains.map(d => col(domCol(d.name)) -> d.weight), scale = 1.0)
-
-    // 4. completeness gate
     val indCols = cfg.indicators.map(i => col(indCol(i.name)))
-    val gated = Scoring.minIndicatorsGate(composite, indCols, cfg.minIndicators)
-
-    val withComposite = withDomains
-      .withColumn("composite_score", gated)
-      .withColumn("n_indicators", Scoring.nonNullCount(indCols))
+    val withComposite = Layer(withDomains, Seq(
+      "composite_score" -> Scoring.minIndicatorsGate(composite, indCols, cfg.minIndicators),
+      "n_indicators" -> Scoring.nonNullCount(indCols)))
 
     // 5. floors (never lower a score), then categorize
     val floored = cfg.floors.foldLeft(col("composite_score")) { (acc, f) =>
       Scoring.applyFloor(acc, f.guard, f.floor)
     }
-    withComposite
-      .withColumn("final_score", floored)
-      .withColumn("risk_category", Scoring.categorize(col("final_score")))
+    val withFinal = Layer(withComposite, Seq("final_score" -> floored))
+    Layer(withFinal, Seq("risk_category" -> Scoring.categorize(col("final_score"))),
+      drop = cfg.indicators.map(i => rawCol(i.name)))
   }
 }

@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -117,7 +118,7 @@ object SharedFrames {
     while (df != null) { safeUnpersist(df); df = anonymous.poll() }
     var c = cleanups.poll()
     while (c != null) {
-      try c() catch { case _: Throwable => () }
+      try c() catch { case NonFatal(_) => () }
       c = cleanups.poll()
     }
   }
@@ -142,5 +143,5 @@ object SharedFrames {
 
   private def safeUnpersist(df: DataFrame): Unit =
     try df.unpersist(blocking = false)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 }

@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
   *
   * Columns are pruned and predicates pushed by Catalyst automatically —
@@ -22,6 +24,9 @@ object Tables {
     * footer-parse + decode cost once instead of per query. */
   @volatile var cacheScans: Boolean = false
 
+  /** Bytes of parquet per cached-scan partition (see [[t]]). */
+  private val CacheSliceBytes = 128L << 10
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     def read = spark.read.parquet(s"$dir/$name.parquet")
     if (cacheScans) SharedFrames.cached(spark, s"table:$dir/$name") {
@@ -37,16 +42,10 @@ object Tables {
       // multi-row-group files already split by maxPartitionBytes.
       val bytes =
         try new java.io.File(s"$dir/$name.parquet").length() catch {
-          case _: Throwable => 0L
+          case NonFatal(_) => 0L
         }
-      // measurement knobs (defaults are the shipped behavior; the driver
-      // never sets them): slice size and partition cap for the cache
-      // layout, so the local per-task overhead vs parallelism trade can
-      // be A/B'd inside one host window
-      val sliceKb = sys.env.getOrElse("SPARK_GRAFT_CACHE_SLICE_KB", "128").toLong
-      val cap = sys.env.get("SPARK_GRAFT_CACHE_MAXPARTS").map(_.toInt)
-        .getOrElse(spark.sparkContext.defaultParallelism)
-      val parts = math.max(1L, math.min(cap.toLong, bytes / (sliceKb << 10)))
+      val cap = spark.sparkContext.defaultParallelism
+      val parts = math.max(1L, math.min(cap.toLong, bytes / CacheSliceBytes))
       if (parts > 1) read.repartition(parts.toInt) else read
     }
     else read

@@ -3,6 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Layer
 
 /** CSV ingest + schema standardization (SURVEY.md §2.1 S1-S4, §1.3).
   *
@@ -89,8 +90,11 @@ object Ingest {
   /** Numeric coercion, `pd.to_numeric(errors='coerce')` parity: invalid
     * strings -> NULL. `try_cast`, because Spark 4 runs ANSI mode by default
     * and a plain cast throws on malformed input. */
+  def toDouble(c: Column): Column = c.try_cast("double")
+
+  /** [[toDouble]] over the named columns, in place, as one projection. */
   def coerceNumeric(df: DataFrame, cols: Seq[String]): DataFrame =
-    cols.foldLeft(df)((d, c) => d.withColumn(c, expr(s"try_cast(`$c` AS DOUBLE)")))
+    Layer(df, cols.distinct.map(c => c -> toDouble(col(s"`$c`"))))
 
   /** F4: filing year from YYYYMM tax period. */
   def yearFromTaxPeriod(c: Column): Column =

@@ -3,7 +3,7 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Engine, Scoring}
+import graft.core.{Engine, Layer, Scoring}
 import graft.core.Engine.{Domain, Floor, Indicator, ScoringConfig}
 import graft.ingest.Ingest
 
@@ -90,20 +90,22 @@ object Form990 {
     "secured_mortgages", "unsecured_notes", "fixed_assets", "officer_loans",
     "officer_receivables", "employee_count")
 
-  /** Standardize one filing-type CSV onto the long panel schema. */
+  /** Standardize one filing-type CSV onto the long panel schema: one
+    * projection over the renamed columns. Numeric fields the filing type
+    * lacks come back as NULL doubles after the ones it has. */
   def standardizeFiling(raw: DataFrame, renameMap: Seq[(String, String)],
                         filingType: String): DataFrame = {
     val mapped = Ingest.standardize(raw, renameMap)
-    val withAll = numericCols.foldLeft(mapped) { (df, c) =>
-      if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast("string"))
+    val present = mapped.columns.toSet
+    val numeric = numericCols.map { c =>
+      c -> Ingest.toDouble(if (present(c)) col(c) else lit(null).cast("string"))
     }
-    Ingest.coerceNumeric(withAll, numericCols)
-      .withColumn("ein", Ingest.normalizeKey(col("ein_raw")))
-      .withColumn("year", Ingest.yearFromTaxPeriod(col("tax_period")))
-      .withColumn("filing_type", lit(filingType))
-      .withColumn("ceased_operations",
-        coalesce(col("ceased_operations").cast("string"), lit(null)))
-      .drop("ein_raw", "tax_period")
+    Layer(mapped, numeric ++ Seq(
+      "ein" -> Ingest.normalizeKey(col("ein_raw")),
+      "year" -> Ingest.yearFromTaxPeriod(col("tax_period")),
+      "filing_type" -> lit(filingType),
+      "ceased_operations" -> coalesce(col("ceased_operations").cast("string"), lit(null))),
+      drop = Seq("ein_raw", "tax_period"))
   }
 
   /** Union filings, keep the richest form per (ein, year): STD > EZ > PF
@@ -115,25 +117,26 @@ object Form990 {
     Ingest.dedupRicherForm(unioned, "ein", "year", rank, col("year"))
   }
 
-  /** Trend columns the indicators consume (W1-W4 over the panel). */
+  /** Trend columns the indicators consume (W1-W4 over the panel), in
+    * three layers: the lagged values, the growth rates, their gap. */
   def withTrends(panel: DataFrame): DataFrame = {
     val w = Window.partitionBy("ein").orderBy("year")
-    panel
-      .withColumn("prior_revenue", lag(col("total_revenue"), 1).over(w))
-      .withColumn("prior_expenses", lag(col("total_expenses"), 1).over(w))
-      .withColumn("prior_net_assets", lag(col("net_assets"), 1).over(w))
-      .withColumn("prior_employees", lag(col("employee_count"), 1).over(w))
-      .withColumn("gap", col("year") - lag(col("year"), 1).over(w))
-      .withColumn("revenue_cagr",
-        Scoring.cagr(col("total_revenue"), col("prior_revenue"), col("gap")))
-      .withColumn("expense_cagr",
-        Scoring.cagr(col("total_expenses"), col("prior_expenses"), col("gap")))
-      .withColumn("net_asset_trend",
-        Scoring.piecewiseTrend(col("net_assets"), col("prior_net_assets"), col("gap")))
-      .withColumn("employee_cagr",
-        Scoring.cagr(col("employee_count"), col("prior_employees"), col("gap")))
-      .withColumn("expense_revenue_gap",
-        col("expense_cagr") - col("revenue_cagr"))
+    val priors = Layer(panel, Seq(
+      "prior_revenue" -> lag(col("total_revenue"), 1).over(w),
+      "prior_expenses" -> lag(col("total_expenses"), 1).over(w),
+      "prior_net_assets" -> lag(col("net_assets"), 1).over(w),
+      "prior_employees" -> lag(col("employee_count"), 1).over(w),
+      "gap" -> (col("year") - lag(col("year"), 1).over(w))))
+    val rates = Layer(priors, Seq(
+      "revenue_cagr" ->
+        Scoring.cagr(col("total_revenue"), col("prior_revenue"), col("gap")),
+      "expense_cagr" ->
+        Scoring.cagr(col("total_expenses"), col("prior_expenses"), col("gap")),
+      "net_asset_trend" ->
+        Scoring.piecewiseTrend(col("net_assets"), col("prior_net_assets"), col("gap")),
+      "employee_cagr" ->
+        Scoring.cagr(col("employee_count"), col("prior_employees"), col("gap"))))
+    Layer(rates, Seq("expense_revenue_gap" -> (col("expense_cagr") - col("revenue_cagr"))))
   }
 
   /** The 990 indicator/domain tables (19 indicators, 5 domains — weights

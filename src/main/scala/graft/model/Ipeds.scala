@@ -3,7 +3,7 @@ package graft.model
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Engine, Scoring}
+import graft.core.{Engine, Layer, Scoring}
 import graft.core.Engine.{Domain, Floor, Indicator, ScoringConfig}
 import graft.ingest.Ingest
 import graft.ingest.Ingest.FieldSpec
@@ -74,26 +74,26 @@ object Ipeds {
   def standardizeYear(raw: DataFrame, year: Int): DataFrame = {
     val resolved = Ingest.selectResolved(raw, fieldSpecs)
     val typed = Ingest.coerceNumeric(resolved, numericCols)
-      .withColumn("unitid", trim(col("unitid")))
-      .withColumn("ein", Ingest.normalizeKey(col("ein")))
-      .withColumn("year", lit(year))
-    typed
-      .withColumn("accounting_std",
+    val totalAssets = coalesce(col("f2_assets"), col("f1a_assets"), col("f3_assets"))
+    val netAssets =
+      coalesce(col("f2_net_assets"), col("f1a_net_position"), col("f3_equity"))
+    Layer(typed, Seq(
+      "unitid" -> trim(col("unitid")),
+      "ein" -> Ingest.normalizeKey(col("ein")),
+      "year" -> lit(year),
+      "accounting_std" ->
         when(col("f2_assets").isNotNull, "fasb")
           .when(col("f1a_assets").isNotNull, "gasb")
           .when(col("f3_assets").isNotNull, "for_profit")
-          .otherwise("none"))
-      .withColumn("total_assets",
-        coalesce(col("f2_assets"), col("f1a_assets"), col("f3_assets")))
-      .withColumn("net_assets",
-        coalesce(col("f2_net_assets"), col("f1a_net_position"), col("f3_equity")))
-      .withColumn("total_revenue",
-        coalesce(col("f2_revenue"), col("f1a_revenue"), col("f3_revenue")))
-      .withColumn("total_expenses",
-        coalesce(col("f2_expenses"), col("f1a_expenses"), col("f3_expenses")))
-      .withColumn("total_liabilities",
-        // GASB/for-profit publish no liability line here: derive assets-net
-        coalesce(col("f2_liabilities"), col("total_assets") - col("net_assets")))
+          .otherwise("none"),
+      "total_assets" -> totalAssets,
+      "net_assets" -> netAssets,
+      "total_revenue" ->
+        coalesce(col("f2_revenue"), col("f1a_revenue"), col("f3_revenue")),
+      "total_expenses" ->
+        coalesce(col("f2_expenses"), col("f1a_expenses"), col("f3_expenses")),
+      // GASB/for-profit publish no liability line here: derive assets-net
+      "total_liabilities" -> coalesce(col("f2_liabilities"), totalAssets - netAssets)))
   }
 
   /** Panel assembly + subsidiary contamination + 990 injection +
@@ -122,73 +122,73 @@ object Ipeds {
       .select(col("unitid").as("sub_unitid"),
         col("parent_id").as("parent_unitid"))
 
-    val flagged = unioned
-      .join(broadcast(subs), col("unitid") === col("sub_unitid"), "left")
-      .withColumn("is_subsidiary", col("sub_unitid").isNotNull)
-      .drop("sub_unitid")
-      // contaminated balance sheets: null the balance-sheet metrics so the
-      // solvency indicators drop out of renormalization (`:1425-1433`)
-      .withColumn("total_assets",
-        when(col("is_subsidiary"), lit(null)).otherwise(col("total_assets")))
-      .withColumn("net_assets",
-        when(col("is_subsidiary"), lit(null)).otherwise(col("net_assets")))
-      .withColumn("total_liabilities",
-        when(col("is_subsidiary"), lit(null)).otherwise(col("total_liabilities")))
+    // contaminated balance sheets: null the balance-sheet metrics so the
+    // solvency indicators drop out of renormalization (`:1425-1433`)
+    val isSub = col("sub_unitid").isNotNull
+    def unlessSub(c: String): (String, Column) =
+      c -> when(isSub, lit(null)).otherwise(col(c))
+    val flagged = Layer(
+      unioned.join(broadcast(subs), col("unitid") === col("sub_unitid"), "left"),
+      Seq("is_subsidiary" -> isSub, unlessSub("total_assets"), unlessSub("net_assets"),
+        unlessSub("total_liabilities")),
+      drop = Seq("sub_unitid"))
 
     // 990 injection: fill missing financials by (ein, year)
     val injected = form990Panel match {
-      case None => flagged.withColumn("injected_990", lit(false))
+      case None => Layer(flagged, Seq("injected_990" -> lit(false)))
       case Some(f990) =>
         val f = f990.select(col("ein").as("f_ein"), col("year").as("f_year"),
           col("total_revenue").as("f_revenue"),
           col("total_expenses").as("f_expenses"),
           col("total_assets").as("f_assets"),
           col("net_assets").as("f_net"))
-        flagged
-          .join(f, col("ein") === col("f_ein") && col("year") === col("f_year"), "left")
-          .withColumn("injected_990",
-            col("total_revenue").isNull && col("f_revenue").isNotNull)
-          .withColumn("total_revenue", coalesce(col("total_revenue"), col("f_revenue")))
-          .withColumn("total_expenses", coalesce(col("total_expenses"), col("f_expenses")))
-          .withColumn("total_assets", coalesce(col("total_assets"), col("f_assets")))
-          .withColumn("net_assets", coalesce(col("net_assets"), col("f_net")))
-          .withColumn("accounting_std",
-            when(col("injected_990"), "irs990").otherwise(col("accounting_std")))
-          .drop("f_ein", "f_year", "f_revenue", "f_expenses", "f_assets", "f_net")
+        val inject = col("total_revenue").isNull && col("f_revenue").isNotNull
+        Layer(
+          flagged.join(f, col("ein") === col("f_ein") && col("year") === col("f_year"),
+            "left"),
+          Seq(
+            "injected_990" -> inject,
+            "total_revenue" -> coalesce(col("total_revenue"), col("f_revenue")),
+            "total_expenses" -> coalesce(col("total_expenses"), col("f_expenses")),
+            "total_assets" -> coalesce(col("total_assets"), col("f_assets")),
+            "net_assets" -> coalesce(col("net_assets"), col("f_net")),
+            "accounting_std" -> when(inject, "irs990").otherwise(col("accounting_std"))),
+          drop = Seq("f_ein", "f_year", "f_revenue", "f_expenses", "f_assets", "f_net"))
     }
 
     // likely-closed: no enrollment and no financials in the 2 most recent
     // dataset years. The dataset max year joins in as a broadcast scalar —
     // a global window (partitionBy nothing) would serialize the panel
-    // through one task at scale.
-    val bounds = injected.agg(max(col("year")).as("max_year"))
+    // through one task at scale. It is taken over the unioned years: the
+    // left joins above keep every row, so the year set is the same, and
+    // the scalar's plan stays clear of the joins.
+    val bounds = unioned.agg(max(col("year")).as("max_year"))
     val w2 = Window.partitionBy("unitid")
     val recentActivity = max(
       when(col("year") >= col("max_year") - 1 &&
         (col("enrollment").isNotNull || col("total_revenue").isNotNull), 1)
         .otherwise(0)).over(w2)
-    val withClosed = injected.crossJoin(broadcast(bounds))
-      .withColumn("likely_closed", recentActivity === 0)
-      .drop("max_year")
-
-    // trend windows
+    // trend windows, in the same layer as the closed flag
     val w = Window.partitionBy("unitid").orderBy("year")
-    withClosed
-      .withColumn("prior_enrollment", lag(col("enrollment"), 1).over(w))
-      .withColumn("prior_revenue", lag(col("total_revenue"), 1).over(w))
-      .withColumn("prior_net_assets", lag(col("net_assets"), 1).over(w))
-      .withColumn("prior_retention", lag(col("retention"), 1).over(w))
-      .withColumn("gap", col("year") - lag(col("year"), 1).over(w))
-      .withColumn("enrollment_cagr",
-        Scoring.cagr(col("enrollment"), col("prior_enrollment"), col("gap")))
-      .withColumn("revenue_cagr",
-        Scoring.cagr(col("total_revenue"), col("prior_revenue"), col("gap")))
-      .withColumn("net_asset_trend",
-        Scoring.piecewiseTrend(col("net_assets"), col("prior_net_assets"), col("gap")))
-      .withColumn("retention_delta",
+    val priors = Layer(injected.crossJoin(broadcast(bounds)), Seq(
+      "likely_closed" -> (recentActivity === 0),
+      "prior_enrollment" -> lag(col("enrollment"), 1).over(w),
+      "prior_revenue" -> lag(col("total_revenue"), 1).over(w),
+      "prior_net_assets" -> lag(col("net_assets"), 1).over(w),
+      "prior_retention" -> lag(col("retention"), 1).over(w),
+      "gap" -> (col("year") - lag(col("year"), 1).over(w))),
+      drop = Seq("max_year"))
+    Layer(priors, Seq(
+      "enrollment_cagr" ->
+        Scoring.cagr(col("enrollment"), col("prior_enrollment"), col("gap")),
+      "revenue_cagr" ->
+        Scoring.cagr(col("total_revenue"), col("prior_revenue"), col("gap")),
+      "net_asset_trend" ->
+        Scoring.piecewiseTrend(col("net_assets"), col("prior_net_assets"), col("gap")),
+      "retention_delta" ->
         when(col("prior_retention").isNull || col("gap").isNull || col("gap") <= 0,
           lit(null))
-          .otherwise((col("retention") - col("prior_retention")) / col("gap")))
+          .otherwise((col("retention") - col("prior_retention")) / col("gap"))))
   }
 
   /** Small-shrinking-school cliff multiplier (F12): sizeF from enrollment
@@ -260,13 +260,10 @@ object Ipeds {
   /** Score the panel; likely-closed units are flagged, not scored
     * (`:1435-1440`). */
   def score(panel: DataFrame): DataFrame = {
-    val scored = Engine.score(panel, config)
-    scored
-      .withColumn("composite_score",
-        when(col("likely_closed"), lit(null)).otherwise(col("composite_score")))
-      .withColumn("final_score",
-        when(col("likely_closed"), lit(null)).otherwise(col("final_score")))
-      .withColumn("risk_category",
-        when(col("likely_closed"), "Likely Closed").otherwise(col("risk_category")))
+    val closed = col("likely_closed")
+    Layer(Engine.score(panel, config), Seq(
+      "composite_score" -> when(closed, lit(null)).otherwise(col("composite_score")),
+      "final_score" -> when(closed, lit(null)).otherwise(col("final_score")),
+      "risk_category" -> when(closed, "Likely Closed").otherwise(col("risk_category"))))
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Layer
 
 /** The reference's merge semantics, relationalized:
   *
@@ -25,16 +26,13 @@ object Merge {
     * update columns absent from master are appended. */
   def integrate(master: DataFrame, updates: DataFrame, key: String,
                 cols: Seq[String]): DataFrame = {
-    val upd = cols.foldLeft(updates.select((key +: cols).map(col): _*)) {
-      (d, c) => d.withColumnRenamed(c, s"__u_$c")
-    }
-    val joined = master.join(upd, Seq(key), "left")
-    val merged = cols.foldLeft(joined) { (d, c) =>
-      if (master.columns.contains(c))
-        d.withColumn(c, coalesce(col(s"__u_$c"), col(c)))
-      else d.withColumnRenamed(s"__u_$c", c)
-    }
-    merged.drop(cols.filter(master.columns.contains).map(c => s"__u_$c"): _*)
+    val upd = updates.select(col(key) +: cols.map(c => col(c).as(s"__u_$c")): _*)
+    val inMaster = master.columns.toSet
+    Layer(master.join(upd, Seq(key), "left"),
+      cols.map { c =>
+        c -> (if (inMaster(c)) coalesce(col(s"__u_$c"), col(c)) else col(s"__u_$c"))
+      },
+      drop = cols.map(c => s"__u_$c"))
   }
 
   /** Merge `updates(key, value)` into `master(key, value)`, taking the new
@@ -44,18 +42,15 @@ object Merge {
   def updateIfBetter(master: DataFrame, updates: DataFrame, key: String,
                      valueCol: String,
                      better: (Column, Column) => Column): DataFrame = {
-    val upd = updates.withColumnRenamed(valueCol, "__new")
-    master.withColumnRenamed(valueCol, "__old")
-      .join(upd, Seq(key), "left")
-      .withColumn("take_new",
-        col("__new").isNotNull &&
-          (col("__old").isNull || better(col("__new"), col("__old"))))
-      .withColumn(valueCol, when(col("take_new"), col("__new")).otherwise(col("__old")))
-      .withColumn("action",
-        when(col("take_new"), "updated").otherwise("kept"))
-      .withColumnRenamed("__old", "old_value")
-      .withColumnRenamed("__new", "new_value")
-      .drop("take_new")
+    val joined = master.withColumnRenamed(valueCol, "old_value")
+      .join(updates.withColumnRenamed(valueCol, "new_value"), Seq(key), "left")
+    val decided = Layer(joined, Seq("take_new" ->
+      (col("new_value").isNotNull &&
+        (col("old_value").isNull || better(col("new_value"), col("old_value"))))))
+    Layer(decided, Seq(
+      valueCol -> when(col("take_new"), col("new_value")).otherwise(col("old_value")),
+      "action" -> when(col("take_new"), "updated").otherwise("kept")),
+      drop = Seq("take_new"))
   }
 
   /** Incremental maintenance of a grouped (count, sums...) view under a

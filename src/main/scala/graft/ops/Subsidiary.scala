@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Layer
 
 /** J3: grouped self-comparison — parent/subsidiary balance-sheet
   * contamination detection (reference `detect_subsidiaries`,
@@ -25,15 +26,17 @@ object Subsidiary {
              tol: Double = 0.01): DataFrame = {
     val w = Window.partitionBy(groupKey)
       .orderBy(col(rankMetric).desc, col(idCol).asc)
-    df.withColumn("rn", row_number().over(w))
-      .withColumn("parent_id", first(col(idCol)).over(w))
-      .withColumn("parent_metric", first(col(compareMetric)).over(w))
-      .withColumn("is_parent", col("rn") === 1)
-      .withColumn("is_subsidiary",
-        col("rn") > 1 && col(compareMetric).isNotNull &&
+    val ranked = Layer(df, Seq(
+      "rn" -> row_number().over(w),
+      "parent_id" -> first(col(idCol)).over(w),
+      "parent_metric" -> first(col(compareMetric)).over(w)))
+    Layer(ranked, Seq(
+      "is_parent" -> (col("rn") === 1),
+      "is_subsidiary" ->
+        (col("rn") > 1 && col(compareMetric).isNotNull &&
           col("parent_metric").isNotNull && abs(col("parent_metric")) > 0d &&
           abs(col(compareMetric) - col("parent_metric"))
-            <= lit(tol) * abs(col("parent_metric")))
-      .drop("rn")
+            <= lit(tol) * abs(col("parent_metric")))),
+      drop = Seq("rn"))
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
-import graft.ingest.Ingest
 import graft.model.Form990
 
 /** Golden-value tests of the 990 engine on hand-built fixture CSVs
@@ -11,53 +8,9 @@ import graft.model.Form990
   * documented thresholds. */
 class Form990Spec extends SparkSuite with org.scalactic.Tolerance {
 
-  private lazy val dir = Files.createTempDirectory("graft990").toFile.getAbsolutePath
-
-  private def writeCsv(name: String, header: String, rows: Seq[String]): String = {
-    val p = s"$dir/$name"
-    Files.writeString(java.nio.file.Paths.get(p), (header +: rows).mkString("\n"))
-    p
-  }
-
   private lazy val scored: DataFrame = {
-    val stdHeader = "EIN,tax_pd,totrevenue,totprgmrevnue,totcntrbgfts,invstmntinc," +
-      "totfuncexpns,compnsatncurrofcr,othrsalwages,pensionplancontrb,othremplyeebenef," +
-      "payrolltx,profndraising,totassetsend,totliabend,totnetassetend," +
-      "unrstrctnetasstsend,nonintcashend,svngstempinvend,accntsrcvblend," +
-      "accntspayableend,deferedrevnuend,secrdmrtgsend,unsecurednotesend," +
-      "lndbldgsequipend,paybletoffcrsend,currfrmrcvblend,noemplyeesw3cnt," +
-      "ceaseoperationscd,sellorexchcd"
-    val std = writeCsv("std.csv", stdHeader, Seq(
-      // E1 2022: equity ratio 150000/1000000 = 0.15 -> golden 0.5
-      "0001111,202212,1000000,600000,300000,50000,950000,100000,300000,20000,30000,40000,10000," +
-        "1000000,850000,150000,100000,200000,100000,50000,80000,20000,100000,50000,400000,0,0,25,N,N",
-      // E1 2023: revenue cagr (1100000/1000000)-1 = 0.10 -> trend ind 0.0
-      "0001111,202312,1100000,650000,350000,60000,1000000,110000,320000,22000,33000,44000,11000," +
-        "1100000,930000,170000,120000,200000,100000,60000,90000,25000,100000,50000,420000,0,0,26,N,N",
-      // E2 2022: positive net assets
-      "0002222,202212,500000,100000,350000,20000,520000,50000,150000,5000,10000,15000,40000," +
-        "400000,390000,10000,5000,20000,5000,10000,60000,30000,150000,80000,100000,15000,5000,12,N,N",
-      // E2 2023: revenue collapse -60% + net assets crossed negative + ceased
-      "0002222,202312,200000,40000,140000,5000,380000,40000,120000,4000,8000,12000,35000," +
-        "300000,350000,-50000,-60000,5000,1000,5000,70000,35000,140000,90000,90000,20000,8000,8,Y,N",
-      // E3: single year, no trend indicators
-      "0003333,202312,750000,400000,250000,30000,700000,80000,200000,15000,20000,30000,8000," +
-        "900000,500000,400000,350000,150000,120000,40000,50000,10000,80000,30000,300000,0,0,18,N,N"))
-    val ez = writeCsv("ez.csv",
-      "EIN,taxpd,totrevnue,prgmservrev,totcntrbs,othrinvstinc,totexpns,totassetsend," +
-        "totliabend,totnetassetsend,contractioncd",
-      Seq(
-        // E4: sparse EZ filing -> too few indicators, gated to NULL
-        "0004444,202312,100000,,,,90000,,,,N",
-        // duplicate of E1 2023 -> richer STD filing must win
-        "0001111,202312,999999,,,,999999,,,,N"))
-    val pf = writeCsv("pf.csv",
-      "EIN,TAX_PRD,TOTRCPTPERBKS,GRSCONTRGIFTS,TOTEXPNSPBKS,TOTASSETSEND,TOTLIABEND," +
-        "TFUNDNWORTH,OTHRCASHAMT,CONTRACTNCD",
-      Seq("0005555,202312,80000,60000,70000,200000,50000,150000,30000,N"))
-    Form990.scoreFilings(
-      Ingest.readCsv(spark, std), Ingest.readCsv(spark, ez), Ingest.readCsv(spark, pf))
-      .cache()
+    val (std, ez, pf) = ScoringFixtures.form990Filings(spark)
+    Form990.scoreFilings(std, ez, pf).cache()
   }
 
   private def row(ein: String, year: Int) =

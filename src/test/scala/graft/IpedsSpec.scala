@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
-import graft.ingest.Ingest
 import graft.model.Ipeds
 
 /** IPEDS v5 engine fixtures: wide year-prefixed headers through the
@@ -12,97 +9,7 @@ import graft.model.Ipeds
   * and floors. */
 class IpedsSpec extends SparkSuite with org.scalactic.Tolerance {
 
-  private lazy val dir = Files.createTempDirectory("graftipeds").toFile.getAbsolutePath
-
-  private def writeYear(name: String, yearTag: String, rows: Seq[String]): String = {
-    val header = Seq(
-      "unitid",
-      s"institution name (HD$yearTag)",
-      "Employer Identification Number",
-      s"DRVEF$yearTag.Total  enrollment",
-      s"DRVEF$yearTag.Full-time enrollment",
-      s"EF${yearTag}D.Full-time retention rate",
-      s"DRVGR$yearTag.Graduation rate, total cohort",
-      s"DRVADM$yearTag.Percent admitted - total",
-      s"DRVEF$yearTag.Student-to-faculty ratio",
-      s"F${yearTag}_F2.Total assets",
-      s"F${yearTag}_F2.Total liabilities",
-      s"F${yearTag}_F2.Total net assets",
-      s"F${yearTag}_F2.Total revenues and investment return",
-      s"F${yearTag}_F2.Total expenses",
-      s"F${yearTag}_F1A.Total assets",
-      s"F${yearTag}_F1A.Net position",
-      s"F${yearTag}_F1A.Total all revenues",
-      s"F${yearTag}_F1A.Total expenses",
-      s"F${yearTag}_F3.Total assets",
-      s"F${yearTag}_F3.Total equity",
-      s"F${yearTag}_F3.Total revenues and investment return",
-      s"F${yearTag}_F3.Total expenses")
-      // IPEDS labels contain commas ("Graduation rate, total cohort") —
-      // they must be quoted or the header has more fields than the rows
-      .map(h => if (h.contains(",")) "\"" + h + "\"" else h)
-      .mkString(",")
-    val p = s"$dir/$name"
-    Files.writeString(java.nio.file.Paths.get(p), (header +: rows).mkString("\n"))
-    p
-  }
-
-  /** Build a 22-field row positionally (hand-counting commas in wide CSV
-    * fixtures is how the first version of this spec broke). */
-  private def r(unitid: String, name: String, ein: String,
-                enroll: String = "", ft: String = "", ret: String = "",
-                grad: String = "", admit: String = "", sf: String = "",
-                f2: Seq[String] = Seq.fill(5)(""),
-                f1a: Seq[String] = Seq.fill(4)(""),
-                f3: Seq[String] = Seq.fill(4)("")): String = {
-    require(f2.size == 5 && f1a.size == 4 && f3.size == 4)
-    (Seq(unitid, name, ein, enroll, ft, ret, grad, admit, sf) ++ f2 ++ f1a ++ f3)
-      .mkString(",")
-  }
-
-  // U1: healthy FASB; U2: GASB; U3: small shrinking FASB school (cliff +
-  // enrollment floor + revenue collapse floor); U4/U5: subsidiary pair
-  // sharing EIN 77001 with assets within 1%; U6: no financials and no
-  // enrollment in either recent year -> likely closed; U7: no IPEDS
-  // financials, 990-injected.
-  private lazy val scored: DataFrame = {
-    val y2023 = writeYear("ipeds23.csv", "2223", Seq(
-      r("U1", "Alpha College", "11001", "5000", "4500", "90", "75", "35", "11",
-        f2 = Seq("2000000", "600000", "1400000", "900000", "850000")),
-      r("U2", "Beta State", "22001", "12000", "9000", "82", "60", "70", "16",
-        f1a = Seq("5000000", "2500000", "2000000", "1900000")),
-      r("U3", "Gamma Academy", "33001", "450", "400", "70", "45", "85", "14",
-        f2 = Seq("300000", "200000", "100000", "200000", "210000")),
-      r("U4", "Delta Univ", "77001", "8000", "7000", "85", "65", "50", "13",
-        f2 = Seq("4000000", "1500000", "2500000", "1500000", "1400000")),
-      r("U5", "Delta Univ - Online", "77001", "900", "800", "75", "50", "80", "20",
-        f2 = Seq("3970000", "1480000", "2490000", "400000", "390000")),
-      r("U6", "Omega Institute", "66001", ret = "60", grad = "30"),
-      r("U7", "Sigma Seminary", "55001", "300", "250", "78", "55", "60", "10")))
-    val y2024 = writeYear("ipeds24.csv", "2324", Seq(
-      r("U1", "Alpha College", "11001", "5100", "4600", "91", "76", "34", "11",
-        f2 = Seq("2100000", "620000", "1480000", "950000", "880000")),
-      r("U2", "Beta State", "22001", "11800", "8900", "81", "61", "71", "16",
-        f1a = Seq("5100000", "2550000", "2050000", "1950000")),
-      // U3: enrollment 450 -> 350 (-22%), revenue 200000 -> 80000 (-60%)
-      r("U3", "Gamma Academy", "33001", "350", "300", "65", "40", "88", "15",
-        f2 = Seq("250000", "190000", "60000", "80000", "150000")),
-      r("U4", "Delta Univ", "77001", "8100", "7100", "86", "66", "49", "13",
-        f2 = Seq("4100000", "1520000", "2580000", "1550000", "1450000")),
-      r("U5", "Delta Univ - Online", "77001", "950", "850", "76", "51", "79", "19",
-        f2 = Seq("4080000", "1510000", "2570000", "420000", "400000")),
-      r("U6", "Omega Institute", "66001"),
-      r("U7", "Sigma Seminary", "55001", "310", "260", "79", "56", "59", "10")))
-    import spark.implicits._
-    val f990 = Seq(
-      ("55001", 2024, 120000.0, 110000.0, 500000.0, 300000.0))
-      .toDF("ein", "year", "total_revenue", "total_expenses", "total_assets", "net_assets")
-    val panel = Ipeds.buildPanel(Seq(
-      Ipeds.standardizeYear(Ingest.readCsv(spark, y2023), 2023),
-      Ipeds.standardizeYear(Ingest.readCsv(spark, y2024), 2024)),
-      Some(f990))
-    Ipeds.score(panel).cache()
-  }
+  private lazy val scored: DataFrame = Ipeds.score(ScoringFixtures.ipedsPanel(spark)).cache()
 
   private def row(u: String, y: Int) =
     scored.filter(s"unitid = '$u' AND year = $y").collect().head

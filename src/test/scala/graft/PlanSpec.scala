@@ -530,4 +530,23 @@ class PlanSpec extends SparkSuite {
       }
     }
   }
+
+  test("scoring stages plan one projection per layer, not one per column") {
+    // each withColumn stacks a Project and re-analyzes the plan below it;
+    // a stage built from layers holds a few, so count them on the
+    // analyzed plan
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    def projects(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case p: Project => p }.size
+    val (std, ez, pf) = ScoringFixtures.form990Filings(spark)
+    val f990 = projects(graft.model.Form990.scoreFilings(std, ez, pf))
+    val ipeds = projects(graft.model.Ipeds.score(ScoringFixtures.ipedsPanel(spark)))
+    // 990: 3 filing standardizations, the panel, the trends and the
+    // engine's 6 layers plan 23 (184 as withColumn folds)
+    assert(f990 <= 30, s"Form990.scoreFilings plans $f990 projections")
+    // IPEDS: 2 year standardizations, subsidiary detection, the panel and
+    // the engine plan 46 (341 as folds); the analyzed plan is a tree, so
+    // the standardized years count once per branch that reads them
+    assert(ipeds <= 55, s"Ipeds.score plans $ipeds projections")
+  }
 }

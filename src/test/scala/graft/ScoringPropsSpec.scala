@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.core.Scoring
+import graft.core.{Engine, Scoring}
+import graft.core.Engine.ScoringConfig
+import graft.model.{Form990, Ipeds}
 
 /** Property-based checks (scalacheck) for the scoring kernel, evaluated in
   * one Spark batch per property (a generated input column, the kernel
@@ -103,4 +107,88 @@ class ScoringPropsSpec extends SparkSuite {
         if (g) r == math.max(s, f) else r == s
     })
   }
+
+  /** `Engine.score` as it was built before its layers: one `withColumn` per
+    * indicator, domain and output, each over the raw expression inlined.
+    * The layered engine must reproduce it bit for bit. */
+  private def foldReference(panel: DataFrame, cfg: ScoringConfig): DataFrame = {
+    val withInds = cfg.indicators.foldLeft(panel) { (df, i) =>
+      df.withColumn(Engine.indCol(i.name), Scoring.interpolate(i.raw, i.healthy, i.distress))
+    }
+    val withDomains = cfg.domains.foldLeft(withInds) { (df, d) =>
+      val base = Scoring.weightedRenormMean(cfg.indicators.filter(_.domain == d.name)
+        .map(i => col(Engine.indCol(i.name)) -> i.weight))
+      val boosted = cfg.domainMultipliers.get(d.name) match {
+        case Some(mult) =>
+          when(base.isNull, lit(null)).otherwise(least(lit(100.0), base * mult))
+        case None => base
+      }
+      df.withColumn(Engine.domCol(d.name), boosted)
+    }
+    val composite = Scoring.weightedRenormMean(
+      cfg.domains.map(d => col(Engine.domCol(d.name)) -> d.weight), scale = 1.0)
+    val indCols = cfg.indicators.map(i => col(Engine.indCol(i.name)))
+    val floored = cfg.floors.foldLeft(col("composite_score")) { (acc, f) =>
+      Scoring.applyFloor(acc, f.guard, f.floor)
+    }
+    withDomains
+      .withColumn("composite_score",
+        Scoring.minIndicatorsGate(composite, indCols, cfg.minIndicators))
+      .withColumn("n_indicators", Scoring.nonNullCount(indCols))
+      .withColumn("final_score", floored)
+      .withColumn("risk_category", Scoring.categorize(col("final_score")))
+  }
+
+  /** Every numeric column the 990 and IPEDS configs read. */
+  private val panelDoubles = Seq("comp_officers", "other_salaries",
+    "pension_contrib", "other_benefits", "payroll_tax", "cash", "savings",
+    "receivables", "payables", "total_expenses", "deferred_revenue",
+    "total_revenue", "net_assets", "total_assets", "total_liabilities",
+    "secured_mortgages", "unsecured_notes", "fundraising_fees", "contributions",
+    "program_revenue", "investment_income", "officer_loans",
+    "officer_receivables", "revenue_cagr", "net_asset_trend",
+    "expense_revenue_gap", "employee_cagr", "enrollment_cagr", "enrollment",
+    "retention", "retention_delta", "graduation_rate", "admit_rate",
+    "student_faculty")
+
+  private val panelSchema = StructType(StructField("id", LongType) +:
+    (panelDoubles.map(StructField(_, DoubleType)) ++ Seq(
+      StructField("ceased_operations", StringType),
+      StructField("accounting_std", StringType))))
+
+  /** NULL and NaN cells, zeros (the safe divides), small ratios and growth
+    * rates around the thresholds, and magnitudes like dollar amounts. */
+  private val cell: Gen[Any] = Gen.frequency(
+    3 -> Gen.const(null), 1 -> Gen.const(Double.NaN), 1 -> Gen.const(0.0),
+    3 -> Gen.chooseNum(-1.5, 1.5), 2 -> Gen.chooseNum(0.0, 3000.0),
+    2 -> Gen.chooseNum(-2e6, 2e6))
+
+  private val panelRow: Gen[Seq[Any]] = for {
+    cells <- Gen.listOfN(panelDoubles.size, cell)
+    ceased <- Gen.oneOf(null, "Y", "N", " yes ", "1", "x")
+    std <- Gen.oneOf(null, "none", "fasb", "gasb")
+  } yield cells ++ Seq(ceased, std)
+
+  private def randomPanel(rows: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case (r, i) => Row.fromSeq(i.toLong +: r) }, 2), panelSchema)
+
+  /** Rows by id, doubles as their bits (NaN == NaN, 0.0 != -0.0). */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("id").collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d)
+      case v => v
+    })
+
+  for ((name, cfg) <- Seq("Form990" -> Form990.config, "Ipeds" -> Ipeds.config))
+    test(s"layered Engine.score equals the withColumn fold exactly ($name config)") {
+      val few = params.withMinSuccessfulTests(8)
+      val res = SCTest.check(few, Prop.forAllNoShrink(Gen.listOfN(40, panelRow)) { rows =>
+        val panel = randomPanel(rows)
+        val got = Engine.score(panel, cfg)
+        val want = foldReference(panel, cfg)
+        got.schema == want.schema && bits(got) == bits(want)
+      })
+      assert(res.passed, res.status.toString)
+    }
 }
