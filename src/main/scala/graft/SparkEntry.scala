@@ -22,7 +22,6 @@ object SparkEntry {
     SimilarityQueries,
     CorpusQueries,
     SamplingQueries,
-    TokenizerQueries,
   )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

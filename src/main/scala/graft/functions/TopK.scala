@@ -333,7 +333,10 @@ object TopK {
 
   /** [[topKLong]] with one inert BIGINT payload carried per entry (never
     * compared) — the single-aggregation top-k cut for callers that need a
-    * passenger column back out. */
+    * passenger column back out. A NULL payload comes out as 0 (the
+    * `payload` field is non-nullable), so it cannot be told apart from a
+    * real 0: callers whose payload may be NULL and may be 0 must carry a
+    * NULL flag in the payload or join it back. */
   def topKLongPayload(value: Column, id: Column, payload: Column,
                       k: Int): Column = {
     val shim = org.apache.spark.sql.graftshim.ColumnInterop

@@ -90,11 +90,23 @@ object Form990 {
     "secured_mortgages", "unsecured_notes", "fixed_assets", "officer_loans",
     "officer_receivables", "employee_count")
 
+  /** Rename targets every extract must carry: without their source column
+    * each row would get a NULL `ein` or `year`. */
+  private val keyTargets = Set("ein_raw", "tax_period")
+
   /** Standardize one filing-type CSV onto the long panel schema: one
     * projection over the renamed columns. Numeric fields the filing type
-    * lacks come back as NULL doubles after the ones it has. */
+    * lacks come back as NULL doubles after the ones it has; a missing key
+    * source column (`EIN`, the tax period) throws, naming it. */
   def standardizeFiling(raw: DataFrame, renameMap: Seq[(String, String)],
                         filingType: String): DataFrame = {
+    val headers = raw.columns
+    val missingKeys = renameMap.collect {
+      case (rawCol, std) if keyTargets(std) && !headers.contains(rawCol) => rawCol
+    }
+    require(missingKeys.isEmpty,
+      s"$filingType extract has no ${missingKeys.mkString(", ")} column; " +
+        s"its columns are ${headers.mkString(", ")}")
     val mapped = Ingest.standardize(raw, renameMap)
     val present = mapped.columns.toSet
     val numeric = numericCols.map { c =>

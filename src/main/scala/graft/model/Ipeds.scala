@@ -70,8 +70,13 @@ object Ipeds {
     "f3_equity", "f3_revenue", "f3_expenses")
 
   /** One wide per-year CSV -> standardized rows with detected accounting
-    * standard and cross-section coalesced metrics. */
+    * standard and cross-section coalesced metrics. Throws when no header
+    * resolves to `unitid`, since every row would get a NULL key. */
   def standardizeYear(raw: DataFrame, year: Int): DataFrame = {
+    val headers = raw.columns.toSeq
+    require(Ingest.resolve(headers, fieldSpecs.filter(_.std == "unitid")).nonEmpty,
+      s"IPEDS $year extract has no unitid column; " +
+        s"its columns are ${headers.mkString(", ")}")
     val resolved = Ingest.selectResolved(raw, fieldSpecs)
     val typed = Ingest.coerceNumeric(resolved, numericCols)
     val totalAssets = coalesce(col("f2_assets"), col("f1a_assets"), col("f3_assets"))

@@ -4,14 +4,14 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** REAL baseline JPEG (ITU-T T.81) pixel decode — completes the
-  * real-pixel triple (GIF/LZW, PNG/inflate+filters, JPEG/Huffman+IDCT)
-  * for the image-dedup pipeline. Pure JVM, implemented from the public
-  * spec: marker walk, DQT/DHT/SOF0/DRI/SOS parsing, canonical Huffman
-  * decode with byte-stuffing removal and restart-marker handling,
-  * run-length AC decode, dequantization in zigzag order, naive
-  * double-precision IDCT (exact for the fixture family; the AAN fast
-  * transform is the production swap — same interface, per-block cost
+/** REAL baseline JPEG (ITU-T T.81) pixel decode — the second
+  * real-pixel decoder (next to GIF/LZW) for the image-dedup pipeline.
+  * Pure JVM, implemented from the public spec: marker walk,
+  * DQT/DHT/SOF0/DRI/SOS parsing, canonical Huffman decode with
+  * byte-stuffing removal and restart-marker handling, run-length AC
+  * decode, dequantization in zigzag order, naive double-precision IDCT
+  * (exact for the fixture family; the AAN fast transform is the
+  * production swap — same interface, per-block cost
   * only), level shift + clamp, edge-block crop.
   *
   * Supported: baseline sequential DCT, 8-bit, 1..4 components with all
@@ -20,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * Progressive scans, subsampling, arithmetic coding -> None (the same
   * honest-refusal contract as the other format parsers).
   *
-  * Scale shape: decoding runs per-partition exactly like the GIF/PNG
-  * paths — payload bytes are parsed where they sit; only dims, sums and
+  * Scale shape: decoding runs per-partition exactly like the GIF
+  * path — payload bytes are parsed where they sit; only dims, sums and
   * dHash bands leave the executor.
   */
 object Jpeg {
@@ -287,7 +287,7 @@ object Jpeg {
       gray_sum: Long,
       p0: Int, p1: Int, p2: Int, p3: Int)
 
-  /** Decode + dHash per partition (the same shape as [[Png.phash]]). */
+  /** Decode + dHash per partition (the same shape as [[ImageHash.phash]]). */
   def phash(spark: SparkSession, media: DataFrame): Dataset[JpegRecord] = {
     import spark.implicits._
     media.as[Multimodal.MediaRecord].mapPartitions { it =>

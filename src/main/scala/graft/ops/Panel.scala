@@ -30,7 +30,7 @@ object Panel {
     // hash-partition on the entity alone: HashPartitioning(entity)
     // satisfies the (entity, year) aggregation's clustering AND the
     // entity-keyed windows downstream, so the whole panel pipeline runs on
-    // one exchange instead of three (see PLANS.md)
+    // one exchange instead of three
     o.repartition(col("o_custkey"))
       .groupBy(
         col("o_custkey").as("entity_id"),

@@ -253,27 +253,6 @@ object SimilarityQueries extends QueryGroup {
       .toDF()
   }
 
-  /** REAL PNG pixel decode under an oracle gate ([[graft.ops.Png]]):
-    * every doc_id < 600 is encoded as a PNG by the independent fixture
-    * encoder ([[graft.ops.PngFixtures]] — own filtered-scanline writer +
-    * Deflater zlib stream, per-row filter type cycling through ALL FIVE
-    * predictors, gray/RGB/RGBA color types by doc_id % 3), then decoded
-    * back by the real chunk walk + CRC verify + Inflater + un-filter
-    * chain and dHashed. The SQL oracle recomputes every pixel, cell sum,
-    * and band bit from the channel formulas without touching a byte —
-    * agreement pins signature/CRC/inflate/all-five-filters/luma/dHash
-    * end to end. Corpus bounded (doc_id < 600) only to bound the
-    * oracle's per-pixel replay; the Spark path is per-partition. */
-  private def mmPng(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 600).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.PngFixtures.synthPng(id), "image"))
-      .toDF()
-    graft.ops.Png.phash(s, media).toDF().orderBy("doc_id")
-  }
-
   /** REAL baseline JPEG pixel decode under an oracle gate
     * ([[graft.ops.Jpeg]]): block-constant grayscale fixtures from the
     * independent encoder (own bit-writer, canonical-code assignment,
@@ -895,31 +874,6 @@ object SimilarityQueries extends QueryGroup {
       .orderBy("source_a", "source_b")
   }
 
-  /** EXIF metadata extraction under the oracle gate ([[graft.ops.Exif]]):
-    * every doc is a REAL JPEG ([[graft.ops.JpegFixtures]] stream) with an
-    * APP1 EXIF block spliced in by the INDEPENDENT fixture encoder —
-    * TIFF byte order alternates by doc_id, odd ids bury the APP1 behind
-    * another segment (so only a real marker WALK finds it), strings are
-    * offset-stored, scalars inline, exposure an offset RATIONAL, plus an
-    * unknown tag mid-IFD proving generic skip. The from-scratch TIFF IFD
-    * walker parses it all back per partition (bytes never shuffle), and
-    * the oracle recomputes every field from the doc_id formulas without
-    * touching a byte. Typed capture metadata is what multimodal curation
-    * filters on: orientation-aware dedup, capture-time windows, camera
-    * strata. */
-  private def mmExif(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .mapPartitions(_.flatMap(id => graft.ops.Exif.exifInfo(
-        id, graft.ops.ExifFixtures.synthJpegWithExif(id))))
-      .toDF()
-      .select(col("docId").as("doc_id"), col("byteOrder").as("byte_order"),
-        col("orientation"), col("make"), col("model"),
-        col("dateTime").as("datetime"), col("pxX").as("px_x"),
-        col("pxY").as("px_y"), col("iso"), col("exposureDen").as("exposure_den"))
-      .orderBy("doc_id")
-  }
-
   /** Hyperplane-LSH tuning report — the semantic twin of `q_lsh_curve`:
     * for every vector pair in a DETERMINISTIC sample (vec_id % 5 — the
     * curve is a property of the geometry, not the corpus size, so a
@@ -954,7 +908,6 @@ object SimilarityQueries extends QueryGroup {
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_sim_curve" -> simCurve,
-    "q_mm_exif" -> mmExif,
     "q_hash_embed" -> hashEmbed,
     "q_hash_embed_sim" -> hashEmbedSim,
     "q_rank_fusion" -> rankFusion,
@@ -978,7 +931,6 @@ object SimilarityQueries extends QueryGroup {
     "q_mm_features" -> mmFeatures,
     "q_mm_frames" -> mmFrames,
     "q_mm_gif" -> mmGif,
-    "q_mm_png" -> mmPng,
     "q_mm_jpeg_px" -> mmJpegPx,
     "q_mm_video_px" -> mmVideoPx,
     "q_mm_scene_cuts" -> mmSceneCuts,
@@ -1210,22 +1162,6 @@ object SimilarityQueries extends QueryGroup {
       |  FROM t)""".stripMargin
 
   override def oracle: Map[String, String] = Map(
-    // every EXIF field replayed from the fixture's doc_id formulas —
-    // a single wrong byte anywhere in the IFD walk fails the hash
-    "q_mm_exif" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS byte_order,
-        |  CAST(doc_id % 8 + 1 AS INTEGER) AS orientation,
-        |  'Maker' || CAST(doc_id % 5 AS VARCHAR) AS make,
-        |  'Cam' || CAST(doc_id % 7 AS VARCHAR) AS model,
-        |  '2026:08:' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
-        |    ' 10:' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') || ':00'
-        |    AS datetime,
-        |  CAST(64 + doc_id % 100 AS INTEGER) AS px_x,
-        |  CAST(48 + doc_id % 80 AS INTEGER) AS px_y,
-        |  CAST(100 * (doc_id % 4 + 1) AS INTEGER) AS iso,
-        |  CAST(doc_id % 500 + 1 AS INTEGER) AS exposure_den
-        |FROM documents ORDER BY doc_id""".stripMargin,
     "q_hash_embed" ->
       s"""WITH $hashTokSql
          |SELECT doc_id, CAST(h % $HashDim AS INTEGER) AS dim,
@@ -1696,49 +1632,6 @@ object SimilarityQueries extends QueryGroup {
         |  CAST((doc_id + 7 * i) % 48 + 1 AS INTEGER) AS frame_h,
         |  CAST((doc_id + i) % 500 AS INTEGER) AS delay_cs
         |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // the whole PNG pipeline (chunk walk -> CRC -> inflate -> un-filter
-    // x5 -> luma -> 9x8 cells -> dHash bands) replayed from the channel
-    // formulas without parsing a byte
-    "q_mm_png" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 3 AS m,
-        |    17 + doc_id % 16 AS w, 14 + doc_id % 13 AS h
-        |  FROM documents WHERE doc_id < 600),
-        |xs AS (SELECT unnest(generate_series(0, 32)) AS x),
-        |ys AS (SELECT unnest(generate_series(0, 26)) AS y),
-        |pix AS (
-        |  SELECT doc_id, w, h, x, y,
-        |    CASE WHEN m = 0 THEN (7 * doc_id + 3 * x + 11 * y + x * y) % 256
-        |         ELSE (299 * ((doc_id + 5 * x + 2 * y) % 256)
-        |             + 587 * ((3 * doc_id + x + 7 * y) % 256)
-        |             + 114 * ((doc_id + x * y) % 256)) // 1000 END AS g
-        |  FROM d CROSS JOIN xs CROSS JOIN ys WHERE x < w AND y < h),
-        |cells AS (
-        |  SELECT doc_id, (y * 8) // h AS r, (x * 9) // w AS c,
-        |    CAST(sum(g) AS BIGINT) AS cs, COUNT(*) AS cn
-        |  FROM pix GROUP BY 1, 2, 3),
-        |bits AS (
-        |  SELECT a.doc_id, a.r * 8 + a.c AS idx,
-        |    CASE WHEN a.cs * b.cn < b.cs * a.cn THEN 1 ELSE 0 END AS bit
-        |  FROM cells a JOIN cells b
-        |    ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-        |  WHERE a.c < 8),
-        |bands AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN idx // 16 = 0 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p0,
-        |    CAST(sum(CASE WHEN idx // 16 = 1 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p1,
-        |    CAST(sum(CASE WHEN idx // 16 = 2 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p2,
-        |    CAST(sum(CASE WHEN idx // 16 = 3 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p3
-        |  FROM bits GROUP BY doc_id),
-        |gs AS (SELECT doc_id, CAST(sum(g) AS BIGINT) AS gray_sum
-        |  FROM pix GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(CASE WHEN m = 0 THEN 0 WHEN m = 1 THEN 2 ELSE 6 END AS INTEGER)
-        |    AS color_type,
-        |  CAST(w * h AS BIGINT) AS n_pixels, gray_sum, p0, p1, p2, p3
-        |FROM d JOIN gs USING (doc_id) JOIN bands USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
 
     // demuxed audio track = concatenated 01wb payloads; the 65-window
     // energy fingerprint replayed from the chunk sample formula

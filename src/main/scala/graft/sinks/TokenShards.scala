@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * PARTITIONED BY shard (bounded by one shard's row count, never a
   * global window); the binary encode runs per partition after ONE
   * repartition on the shard key — ids cross the shuffle once as arrays
-  * and the byte stream is a partition-local fold (the multimodal
-  * discipline: payload bytes never shuffle). Both sides talk to the
+  * and the byte stream is a partition-local fold (payload bytes never
+  * shuffle). Both sides talk to the
   * filesystem with the DRIVER's Hadoop configuration (serialized to
   * executors as key/value pairs), so non-default FS settings apply on
   * every task, not just the driver.

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * frame of [[graft.ops.Retrieval.maxSimRerank]] separately (candidates
   * cut, involved-token vectors, the pair join) against the shared
   * tf/scores frames, so the expensive stage is attributable instead of
-  * guessed. Throwaway measurement harness, PLANS.md discipline. */
+  * guessed. Throwaway measurement harness. */
 object AbMaxsim {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Same-JVM A/B for the OrderStats boundary-lookup rewrite: the OLD
   * full-rank-window formulation vs the NEW rankElements boundary lookup,
   * alternated in one JVM so host drift cannot masquerade as a result
-  * (PLANS.md measurement discipline). Covers the three consumer shapes:
+  * (same-JVM measurement). Covers the three consumer shapes:
   * global thresholds (winsorized), per-stratum labels (len-decile rollup),
   * and the chained labeler (RFM quintiles). */
 object AbRank {

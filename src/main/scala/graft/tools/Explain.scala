@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Print the FormattedMode physical plan of registered queries — the
-  * evidence-gathering tool behind PLANS.md. Usage:
+/** Print the FormattedMode physical plan of registered queries, to check
+  * exchanges, join strategies and pushdown before and after a change. Usage:
   * `sbt "runMain graft.tools.Explain q_zorder q_cube"` (defaults to
   * sf0.001; set SPARK_GRAFT_SF_DIR to override). */
 object Explain {

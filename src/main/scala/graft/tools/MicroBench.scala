@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.tools.MicroBench <n_reps> <query substring>...
   * Times each matching query n_reps times in one JVM (same config as
   * graft.Bench) so first-run costs (cache build, codegen) separate from
-  * steady-state cost — the split BENCH_r04 needs to attribute regressions.
+  * steady-state cost, so a regression can be attributed to one or the other.
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {

@@ -75,6 +75,18 @@ class Form990Spec extends SparkSuite with org.scalactic.Tolerance {
     assert(d(r, "ind_insider_loans").isEmpty)
   }
 
+  test("a missing EIN or tax-period column fails by name, not as NULL keys") {
+    import spark.implicits._
+    val noEin = Seq(("202312", "1000")).toDF("tax_pd", "totrevenue")
+    val e1 = intercept[IllegalArgumentException](
+      Form990.standardizeFiling(noEin, Form990.standardMap, "STD"))
+    assert(e1.getMessage.contains("no EIN column"), e1.getMessage)
+    val noPeriod = Seq(("0001111", "1000")).toDF("EIN", "TOTRCPTPERBKS")
+    val e2 = intercept[IllegalArgumentException](
+      Form990.standardizeFiling(noPeriod, Form990.pfMap, "PF"))
+    assert(e2.getMessage.contains("no TAX_PRD column"), e2.getMessage)
+  }
+
   test("weights are consistent: domain weights sum to 1, members sum to 1") {
     val cfg = Form990.config
     assert(math.abs(cfg.domains.map(_.weight).sum - 1.0) < 1e-9)

@@ -76,6 +76,14 @@ class IpedsSpec extends SparkSuite with org.scalactic.Tolerance {
     assert(Set("High", "Severe")(r.getString(r.fieldIndex("risk_category"))))
   }
 
+  test("a year extract with no unitid header fails by name, not as NULL keys") {
+    import spark.implicits._
+    val noUnitid = Seq(("Alpha College", "5000"))
+      .toDF("institution name (HD2223)", "DRVEF2223.Total  enrollment")
+    val e = intercept[IllegalArgumentException](Ipeds.standardizeYear(noUnitid, 2023))
+    assert(e.getMessage.contains("no unitid column"), e.getMessage)
+  }
+
   test("ipeds weights are consistent") {
     val cfg = Ipeds.config
     assert(math.abs(cfg.domains.map(_.weight).sum - 1.0) < 1e-9)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.FormattedMode
 
-/** Guards the scale-critical plan properties PLANS.md documents, so a
+/** Guards the plan properties that keep the queries scalable, so a
   * refactor can't silently regress them:
   *  - predicate + projection pushdown reaching the parquet scan;
   *  - broadcast (not shuffle) joins for dimension lookups;
