@@ -20,7 +20,7 @@ object SparkEntry {
     TextQueries,
     DedupQueries,
     SimilarityQueries,
-    CorpusQueries,
+    RetrievalQueries,
     SamplingQueries,
   )
 

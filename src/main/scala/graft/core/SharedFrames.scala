@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - '''sharing''': several driver queries recompute the same expensive
   *    intermediate (the shingle frame feeds `q_dedup_jaccard`,
-  *    `q_dedup_minhash` AND `q_dedup_apply`). [[cached]] builds it once per
+  *    `q_dedup_minhash` AND the cluster queries). [[cached]] builds it once per
   *    (session, key) and returns the persisted frame to every caller, so
   *    the explode+distinct+shuffle subtree runs once per run, not once per
   *    query.

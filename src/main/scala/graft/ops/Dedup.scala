@@ -127,32 +127,6 @@ object Dedup {
           (col("size_a") + col("size_b") - col("common"))).as("jaccard"))
   }
 
-  /** Incremental first-occurrence record dedup: an arriving batch of
-    * (doc_id, part_idx, record) rows is deduped against a PERSISTED
-    * first-occurrence index (the distinct records already seen) plus
-    * itself — a batch record survives iff it is absent from the index AND
-    * is the min-(doc_id, part_idx) occurrence within the batch. This is
-    * arrival-order line dedup: when batch ids follow corpus ids (the
-    * streaming-append case) it equals the full-corpus run restricted to
-    * batch docs (law-tested); per-batch cost is one batch-side min
-    * aggregation + one anti-probe of the index, never a corpus rescan.
-    *
-    * @param index 1-column (record) frame of already-seen records
-    * @return batch rows + `kept` flag
-    */
-  def incrementalFirstOccurrence(index: DataFrame, batch: DataFrame): DataFrame = {
-    val firstInBatch = batch.groupBy("record")
-      .agg(min(struct(col("doc_id"), col("part_idx"))).as("first"))
-    batch.join(firstInBatch, Seq("record"))
-      .join(index.select(col("record"), lit(true).as("in_index")),
-        Seq("record"), "left")
-      .withColumn("kept",
-        col("in_index").isNull &&
-          col("doc_id") === col("first.doc_id") &&
-          col("part_idx") === col("first.part_idx"))
-      .select("doc_id", "part_idx", "record", "kept")
-  }
-
   /** Exact pairwise Jaccard over a shingle equi-join; emits pairs with
     * jaccard >= `threshold`. */
   def jaccardPairs(sh: DataFrame, threshold: Double): DataFrame = {

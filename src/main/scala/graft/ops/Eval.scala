@@ -4,46 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Classifier-evaluation and distribution-comparison statistics in exact
-  * distributed arithmetic. */
+/** Classifier-evaluation statistics in exact distributed arithmetic. */
 object Eval {
-
-  /** Two-sample Kolmogorov–Smirnov distance between the distributions of
-    * `value` under `inA` = true/false — the distribution-shift test a
-    * pipeline runs between corpus snapshots or sources before a
-    * mixture-weight change. D = max_v |F_A(v) − F_B(v)|, computed
-    * entirely on the distinct-value frame: one aggregation to per-value
-    * counts, cumulative sums over that tiny frame, and the max gap in
-    * the INTEGER domain (|ca·n_b − cb·n_a|, denominators multiplied
-    * through) so no float comparison decides the argmax. Output: one row
-    * (n_a, n_b, d_num, at_value, d) where `at_value` is the smallest
-    * value attaining the max gap and d = d_num/(n_a·n_b). */
-  def ksDistance(df: DataFrame, value: String, inA: String): DataFrame = {
-    val g = df.groupBy(col(value).as("v"))
-      .agg(sum(when(col(inA), 1L).otherwise(0L)).as("na"),
-        sum(when(!col(inA), 1L).otherwise(0L)).as("nb"))
-    val wdw = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val c = g
-      .withColumn("ca", sum(col("na")).over(wdw))
-      .withColumn("cb", sum(col("nb")).over(wdw))
-    val tot = g.agg(sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"))
-    // DECIMAL interior: ca·n_b is count², past 2^63 at corpus scale
-    val gaps = c.crossJoin(broadcast(tot))
-      .withColumn("gap",
-        abs(col("ca").cast("decimal(38,0)") * col("n_b") -
-          col("cb").cast("decimal(38,0)") * col("n_a")))
-    val dmax = gaps.agg(max(col("gap")).as("d_num_max"))
-    gaps.crossJoin(broadcast(dmax))
-      .filter(col("gap") === col("d_num_max"))
-      .groupBy("n_a", "n_b", "d_num_max")
-      .agg(min(col("v")).as("at_value"))
-      .select(col("n_a"), col("n_b"),
-        col("d_num_max").cast("long").as("d_num"),
-        col("at_value"),
-        round(col("d_num_max").cast("double") /
-          (col("n_a").cast("double") * col("n_b").cast("double")), 6).as("d"))
-  }
 
   /** Precision/recall curve at every distinct score threshold
     * ("predict positive when score >= t"): the same collapse-to-
@@ -69,52 +31,6 @@ object Eval {
           6).as("precision"),
         round(col("tp").cast("double") / col("n_pos").cast("double"), 6)
           .as("recall"))
-  }
-
-  /** Per-group KS drift matrix: for EVERY group g, the KS distance
-    * between `value`'s distribution inside g and outside g — the drift
-    * dashboard over all sources in one pass, not one [[ksDistance]] call
-    * per source. Works on the distinct (group, value) count frame: the
-    * within-group CDF is a per-group cumulative window, the
-    * complement's CDF is the global cumulative minus it, and the max
-    * gap is decided in the integer domain per group. Output: one row
-    * per group (group, n_in, n_out, d_num, d). */
-  def ksMatrix(df: DataFrame, group: String, value: String): DataFrame = {
-    val g = df.groupBy(col(group).as("g"), col(value).as("v"))
-      .agg(count(lit(1)).as("c"))
-    // per-(v) global counts ride the same tiny frame
-    val byV = g.groupBy("v").agg(sum(col("c")).as("c_all"))
-    val globalW = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cumAll = byV.withColumn("cum_all", sum(col("c_all")).over(globalW))
-      .select("v", "cum_all")
-    val inW = Window.partitionBy("g").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = g.groupBy("g").agg(sum(col("c")).as("n_in"))
-    val totAll = g.agg(sum(col("c")).as("n_total"))
-    // every group must be scored at every distinct v (a group with no
-    // mass at v still accumulates the complement's CDF there), so the
-    // group axis crosses the tiny distinct-value axis explicitly
-    val grid = g.select("g").distinct()
-      .crossJoin(byV.select("v"))
-      .join(g, Seq("g", "v"), "left")
-      .withColumn("c", coalesce(col("c"), lit(0L)))
-    grid
-      .withColumn("cum_in", sum(col("c")).over(inW))
-      .join(broadcast(cumAll), Seq("v"))
-      .join(broadcast(tot), Seq("g"))
-      .crossJoin(broadcast(totAll))
-      .withColumn("cum_out", col("cum_all") - col("cum_in"))
-      .withColumn("n_out", col("n_total") - col("n_in"))
-      .withColumn("gap",
-        abs(col("cum_in").cast("decimal(38,0)") * col("n_out") -
-          col("cum_out").cast("decimal(38,0)") * col("n_in")))
-      .groupBy(col("g").as(group), col("n_in"), col("n_out"))
-      .agg(max(col("gap")).as("d_num_d"))
-      .select(col(group), col("n_in"), col("n_out"),
-        col("d_num_d").cast("long").as("d_num"),
-        round(col("d_num_d").cast("double") /
-          (col("n_in").cast("double") * col("n_out").cast("double")), 6).as("d"))
   }
 
   /** Rank-free exact AUC (Mann–Whitney U): `P(s_pos > s_neg) + ½·P(=)`.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CharsNospaceExpr, CharsNospaceRewrite, DotProductExpr, MisraGriesAgg, NfcExpr, NormTextExpr, NormTextRewrite, SimHash16Expr, SimHashExpr, TokenCountExpr, TokenCountRewrite, TopKAgg, WinnowExpr}
+import graft.functions.{CharsNospaceExpr, CharsNospaceRewrite, DotProductExpr, MisraGriesAgg, NormTextExpr, NormTextRewrite, SimHash16Expr, SimHashExpr, TokenCountExpr, TokenCountRewrite, TopKAgg, WinnowExpr}
 
 /** SQL-surface registration for the library's native Catalyst expressions.
   *
@@ -60,8 +60,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("heavy_hitters", "heavy_hitters(item, capacity) - Misra-Gries " +
         "frequent-items summary (bounded-memory value_counts), map-side combined"),
       { args: Seq[Expression] => GraftExtensions.buildHeavyHitters(args) }))
-    ext.injectFunction(unary("nfc",
-      "nfc(text) - Unicode NFC canonical composition", NfcExpr))
     ext.injectFunction(unary("chars_nospace",
       "chars_nospace(text) - non-whitespace codepoint count (one byte pass)",
       CharsNospaceExpr))
@@ -103,8 +101,6 @@ object GraftExtensions {
       args => CharsNospaceExpr(args.head))
     reg("norm_text", "norm_text(text) - lowercase + ws-collapse + trim",
       args => NormTextExpr(args.head))
-    reg("nfc", "nfc(text) - Unicode NFC canonical composition",
-      args => NfcExpr(args.head))
     reg("top_k", "top_k(value, id, k) - bounded-heap per-group top-k aggregate",
       buildTopK)
     reg("heavy_hitters",

@@ -22,7 +22,7 @@ import graft.ops.Dedup
   *    planted >=0.8-Jaccard pair at sf0.1 while bounding worst-case skew.
   *  - the pruned shingle frame and the verified Jaccard pair set are built
   *    once per (session, sf-dir) via [[SharedFrames.cached]] and shared by
-  *    `q_dedup_jaccard`, `q_dedup_minhash` and `q_dedup_apply`; the runner
+  *    `q_dedup_jaccard`, `q_dedup_minhash` and the cluster queries; the runner
   *    releases them with `SharedFrames.clear()`.
   */
 object DedupQueries extends QueryGroup {
@@ -637,8 +637,7 @@ object DedupQueries extends QueryGroup {
   private val HopRadius = 4
 
   /** Contamination blast radius ([[graft.ops.Graph.hopDistances]]): hop
-    * distance from the benchmark docs (doc_id < 10, the same registry
-    * convention as `q_contamination`) through the verified near-dup
+    * distance from the benchmark docs (doc_id < 10) through the verified near-dup
     * graph, radius {{HopRadius}} — a near-dup of a near-dup of an eval
     * doc is still a leakage risk the direct-overlap check misses. */
   private def contaminationHops(s: SparkSession, dir: String): DataFrame = {

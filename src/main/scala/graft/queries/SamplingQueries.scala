@@ -62,8 +62,7 @@ object SamplingQueries extends QueryGroup {
     * 20-token blocks, and each block with >= 4 tokens masks one 3-token
     * span at an md5-derived offset (3/20 = the 15% target on full
     * blocks) — deterministic, so the realized mask hash-gates and a
-    * re-run reproduces the exact training batch (the q_corpus_split
-    * stability discipline). One row per span with the doc-absolute
+    * re-run reproduces the exact training batch. One row per span with the doc-absolute
     * token range, the per-doc sentinel index, and the masked text.
     *
     * Shape at scale: pure projection + one bounded in-row transform
@@ -457,8 +456,7 @@ object SamplingQueries extends QueryGroup {
     * A curve that flattens early means the later corpus is recycling
     * vocabulary (template spam, boilerplate the dedup stage missed);
     * sustained growth means late batches still teach new tokens. The
-    * reference has no notion of this; it is the curation-health cousin
-    * of `q_token_histogram`.
+    * reference has no notion of this.
     *
     * Exact and scalable: a type's first-seen position is a min
     * AGGREGATION over (token, decile) rows — map-side combine absorbs

@@ -150,9 +150,9 @@ object SimilarityQueries extends QueryGroup {
 
   /** SemDeDup APPLY: drop every non-canonical member of a semantic
     * near-dup cluster (keep the smallest vec_id per component plus all
-    * unclustered vectors) — the embedding-space mirror of
-    * `q_dedup_apply`. One anti-join of the corpus against the
-    * non-canonical side of the shared cluster frame; the LSH+CC subtree
+    * unclustered vectors) — near-dup removal in embedding space. One
+    * anti-join of the corpus against the non-canonical side of the
+    * shared cluster frame; the LSH+CC subtree
     * is the persisted [[sharedSimClusters]], so the apply costs one
     * probe regardless of how many queries read the clusters. */
   private def semdedupApply(s: SparkSession, dir: String): DataFrame = {
@@ -541,14 +541,6 @@ object SimilarityQueries extends QueryGroup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Symmetric int8 quantization of the embedding column (the compression
-    * step before shipping vectors to an ANN index): per-vector scale =
-    * amax/127, q_i = floor(v_i/scale + 0.5) — exact integer round-trip
-    * invariants (L1 and sum-of-squares of the codes) plus the
-    * reconstruction MSE. Pure projection over the scan; the arrays never
-    * leave the row, so this rides any scale. floor(x+0.5) (not round) is
-    * deliberate: both engines floor identically, while double round
-    * half-rules can differ. */
   /** Distributed Gram / covariance matrix over the embedding corpus —
     * the X^T X building block of PCA whitening and feature decorrelation.
     * Exact: see [[Similarity.covarianceNumerators]] (integer numerators
@@ -571,6 +563,14 @@ object SimilarityQueries extends QueryGroup {
     Similarity.pc1Projection(Tables.embeddings(s, dir), sharedCovNum(s, dir))
       .orderBy("vec_id")
 
+  /** Symmetric int8 quantization of the embedding column (the compression
+    * step before shipping vectors to an ANN index): per-vector scale =
+    * amax/127, q_i = floor(v_i/scale + 0.5) — exact integer round-trip
+    * invariants (L1 and sum-of-squares of the codes) plus the
+    * reconstruction MSE. Pure projection over the scan; the arrays never
+    * leave the row, so this rides any scale. floor(x+0.5) (not round) is
+    * deliberate: both engines floor identically, while double round
+    * half-rules can differ. */
   private def embedQuant(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .withColumn("v", col("embedding").cast("array<double>"))
@@ -728,7 +728,7 @@ object SimilarityQueries extends QueryGroup {
   private def rankFusion(s: SparkSession, dir: String): DataFrame = {
     val sparse = graft.ops.Retrieval
       .bm25TopK(Tables.documents(s, dir), col("doc_id") < 3, 5, 20,
-        scoredOpt = Some(CorpusQueries.sharedBm25Scores(s, dir)))
+        scoredOpt = Some(RetrievalQueries.sharedBm25Scores(s, dir)))
       .select(col("query_id"), col("doc_id"), col("rank").as("bm25_rank"))
     val dense = denseCosines(s, dir).groupBy("query_id")
       .agg(graft.functions.TopK.topK(col("cosine"), col("doc_id"), 20).as("top"))
@@ -1523,7 +1523,7 @@ object SimilarityQueries extends QueryGroup {
     // sparse = the shared BM25 CTEs (rank <= 20); dense = hash-embedding
     // cosine rank <= 20; RRF = integer-scaled 1/(60+rank) sums
     "q_rank_fusion" ->
-      s"""WITH ${CorpusQueries.bm25CtesSql},
+      s"""WITH ${RetrievalQueries.bm25CtesSql},
          |$denseCtesSql,
          |dr AS (SELECT query_id, doc_id,
          |    CAST(row_number() OVER (PARTITION BY query_id

@@ -269,7 +269,7 @@ object TextQueries extends QueryGroup {
   }
 
   /** Deterministic multi-line page fixture for the line-level curation
-    * rules (the `q_html_to_text` convention: `documents.text` has no
+    * rules (`documents.text` has no
     * newlines or punctuation, so the page structure those rules act on
     * is REBUILT identically in Spark and in the oracle SQL from the
     * row's own words). Each doc's words chunk into 7-word lines; line i
@@ -313,7 +313,7 @@ object TextQueries extends QueryGroup {
     * Shape at scale: pure projection — the line filter, sentence count,
     * and reassembly all run in-row on the line array (no explode, no
     * shuffle except the presentation sort); at 100 TB this is
-    * scan-bound, the same envelope as `q_text_scrub`. */
+    * scan-bound. */
   private def c4Filters(s: SparkSession, dir: String): DataFrame =
     c4Flags(s, dir).orderBy("doc_id")
 
@@ -523,7 +523,7 @@ object TextQueries extends QueryGroup {
     * Shape at scale: the gates are the already-audited pipelines (three
     * projections + the grid rank); the funnel itself is four narrow
     * left joins on doc_id and ONE 9-counter aggregation unpivoted to 5
-    * rows — the `q_dq_audit` shape. */
+    * rows. */
   private def curationGate(s: SparkSession, dir: String): DataFrame = {
     val g1 = gopherRepetitionFlags(s, dir)
       .select(col("doc_id"), col("gopher_keep").as("k1"))
@@ -1550,7 +1550,7 @@ object TextQueries extends QueryGroup {
         |   AND dup6 * 100 <= total_chars * 14) AS gopher_keep
         |FROM pv ORDER BY doc_id""".stripMargin,
 
-    // page fixture rebuilt verbatim (the q_html_to_text convention) + every
+    // page fixture rebuilt verbatim + every
     // keep gate compared in the integer domain; only mean_word_len displays
     // as a double
     "q_gopher_quality" ->

@@ -2,50 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.{CorpusQueries, DedupQueries}
+import graft.queries.DedupQueries
 
 /** Cross-query invariants of the corpus-curation flow — the properties a
   * pipeline composing these stages actually relies on, beyond each query's
   * own oracle match. */
 class CurationSpec extends SparkSuite {
-
-  test("after dedup-apply, no >=0.8 pair has BOTH members surviving") {
-    val survivors = CorpusQueries.queries("q_dedup_apply")(spark, sf)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val pairs = DedupQueries.queries("q_dedup_jaccard")(spark, sf)
-      .select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.nonEmpty)
-    pairs.foreach { case (a, b) =>
-      assert(!(survivors(a) && survivors(b)),
-        s"near-dup pair ($a, $b) fully survived dedup-apply")
-    }
-    graft.core.SharedFrames.clear()
-  }
-
-  test("split is a partition with ~80/10/10 fractions and stable assignment") {
-    val rows = CorpusQueries.queries("q_corpus_split")(spark, sf).collect()
-    val n = rows.length.toDouble
-    val frac = rows.groupBy(_.getString(2)).view.mapValues(_.length / n).toMap
-    assert(math.abs(frac("train") - 0.8) < 0.06, frac.toString)
-    assert(math.abs(frac("val") - 0.1) < 0.05, frac.toString)
-    assert(math.abs(frac("test") - 0.1) < 0.05, frac.toString)
-    // stability: re-running yields the identical assignment (hash, not RNG)
-    val again = CorpusQueries.queries("q_corpus_split")(spark, sf).collect()
-    assert(rows.map(r => (r.getLong(0), r.getString(2))).toSeq ==
-      again.map(r => (r.getLong(0), r.getString(2))).toSeq)
-  }
-
-  test("corpus stats grand total equals the corpus; subtotals sum to it") {
-    val stats = CorpusQueries.queries("q_corpus_stats")(spark, sf).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val total = core.Tables.documents(spark, sf).count()
-    assert(stats(("ALL", "ALL")) == total)
-    val bySplit = stats.collect { case (("ALL", s), v) if s != "ALL" => v }.sum
-    val byLang = stats.collect { case ((l, "ALL"), v) if l != "ALL" => v }.sum
-    assert(bySplit == total && byLang == total,
-      s"subtotals $bySplit/$byLang vs $total")
-  }
 
   test("cluster representative is always a member of its own cluster") {
     val comp = DedupQueries.queries("q_dedup_clusters")(spark, sf).collect()
@@ -79,46 +41,6 @@ class CurationSpec extends SparkSuite {
       assert(expected(id) == nb, s"doc $id bigrams $nb vs ${expected(id)}")
     }
     assert(expected.count(_._2 >= 1) == kn.size)
-  }
-
-  test("PII redaction leaves no residual matches and counts the fixture") {
-    val rows = CorpusQueries.queries("q_pii_redact")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
-        r.getString(4)))
-    assert(rows.nonEmpty)
-    val email = "[a-z0-9._]+@[a-z0-9.]+\\.[a-z]+".r
-    val phone = "[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}".r
-    val ip = "[0-9]+\\.[0-9]+\\.[0-9]+\\.[0-9]+".r
-    rows.foreach { case (k, ne, np, ni, red) =>
-      // counts follow the fixture's variation rules
-      assert(ne == (if (k % 3 == 0) 2 else 1), s"key $k emails $ne")
-      assert(np == 1, s"key $k phones $np")
-      assert(ni == (if (k % 5 == 0) 0 else 1), s"key $k ips $ni")
-      // nothing sensitive survives redaction
-      assert(email.findFirstIn(red).isEmpty, s"residual email in: $red")
-      assert(phone.findFirstIn(red).isEmpty, s"residual phone in: $red")
-      assert(ip.findFirstIn(red).isEmpty, s"residual ip in: $red")
-    }
-  }
-
-  test("URL canonical forms are normalized and conserve the raw mass") {
-    val rows = CorpusQueries.queries("q_url_normalize")(spark, sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(rows.nonEmpty)
-    rows.foreach { case (url, nRaw, nVariants) =>
-      assert(url == url.toLowerCase, s"case survived: $url")
-      assert(!url.contains("#") && !url.contains("utm_") &&
-        !url.contains(":80/"), s"uncanonical: $url")
-      // sorted params: a=1 before b=2 when both present
-      if (url.contains("?"))
-        assert(url.endsWith("?a=1&b=2"), s"params unsorted: $url")
-      assert(nVariants >= 1L && nVariants <= nRaw)
-    }
-    // mass conservation: every order key lands in exactly one group
-    val total = core.Tables.orders(spark, sf).count()
-    assert(rows.map(_._2).sum == total)
-    // the fixture guarantees real merging: more raws than groups
-    assert(total > rows.length)
   }
 
   test("Gopher repetition equals a naive in-memory reimplementation") {

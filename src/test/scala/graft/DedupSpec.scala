@@ -402,33 +402,6 @@ class DedupSpec extends SparkSuite {
     assert(cc == 1L)
   }
 
-  test("incremental first-occurrence == full run when batch follows corpus (law)") {
-    // records: r1 seen in corpus; r2 duplicated inside the batch; r3 fresh
-    val corpus = Seq((1L, 1, "r1"), (1L, 2, "rX"), (2L, 1, "r1"))
-      .toDF("doc_id", "part_idx", "record")
-    val batch = Seq((11L, 1, "r1"), (11L, 2, "r2"), (12L, 1, "r2"), (12L, 2, "r3"))
-      .toDF("doc_id", "part_idx", "record")
-    val index = corpus.select("record").distinct()
-    val got = Dedup.incrementalFirstOccurrence(index, batch)
-      .select(col("doc_id"), col("part_idx"), col("kept"))
-      .as[(Long, Int, Boolean)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    // full-run first occurrence over corpus+batch, restricted to batch rows
-    val all = corpus.unionByName(batch)
-    val full = all.groupBy("record")
-      .agg(min(struct(col("doc_id"), col("part_idx"))).as("first"))
-    val exp = all.join(full, Seq("record"))
-      .withColumn("kept",
-        col("doc_id") === col("first.doc_id") && col("part_idx") === col("first.part_idx"))
-      .filter(col("doc_id") >= 11L)
-      .select(col("doc_id"), col("part_idx"), col("kept"))
-      .as[(Long, Int, Boolean)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(got == exp, s"incremental diverged from full run: $got vs $exp")
-    assert(got((11L, 1)) == false && got((11L, 2)) == true &&
-      got((12L, 1)) == false && got((12L, 2)) == true)
-  }
-
   test("bfs hop distances: min distance wins, horizon excludes the tail") {
     // chain 1-2-3-4-5-6 plus a 1-5 shortcut; seed = {1}, radius 3
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (1L, 5L))

@@ -7,38 +7,6 @@ import graft.ops.Eval
 class EvalSpec extends SparkSuite {
   import spark.implicits._
 
-  private def naiveKs(rows: Seq[(Long, Boolean)]): (Long, Long, Long, Long) = {
-    val a = rows.filter(_._2).map(_._1)
-    val b = rows.filterNot(_._2).map(_._1)
-    val vs = rows.map(_._1).distinct.sorted
-    val gaps = vs.map { v =>
-      val gap = math.abs(
-        a.count(_ <= v).toLong * b.size - b.count(_ <= v).toLong * a.size)
-      (v, gap)
-    }
-    val dNum = gaps.map(_._2).max
-    val at = gaps.filter(_._2 == dNum).map(_._1).min
-    (a.size.toLong, b.size.toLong, dNum, at)
-  }
-
-  test("ksDistance equals the naive CDF comparison, smallest-argmax tiebreak") {
-    val rnd = new scala.util.Random(31)
-    // two genuinely different distributions + heavy ties
-    val rows = (0 until 600).map { _ =>
-      val inA = rnd.nextBoolean()
-      val v = if (inA) rnd.nextInt(20).toLong else (rnd.nextInt(20) + 5).toLong
-      (v, inA)
-    }
-    val (na, nb, dNum, at) = naiveKs(rows)
-    val r = Eval.ksDistance(rows.toDF("v", "in_a").repartition(7), "v", "in_a")
-      .head()
-    assert(r.getAs[Long]("n_a") == na)
-    assert(r.getAs[Long]("n_b") == nb)
-    assert(r.getAs[Long]("d_num") == dNum)
-    assert(r.getAs[Long]("at_value") == at)
-    assert(math.abs(r.getAs[Double]("d") - dNum.toDouble / (na * nb)) < 1e-6)
-  }
-
   test("prCurve equals brute-force thresholding") {
     val rnd = new scala.util.Random(41)
     val rows = (0 until 300).map(_ => (rnd.nextInt(15).toLong, rnd.nextBoolean()))
@@ -56,36 +24,5 @@ class EvalSpec extends SparkSuite {
       assert(math.abs(gp - tp.toDouble / pred.size) < 1e-6)
       assert(math.abs(gr - tp.toDouble / nPos) < 1e-6)
     }
-  }
-
-  test("ksMatrix row for a group equals the standalone two-sample ksDistance") {
-    val rnd = new scala.util.Random(53)
-    val rows = (0 until 500).map(_ =>
-      (s"g${rnd.nextInt(4)}", rnd.nextInt(25).toLong))
-    val df = rows.toDF("g", "v").repartition(6)
-    val matrix = graft.ops.Eval.ksMatrix(df, "g", "v")
-      .collect().map(r => r.getString(0) ->
-        (r.getAs[Long]("n_in"), r.getAs[Long]("n_out"),
-          r.getAs[Long]("d_num"))).toMap
-    Seq("g0", "g1", "g2", "g3").foreach { gq =>
-      val single = Eval.ksDistance(
-        df.withColumn("in_a", org.apache.spark.sql.functions.col("g") === gq),
-        "v", "in_a").head()
-      val (nIn, nOut, dNum) = matrix(gq)
-      assert(nIn == single.getAs[Long]("n_a"), gq)
-      assert(nOut == single.getAs[Long]("n_b"), gq)
-      assert(dNum == single.getAs[Long]("d_num"), gq)
-    }
-  }
-
-  test("identical distributions: D collapses toward zero; disjoint: D = 1") {
-    // block-alternating membership: each group sees the full 0..9 cycle
-    val same = (0 until 200).map(i => ((i % 10).toLong, (i / 10) % 2 == 0))
-    val rSame = Eval.ksDistance(same.toDF("v", "in_a"), "v", "in_a").head()
-    assert(rSame.getAs[Double]("d") == 0.0)
-    val disjoint = (0 until 100).map(i =>
-      (if (i < 50) i.toLong else (i + 1000).toLong, i < 50))
-    val rDis = Eval.ksDistance(disjoint.toDF("v", "in_a"), "v", "in_a").head()
-    assert(rDis.getAs[Double]("d") == 1.0)
   }
 }

@@ -37,12 +37,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
       "SELECT dot_product(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
       .collect().head.getDouble(0)
     assert(dp == 32.0)
-
-    // nfc: decomposed e + U+0301 composes to U+00E9; already-NFC input
-    // passes through unchanged (the no-allocation fast path)
-    val nfc = spark.sql("SELECT nfc('cafe\u0301') AS a, nfc('caf\u00e9') AS b")
-      .collect().head
-    assert(nfc.getString(0) == "caf\u00e9" && nfc.getString(1) == "caf\u00e9")
   }
 
   test("token-count rewrite fires on the regex pattern and values agree") {
@@ -135,47 +129,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
     val noLower = graft.core.Tables.documents(spark, sf)
       .select(trim(regexp_replace(col("text"), """\s+""", " ")))
     assert(!noLower.queryExecution.optimizedPlan.toString.contains("norm_text"))
-  }
-
-  test("url_split == the five-regex formulation (fixture + adversarial)") {
-    import spark.implicits._
-    import org.apache.spark.sql.Column
-    def regexForm(c: Column): Column = {
-      val nofrag = regexp_replace(c, "#.*$", "")
-      struct(
-        lower(regexp_extract(nofrag, "^([a-zA-Z]+)://", 1)).as("scheme"),
-        regexp_extract(nofrag, "^[a-zA-Z]+://([^/?#]+)", 1).as("hostport"),
-        regexp_extract(nofrag, "^[a-zA-Z]+://[^/?#]+([^?#]*)", 1).as("path"),
-        regexp_extract(nofrag, "\\?(.*)$", 1).as("qs"))
-    }
-    // the exact q_url_normalize fixture over 2000 keys (all mod classes)
-    val fix = spark.range(0, 2000).select(col("id").as("k"))
-      .withColumn("raw", expr(graft.queries.CorpusQueries.UrlFixtureSql))
-    assert(fix.filter(
-      graft.functions.UrlSplit.urlParts(col("raw")) =!= regexForm(col("raw")))
-      .count() == 0L)
-    // adversarial: missing pieces, multiple delimiters, multi-byte hosts,
-    // every line-terminator class (the regex-fallback route), and the
-    // conservative 0xC2/0xE2 fallback triggers that are NOT terminators
-    val advers = Seq(
-      "", "no url at all", "http://", "http:///path-only", "://x",
-      "HTTP://EXAMPLE.COM:80/p/1?b=2&a=1#f", "hTtPs://H/p2?z=9&utm_a=b",
-      "http://h/p?a=1?b=2", "a#b#c?x=1", "?leading-question", "#only-frag",
-      "http://h?q#f", "scheme99://h/p", "99http://h", "http:/h", "http//h",
-      "http://héllo.com/pàth?x=1", "http://h:8080/a/b?utm_x=1&z=9#frag",
-      "line\nbreak#f", "x\rhttp://h", "post#fra\ng", "premid#f",
-      "ls #f?x", "lt tail", "http://h/p#f\n", "http://h/p?q\r",
-      "Â-c2-trigger http://h/p?a=1#f", "em—dash://h?x#y",
-      "http://h/p q?a#b", "#", "?", "http://h#?notqs")
-    val got = advers.toDF("raw")
-      .select(col("raw"), graft.functions.UrlSplit.urlParts(col("raw")).as("n"),
-        regexForm(col("raw")).as("r"))
-      .collect()
-    got.foreach { row =>
-      assert(row.getStruct(1) == row.getStruct(2),
-        s"url_split mismatch on ${row.getString(0).replace("\n", "\\n")}: " +
-          s"${row.getStruct(1)} vs ${row.getStruct(2)}")
-    }
   }
 
   test("top_k aggregate == window row_number formulation (law + tiebreak)") {

@@ -64,63 +64,6 @@ class FormatsSpec extends SparkSuite {
     assert(spark.read.parquet(out).count() == 2000)
   }
 
-  test("token-shard sink: write + reconstruct is the identity, offsets contiguous") {
-    import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graftshards")
-      .toFile.getAbsolutePath
-    // deterministic token ids from the real corpus; empty-text docs give
-    // zero-length id arrays (the offset math must absorb them)
-    val docs = graft.core.Tables.documents(spark, sf)
-      .select(col("doc_id"),
-        expr("transform(filter(split(trim(text), '\\\\s+'), w -> w <> ''), " +
-          "w -> cast(pmod(hash(w), 50000) as int))").as("ids"))
-    val n = graft.sinks.TokenShards.write(docs, nShards = 4, tmp)
-    assert(n == docs.count())
-    // exactly nShards binary files on disk
-    val bins = new java.io.File(tmp).listFiles()
-      .filter(_.getName.matches("shard-\\d+\\.bin")).sortBy(_.getName)
-    assert(bins.length == 4, bins.mkString(", "))
-    // per-shard byte size == 4 * total ids on that shard (offsets
-    // contiguous, nothing dropped or double-written)
-    val idx = spark.read.parquet(s"$tmp/index")
-    val sizes = idx.groupBy("shard").agg(sum("n_ids").as("total"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    bins.foreach { f =>
-      val k = f.getName.stripPrefix("shard-").stripSuffix(".bin").toInt
-      assert(f.length() == sizes(k) * 4, s"shard $k size ${f.length()}")
-    }
-    // identity law: reconstruct == input, row for row
-    val back = graft.sinks.TokenShards.reconstruct(spark, tmp)
-    // plan shape: the re-reader is index-repartition + per-partition
-    // positioned reads — NO join, and no relation over the shard files
-    // themselves (a whole-shard binaryFile row was the round-10 scale
-    // hole: every doc row's projection copied its shard's full payload)
-    val rplan = back.queryExecution.optimizedPlan
-    assert(!rplan.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-      s"reconstruct must not join shard payloads onto doc rows:\n$rplan")
-    assert(rplan.collectLeaves().forall {
-      case org.apache.spark.sql.execution.datasources.LogicalRelation(
-          fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
-          _, _, _, _) =>
-        fs.location.rootPaths.forall(!_.getName.startsWith("shard-"))
-      case _ => true
-    }, s"no relation may load shard binaries as rows:\n$rplan")
-    assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty)
-    // edges: a single shard round-trips; an empty corpus writes a
-    // zero-row index and reconstructs to the empty frame (no throw on
-    // the matchless shard glob)
-    val one = s"$tmp-one"
-    assert(graft.sinks.TokenShards.write(docs.limit(7), 1, one) == 7L)
-    assert(graft.sinks.TokenShards.reconstruct(spark, one).count() == 7L)
-    val none = s"$tmp-none"
-    assert(graft.sinks.TokenShards.write(docs.limit(0), 4, none) == 0L)
-    val empty = graft.sinks.TokenShards.reconstruct(spark, none)
-    assert(empty.count() == 0L &&
-      empty.columns.toSeq == Seq("doc_id", "ids"))
-    graft.core.SharedFrames.clear()
-  }
-
   test("JSON-lines sink/source round-trip with explicit schema") {
     val dir = Files.createTempDirectory("graftjson").toFile.getAbsolutePath
     val in = sample

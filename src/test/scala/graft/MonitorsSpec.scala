@@ -2,52 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Laws for the corpus monitors added in round 6: exact moment statistics
-  * (q_moments), Heaps-curve vocabulary growth (q_vocab_growth), and the
-  * feature-hashing lexical embeddings (q_hash_embed / q_hash_embed_sim).
+/** Laws for the corpus monitors: Heaps-curve vocabulary growth
+  * (q_vocab_growth) and the feature-hashing lexical embeddings (q_hash_embed / q_hash_embed_sim).
   * The DuckDB oracle pins the values; these pin the MATHEMATICS — bounds
   * and identities that hold for any corpus, so a formula typo that the
   * synthetic corpus happens to satisfy still fails here. */
 class MonitorsSpec extends SparkSuite {
-
-  test("moments: counts partition the corpus; g2 >= g1^2 - 2 (Pearson bound)") {
-    val m = SparkEntry.queries("q_moments")(spark, sf).collect()
-    val total = graft.core.Tables.documents(spark, sf).count()
-    assert(m.map(_.getAs[Long]("n_docs")).sum == total)
-    // kurtosis >= skewness^2 + 1 in raw form; in excess form g2 >= g1^2 - 2.
-    // Holds for EVERY distribution — a sign slip in B or C breaks it.
-    m.foreach { r =>
-      val g1 = r.getAs[Double]("skewness")
-      val g2 = r.getAs[Double]("kurtosis_excess")
-      if (!r.isNullAt(r.fieldIndex("skewness")))
-        assert(g2 >= g1 * g1 - 2 - 1e-9, s"Pearson bound violated: $r")
-    }
-  }
-
-  test("moments: planted symmetric data has zero skewness, uniform has negative excess") {
-    // symmetric {a, 2m-a} pairs around m -> third central moment exactly 0
-    import spark.implicits._
-    val docs = (1 to 50).flatMap(i => Seq(("s", 100L + i), ("s", 100L - i)))
-      .toDF("source", "n_chars")
-    val out = docs
-      .withColumn("doc_id", monotonically_increasing_id())
-      .withColumn("text", lit("x")).withColumn("lang", lit("en"))
-    out.createOrReplaceTempView("moments_fixture")
-    // run the same arithmetic inline (the query reads the documents table;
-    // the law targets the arithmetic, so replicate the numerator algebra)
-    val agg = out.groupBy("source").agg(
-      count(lit(1)).cast("decimal(38,0)").as("n"),
-      sum(col("n_chars").cast("decimal(38,0)")).as("s1"),
-      sum((col("n_chars") * col("n_chars")).cast("decimal(38,0)")).as("s2"),
-      sum((col("n_chars") * col("n_chars") * col("n_chars"))
-        .cast("decimal(38,0)")).as("s3"))
-    val b = agg.select(
-      (col("n") * col("n") * col("s3") -
-        lit(3) * col("n") * col("s1") * col("s2") +
-        lit(2) * col("s1") * col("s1") * col("s1")).as("b"))
-      .head().getDecimal(0)
-    assert(b.signum == 0, s"symmetric data must have m3 numerator 0, got $b")
-  }
 
   test("vocab growth: cumulative columns hit the exact corpus totals, vocab monotone") {
     val g = SparkEntry.queries("q_vocab_growth")(spark, sf)

@@ -14,28 +14,6 @@ import graft.queries.SamplingQueries
   * sequences. */
 class SamplingSpec extends SparkSuite {
 
-  test("leakage-safe split: no near-dup cluster (or verified pair) straddles splits") {
-    val df = SparkEntry.queries("q_split_leakage_safe")(spark, sf).cache()
-    val straddling = df.groupBy("unit_id")
-      .agg(org.apache.spark.sql.functions.countDistinct("split").as("ns"))
-      .filter(org.apache.spark.sql.functions.col("ns") > 1).count()
-    assert(straddling == 0, "a cluster was split across train/val/test")
-    // stronger: every VERIFIED near-dup pair shares a split end to end
-    val splits = df.select("doc_id", "split")
-    val pairs = SparkEntry.queries("q_dedup_jaccard")(spark, sf)
-      .select("id_a", "id_b")
-    val broken = pairs
-      .join(splits.withColumnRenamed("doc_id", "id_a")
-        .withColumnRenamed("split", "split_a"), Seq("id_a"))
-      .join(splits.withColumnRenamed("doc_id", "id_b")
-        .withColumnRenamed("split", "split_b"), Seq("id_b"))
-      .filter(org.apache.spark.sql.functions.col("split_a") =!=
-        org.apache.spark.sql.functions.col("split_b")).count()
-    assert(broken == 0, "a near-dup pair landed in different splits")
-    df.unpersist()
-    graft.core.SharedFrames.clear()
-  }
-
   test("two-level rank equals the single-window global row_number") {
     val docs = Tables.documents(spark, sf)
     val fast = Sampling.rankedBy(docs, Seq("lang"), "doc_id")

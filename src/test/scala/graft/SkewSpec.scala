@@ -86,43 +86,6 @@ class SkewSpec extends SparkSuite {
       s"map-side combine would emit $hotPartialRows rows for the hot fp (maps=$mapParts)")
   }
 
-  test("line dedup survives the mega-duplicated record (min-struct agg shape)") {
-    // every fixture doc is ONE record (no 'stream' separator), so the
-    // mega text is a record at n/3 multiplicity — exactly the Zipf-head
-    // line profile the min-struct aggregation was built for
-    val q = SparkEntry.queries("q_line_dedup")(spark, skewDir)
-    val plan = q.queryExecution.explainString(FormattedMode)
-    assert(!plan.contains("Window"),
-      s"line dedup regressed to a per-record window:\n${plan.take(1200)}")
-    assert(plan.contains("partial_min") || plan.contains("partial min"),
-      s"first-occurrence lost its map-side combine:\n${plan.take(1200)}")
-    val rows = q.select("doc_id", "n_parts", "n_kept").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(rows.length == N)
-    rows.foreach { case (id, np, nk) =>
-      assert(np == 1L, s"doc $id split into $np records")
-      // the mega record survives only at its first occurrence (doc 0)
-      val expect = if (id % 3 == 0 && id != 0L) 0L else 1L
-      assert(nk == expect, s"doc $id kept $nk records")
-    }
-  }
-
-  test("boilerplate removal drops the n/3-duplicated record everywhere, probe stays broadcast") {
-    // the mega record is in n/3 >= BoilerDf distinct docs -> boilerplate
-    // EVERYWHERE; the high-df list is 1 entry, so the removal is a
-    // broadcast probe even on a corpus with extreme record skew
-    val q = SparkEntry.queries("q_boilerplate")(spark, skewDir)
-    val plan = q.queryExecution.explainString(FormattedMode)
-    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
-      s"boilerplate probe fell back to a shuffle join:\n${plan.take(1200)}")
-    val rows = q.select("doc_id", "n_boiler").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(rows.length == N)
-    rows.foreach { case (id, nb) =>
-      assert(nb == (if (id % 3 == 0) 1L else 0L), s"doc $id n_boiler=$nb")
-    }
-  }
-
   test("df-pruning erases the mega-duplicated text's shingles before any self-join") {
     // the near-dup family's skew defense is UPSTREAM of the join: a
     // shingle occurring in n/3 docs (df >> 20) is dropped before the
