@@ -20,7 +20,6 @@ object SparkEntry {
     TextQueries,
     DedupQueries,
     SimilarityQueries,
-    RetrievalQueries,
     SamplingQueries,
   )
 

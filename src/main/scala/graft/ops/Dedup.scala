@@ -588,7 +588,7 @@ object Dedup {
     val dfs = feats.groupBy(featureCol).agg(count(lit(1)).as("df"))
     // REGISTERED (r12): the weighted frame feeds three plan arms (both
     // join sides + norms), and without a persist the df-count aggregation
-    // and join re-evaluate once per arm (AbTfidf decomposition: the
+    // and join re-evaluate once per arm (timed stage by stage in one JVM: the
     // ~0.7 s dfs+join interior ran 3x of the 2.7 s total; exchange reuse
     // does not fire across cached-scan subtrees). Same discipline as
     // prefixJaccardPairs' prefix frame.

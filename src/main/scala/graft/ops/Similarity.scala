@@ -360,8 +360,7 @@ object Similarity {
     searchLists(ivfAssign(n, centroids), isQuery, k, centroids, nProbe, listSalt)
 
   /** PERSISTED IVF INDEX EPOCH — the restart boundary for the ANN family
-    * (the simhash ingest index and the BM25 block index already have one;
-    * StreamingSpec pins both). The epoch is two parquet directories under
+    * (the simhash ingest index has one too; StreamingSpec pins it). The epoch is two parquet directories under
     * `path`: `centroids` (c_id, v — nCentroids rows) and `lists`
     * (vec_id, v, nrm, list_id — the [[ivfAssign]] output). Centroids are
     * the md5-seeded corpus pick of [[ivfIncrementalTopK]], so the
@@ -369,7 +368,7 @@ object Similarity {
     * law-equal to the in-session incremental chain (DedupSpec pins it
     * across a session boundary). An insert appends ONLY the batch's own
     * assigned rows — centroids never move, the IVF production property —
-    * so epoch maintenance is O(batch) like the BM25 block index. */
+    * so epoch maintenance is O(batch), never a corpus rebuild. */
   def ivfSaveIndex(emb: DataFrame, nCentroids: Int, path: String): Unit = {
     val spark = emb.sparkSession
     val corpus = graft.core.SharedFrames.register(withNorm(emb))
@@ -731,7 +730,7 @@ object Similarity {
     * TopK/Misra–Gries map-side-combine shape). The previous declarative
     * form generated 2080 (i,j) rows PER VECTOR into a decimal hash
     * aggregation — correct, but millions of shuffled rows per million
-    * vectors and ~20× slower measured same-JVM (tools/AbCov); it is
+    * vectors and ~20× slower, measured side by side in one JVM; it is
     * retained as [[covarianceNumeratorsExploded]] and CovAccumSpec pins
     * cell-for-cell equality on the corpus and adversarial fixtures. */
   def covarianceNumerators(emb: DataFrame): DataFrame = {

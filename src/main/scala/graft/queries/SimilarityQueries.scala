@@ -690,17 +690,6 @@ object SimilarityQueries extends QueryGroup {
   private def hashEmbed(s: SparkSession, dir: String): DataFrame =
     hashEmbedVectors(s, dir).orderBy("doc_id", "dim")
 
-  /** Hybrid retrieval by reciprocal-rank fusion (RRF, k=60): the BM25
-    * top-20 (sparse list, [[graft.ops.Retrieval.bm25TopK]]) full-outer
-    * merged with the hash-embedding cosine top-20 (dense list, the same
-    * [[hashEmbedVectors]] features `q_hash_embed` gates), fused by
-    * integer-scaled 10^8 div (60 + rank) per list — RRF is already
-    * rational, so the fused ranking never compares floats. Top-10 per
-    * query, ties broken by doc id. Shape at scale: both candidate lists
-    * arrive as bounded-heap top-k aggregates (20 rows per query), so the
-    * fusion join and final window touch ≤40 rows per query no matter the
-    * corpus size; the dense side's query vectors broadcast against the
-    * (doc, dim) feature frame exactly like the BM25 postings probe. */
   /** Dense-side retrieval scores: hash-embedding cosine of every doc
     * against each query doc (doc_id < 3) — integer dots over the
     * (doc, dim) feature frame with the query vectors broadcast, doubles
@@ -725,34 +714,11 @@ object SimilarityQueries extends QueryGroup {
         (sqrt(col("nrm2").cast("double")) * sqrt(col("qn2").cast("double"))), 6))
   }
 
-  private def rankFusion(s: SparkSession, dir: String): DataFrame = {
-    val sparse = graft.ops.Retrieval
-      .bm25TopK(Tables.documents(s, dir), col("doc_id") < 3, 5, 20,
-        scoredOpt = Some(RetrievalQueries.sharedBm25Scores(s, dir)))
-      .select(col("query_id"), col("doc_id"), col("rank").as("bm25_rank"))
-    val dense = denseCosines(s, dir).groupBy("query_id")
-      .agg(graft.functions.TopK.topK(col("cosine"), col("doc_id"), 20).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("doc_id"),
-        (col("pos") + 1).cast("int").as("cos_rank"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("rrf_scaled").desc, col("doc_id").asc)
-    sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf_scaled",
-        coalesce(expr("100000000 div (60 + bm25_rank)"), lit(0L)) +
-          coalesce(expr("100000000 div (60 + cos_rank)"), lit(0L)))
-      .withColumn("fused_rank", row_number().over(w).cast("int"))
-      .filter(col("fused_rank") <= 10)
-      .select("query_id", "doc_id", "bm25_rank", "cos_rank",
-        "rrf_scaled", "fused_rank")
-      .orderBy("query_id", "fused_rank")
-  }
-
   /** MMR diversity rerank (λ = 0.7) of the dense top-20: greedily pick 5
     * results maximizing λ·rel − (1−λ)·max-sim-to-already-selected — the
-    * rerank step after [[rankFusion]]'s candidate fusion, which stops a
-    * result page (or a few-shot example set) from being five paraphrases
-    * of the same document. rel = query cosine, sim = candidate-pair
+    * rerank step after candidate retrieval, which stops a result page (or
+    * a few-shot example set) from being five paraphrases of the same
+    * document. rel = query cosine, sim = candidate-pair
     * cosine, both the rounded-6 cross-engine keys; λ-arithmetic runs in
     * raw doubles (identical operand order both engines, so no fudge).
     *
@@ -910,7 +876,6 @@ object SimilarityQueries extends QueryGroup {
     "q_sim_curve" -> simCurve,
     "q_hash_embed" -> hashEmbed,
     "q_hash_embed_sim" -> hashEmbedSim,
-    "q_rank_fusion" -> rankFusion,
     "q_mmr_rerank" -> mmrRerank,
     "q_sim_clusters" -> simClusters,
     "q_semdedup_apply" -> semdedupApply,
@@ -1091,12 +1056,12 @@ object SimilarityQueries extends QueryGroup {
          |  ELSE w * 1048576 // (SELECT m FROM m$k) END AS v FROM w$k)""".stripMargin
     }.mkString("")
 
-  /** Shared oracle preamble: token occurrences hashed to (dim, sign).
-    * `('0x'||substr(md5,1,8))::BIGINT` == Spark `conv(substring,16,10)`;
-    * dim uses digest bits 0–3, the sign bit 4 — independent slices. */
   /** Dense-retrieval CTEs: hash-embedding features → per-doc norms →
     * query (doc_id < 3) dots → rounded cosine frame `den(query_id,
-    * doc_id, cosine)`. Shared by the rank-fusion and MMR oracles. */
+    * doc_id, cosine)`, read by the MMR oracle. Token occurrences hash to
+    * (dim, sign): `('0x'||substr(md5,1,8))::BIGINT` == Spark
+    * `conv(substring,16,10)`; dim uses digest bits 0–3, the sign bit 4 —
+    * independent slices. */
   private def denseCtesSql: String =
     s"""ht AS (SELECT doc_id, unnest(regexp_extract_all(text, '\\S+')) AS tok
        |       FROM documents),
@@ -1519,29 +1484,6 @@ object SimilarityQueries extends QueryGroup {
         |  FROM pairs)
         |SELECT query_id, neighbor_id, cosine, rank FROM ranked
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // sparse = the shared BM25 CTEs (rank <= 20); dense = hash-embedding
-    // cosine rank <= 20; RRF = integer-scaled 1/(60+rank) sums
-    "q_rank_fusion" ->
-      s"""WITH ${RetrievalQueries.bm25CtesSql},
-         |$denseCtesSql,
-         |dr AS (SELECT query_id, doc_id,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, doc_id ASC) AS INTEGER) AS cos_rank
-         |  FROM den),
-         |sr AS (SELECT query_id, doc_id, rank AS bm25_rank FROM rk WHERE rank <= 20),
-         |dr20 AS (SELECT * FROM dr WHERE cos_rank <= 20),
-         |fu AS (SELECT coalesce(s.query_id, d.query_id) AS query_id,
-         |    coalesce(s.doc_id, d.doc_id) AS doc_id,
-         |    s.bm25_rank, d.cos_rank,
-         |    CAST(coalesce(100000000 // (60 + s.bm25_rank), 0)
-         |       + coalesce(100000000 // (60 + d.cos_rank), 0) AS BIGINT) AS rrf_scaled
-         |  FROM sr s FULL OUTER JOIN dr20 d
-         |    ON s.query_id = d.query_id AND s.doc_id = d.doc_id),
-         |ff AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY rrf_scaled DESC, doc_id ASC) AS INTEGER) AS fused_rank FROM fu)
-         |SELECT query_id, doc_id, bm25_rank, cos_rank, rrf_scaled, fused_rank
-         |FROM ff WHERE fused_rank <= 10 ORDER BY query_id, fused_rank""".stripMargin,
 
     // dense top-20 candidates + symmetric pair-sim frame, then the
     // 5-round unrolled greedy (mmrRoundsSql) — λ = 0.7, doc-id tiebreak

@@ -9,9 +9,8 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming maintenance of a grouped (count, sums...) summary from a
   * SIGNED changelog — the stream-side form of
-  * [[graft.ops.Merge.ivmMerge]], closing the IVM family's loop the way
-  * [[IndexStream]] closes retrieval's: `q_ivm_agg` proves the batch
-  * merge, `q_summary_ivm_e2e` proves maintain-then-serve through the
+  * [[graft.ops.Merge.ivmMerge]], closing the IVM family's loop:
+  * `q_ivm_agg` proves the batch merge, `q_summary_ivm_e2e` proves maintain-then-serve through the
   * [[graft.plans.SummaryRewrite]], and this runs the maintenance as a
   * checkpointed stream.
   *

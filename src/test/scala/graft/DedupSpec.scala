@@ -626,7 +626,7 @@ class DedupSpec extends SparkSuite {
 
   test("ivf index epoch: save / restart / insert / search equals the " +
     "in-session incremental chain") {
-    // the persisted-epoch law the simhash and BM25 indexes already have
+    // the persisted-epoch law the simhash index already has
     // (StreamingSpec): centroids + lists written to parquet by one
     // session must, after a session boundary, absorb a batch and answer
     // searches byte-identically to the in-session incremental chain

@@ -140,20 +140,31 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
       ("a", 1L, 5.0), ("a", 2L, 5.0), ("a", 3L, 7.0), ("a", 4L, 1.0),
       ("b", 5L, 2.0), ("b", 6L, 2.0), ("b", 7L, 2.0),
       ("c", 8L, 9.0)).toDF("g", "id", "v")
-    val agg = df.groupBy("g")
-      .agg(graft.functions.TopK.topK(col("v"), col("id"), 2).as("top"))
-      .select(col("g"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("g"), (col("pos") + 1).cast("long").as("rank"),
-        col("t.id").as("id"), col("t.value").as("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("g").orderBy(col("v").desc, col("id").asc)
-    val win = df.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 2)
-      .select("g", "rank", "id", "v")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(agg == win, s"aggregate diverged from window: " +
-      s"missing=${win -- agg} extra=${agg -- win}")
+    // Spark's SQL sort ranks NaN above every value and -0.0 equal to 0.0
+    val special = Seq(
+      ("n", 1L, 1.0), ("n", 2L, Double.NaN), ("n", 3L, 0.5),
+      ("z", 4L, -0.0), ("z", 5L, 0.0)).toDF("g", "id", "v")
+    // values compare by bits: NaN != NaN and -0.0 == 0.0 under tuple ==
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
+    def law(in: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+      val agg = rows(in.groupBy("g")
+        .agg(graft.functions.TopK.topK(col("v"), col("id"), k).as("top"))
+        .select(col("g"), posexplode(col("top")).as(Seq("pos", "t")))
+        .select(col("g"), (col("pos") + 1).cast("long").as("rank"),
+          col("t.id").as("id"), col("t.value").as("v")))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("g").orderBy(col("v").desc, col("id").asc)
+      val win = rows(in.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .select("g", "rank", "id", "v"))
+      assert(agg == win, s"k=$k: aggregate diverged from window: " +
+        s"missing=${win -- agg} extra=${agg -- win}")
+    }
+    law(df, 2)
+    law(special, 1)
+    law(special, 2)
     // SQL registration path
     val viaSql = df.createOrReplaceTempView("tk_in")
     val n = spark.sql(
@@ -167,60 +178,6 @@ class ExtensionsSpec extends AnyFunSuite with SparkSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate") && plan.contains("partial_top_k"),
       s"top_k did not plan as a partial object-hash aggregate:\n${plan.take(1200)}")
-  }
-
-  test("top_k_long_payload == window formulation; payload inert in ordering") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // planted ties: equal values break by id ASC; payloads chosen so a
-    // payload-aware ordering would visibly reorder (worst payload on the
-    // best row)
-    val df = Seq(
-      ("a", 1L, 50L, 999L), ("a", 2L, 50L, 0L), ("a", 3L, 70L, 1L),
-      ("a", 4L, 10L, 500L),
-      ("b", 5L, 20L, 3L), ("b", 6L, 20L, 2L), ("b", 7L, 20L, 1L),
-      ("c", 8L, 90L, 42L)).toDF("g", "id", "v", "p")
-    val agg = df.groupBy("g")
-      .agg(graft.functions.TopK.topKLongPayload(
-        col("v"), col("id"), col("p"), 2).as("top"))
-      .select(col("g"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("g"), (col("pos") + 1).cast("long").as("rank"),
-        col("t.id").as("id"), col("t.value").as("v"),
-        col("t.payload").as("p"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toSet
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("g").orderBy(col("v").desc, col("id").asc)
-    val win = df.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 2)
-      .select("g", "rank", "id", "v", "p")
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toSet
-    assert(agg == win, s"payload top-k diverged from window: " +
-      s"missing=${win -- agg} extra=${agg -- win}")
-    // payload NULLABILITY cannot change membership: a null payload keeps
-    // its row with sentinel 0 (the coalesced-null a join-back would give)
-    val withNull = Seq(("a", 1L, 50L, Some(9L)), ("a", 2L, 70L, None),
-      ("a", 3L, 60L, Some(7L))).toDF("g", "id", "v", "p")
-    val topNull = withNull.groupBy("g")
-      .agg(graft.functions.TopK.topKLongPayload(
-        col("v"), col("id"), col("p"), 2).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t.id"), col("t.payload"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(topNull == Set((2L, 0L), (3L, 7L)),
-      s"null payload changed top-k membership: $topNull")
-    // scale shape unchanged: partial object-hash aggregate, not a window
-    val plan = df.groupBy("g")
-      .agg(graft.functions.TopK.topKLongPayload(
-        col("v"), col("id"), col("p"), 2).as("top"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate") &&
-      plan.contains("partial_top_k_long_payload"),
-      s"payload top_k did not plan as a partial object-hash aggregate:\n${
-        plan.take(1200)}")
   }
 
   test("heavy_hitters SQL registration: exact regime + partial object-hash plan") {

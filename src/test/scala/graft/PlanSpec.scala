@@ -419,13 +419,6 @@ class PlanSpec extends SparkSuite {
       s"offsets/sizes no longer broadcast:\n${plan.take(1500)}")
   }
 
-  test("q_maxscore_prune: probe and threshold broadcast; no nested loop beyond scalars") {
-    val plan = formatted("q_maxscore_prune")
-    val bc = "BroadcastExchange".r.findAllIn(plan).size
-    assert(bc >= 3, s"expected qt/qdf/threshold broadcasts, saw $bc:\n${plan.take(1500)}")
-    assert(!plan.contains("CartesianProduct"))
-  }
-
   test("no registered query plans a cartesian product") {
     // the two deliberate scalar-broadcast crossJoins in the library are
     // 1-row broadcasts, which Spark plans as BroadcastNestedLoopJoin with

@@ -516,106 +516,10 @@ class StreamingSpec extends SparkSuite {
       "point-in-time streaming enrichment diverged from the batch as-of join")
   }
 
-  test("streaming index maintenance equals the batch full rebuild") {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graftidx").toFile.getAbsolutePath
-    val docs = graft.core.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    assert(docs.length >= 3)
-    val src = MemoryStream[(Long, String)]
-    val stream = src.toDF().toDF("doc_id", "text")
-    def run(): Unit = graft.streaming.IndexStream.runIndexMaintenance(
-      spark, stream, s"$tmp/store", s"$tmp/ckpt")
-    // three arrival batches — df/stats must merge across segments
-    val cuts = Seq(docs.length / 3, 2 * docs.length / 3, docs.length)
-    var lo = 0
-    cuts.foreach { hi => src.addData(docs.slice(lo, hi).toSeq); run(); lo = hi }
-    val streamed = graft.streaming.IndexStream.loadIndex(spark, s"$tmp/store")
-    val full = graft.ops.Retrieval.buildBm25Index(
-      graft.core.Tables.documents(spark, sf))
-    // df and stats sum-merge to the batch-rebuild values exactly
-    assert(streamed.df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      == full.df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-    assert(streamed.stats.collect().map(_.toSeq).toSeq
-      == full.stats.collect().map(_.toSeq).toSeq)
-    // and the index ANSWERS QUERIES identically: same BM25 top-k
-    def topk(i: graft.ops.Retrieval.Bm25Index) =
-      graft.ops.Retrieval.bm25TopKFromScores(
-          graft.ops.Retrieval.bm25ScoresFromIndex(i, col("doc_id") < 3, 5), 10)
-        .collect().map(_.toSeq).toSet
-    val (g, e) = (topk(streamed), topk(full))
-    assert(g.nonEmpty && g == e,
-      "streamed index diverged from the batch rebuild")
-  }
-
-  test("index store resumes across a session boundary equal to one in-session chain") {
-    // the shipped-index contract (ops.Retrieval scaladoc): nothing the
-    // maintenance needs lives in session memory — the store on disk IS
-    // the index. Batches 1-2 run in the suite session; the boundary
-    // severs every session-scoped cache and plan (a new session +
-    // clearCache — an in-JVM spark.stop()/restart would kill the shared
-    // fixture for every later suite, and the checkpoint protocol already
-    // covers process crash separately); batch 3 appends from the NEW
-    // session; the resumed store must answer byte-identically to the
-    // batch full rebuild over everything ever streamed.
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val tmp = Files.createTempDirectory("graftidxresume").toFile.getAbsolutePath
-    val docs = graft.core.Tables.documents(spark, sf)
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    val cut1 = docs.length / 3
-    val cut2 = 2 * docs.length / 3
-    locally {
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val src = MemoryStream[(Long, String)]
-      src.addData(docs.take(cut1).toSeq)
-      graft.streaming.IndexStream.runIndexMaintenance(
-        spark, src.toDF().toDF("doc_id", "text"), s"$tmp/store", s"$tmp/ckptA")
-      src.addData(docs.slice(cut1, cut2).toSeq)
-      graft.streaming.IndexStream.runIndexMaintenance(
-        spark, src.toDF().toDF("doc_id", "text"), s"$tmp/store", s"$tmp/ckptA")
-    }
-    // ---- restart boundary ----
-    graft.core.SharedFrames.clear()
-    spark.catalog.clearCache()
-    val sparkB = spark.newSession()
-    locally {
-      implicit val sqlCtx = sparkB.sqlContext
-      import sparkB.implicits._
-      val srcB = MemoryStream[(Long, String)]
-      srcB.addData(docs.drop(cut2).toSeq)
-      graft.streaming.IndexStream.runIndexMaintenance(
-        sparkB, srcB.toDF().toDF("doc_id", "text"), s"$tmp/store", s"$tmp/ckptB")
-    }
-    val resumed = graft.streaming.IndexStream.loadIndex(sparkB, s"$tmp/store")
-    val full = graft.ops.Retrieval.buildBm25Index(
-      graft.core.Tables.documents(sparkB, sf))
-    assert(resumed.df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      == full.df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      "resumed df diverged from the full rebuild")
-    assert(resumed.stats.collect().map(_.toSeq).toSeq
-      == full.stats.collect().map(_.toSeq).toSeq,
-      "resumed stats diverged from the full rebuild")
-    def topk(i: graft.ops.Retrieval.Bm25Index) =
-      graft.ops.Retrieval.bm25TopKFromScores(
-          graft.ops.Retrieval.bm25ScoresFromIndex(i, col("doc_id") < 3, 5), 10)
-        .collect().map(_.toSeq).toSet
-    val (g, e) = (topk(resumed), topk(full))
-    assert(g.nonEmpty && g == e,
-      "resumed index answers queries differently from the full rebuild")
-    graft.core.SharedFrames.clear()
-  }
-
   test("simhash ingest-dedup index resumes across a session boundary") {
-    // same contract for the near-dup family: the phash/simhash index is
-    // parquet on disk; a batch screened by a resumed session suppresses
-    // exactly what the in-session chain would have suppressed.
+    // the phash/simhash index is parquet on disk; a batch screened by a
+    // resumed session suppresses exactly what the in-session chain would
+    // have suppressed.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val tmp = Files.createTempDirectory("graftsimresume").toFile.getAbsolutePath
     val a = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -684,7 +588,7 @@ class StreamingSpec extends SparkSuite {
       graft.streaming.SummaryStream.runSummaryMaintenance(
         stream, Seq("o_orderpriority"), store, s"$tmp/ckptA")
     }
-    // ---- restart boundary (the IndexStream resume discipline) ----
+    // ---- restart boundary: a new session resumes from the store alone ----
     graft.core.SharedFrames.clear()
     spark.catalog.clearCache()
     val sparkB = spark.newSession()
