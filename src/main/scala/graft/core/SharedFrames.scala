@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - '''hygiene''': a bare `persist()` with no matching `unpersist()` is a
   *    slow leak in a long-lived 100 TB job (cached blocks pinned for the
   *    session lifetime). Every persist in the library goes through this
-  *    registry; the runner (`Verify`/`Bench`/a user pipeline) calls
+  *    registry; the runner (`Verify`/a user pipeline) calls
   *    [[clear]] when the batch of queries is done.
   *
   * Keys embed the session identity so a cached frame from a stopped test

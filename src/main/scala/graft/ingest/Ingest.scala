@@ -113,8 +113,6 @@ object Ingest {
       .drop("__rn")
   }
 
-  /** S2: multi-file multi-year scan — per-year CSVs unioned with a
-    * provenance column. */
   /** Small-files compaction: rewrite a (possibly partitioned) parquet
     * dataset with bounded file sizes. At corpus scale an incremental
     * ingest accretes thousands of tiny files per partition, and every
@@ -139,6 +137,8 @@ object Ingest {
       .parquet(outDir)
   }
 
+  /** S2: multi-file multi-year scan — per-year CSVs unioned with a
+    * provenance column. */
   def loadYears(spark: SparkSession, paths: Seq[(Int, String)]): DataFrame =
     paths.map { case (y, p) =>
       readCsv(spark, p).withColumn("file_year", lit(y))

@@ -178,7 +178,7 @@ object ImageHash {
   /** Incremental fingerprint near-dup: the pairs a NEW batch introduces
     * against a persisted fingerprint index — batch-vs-index plus
     * batch-vs-batch per band, never index x index (the [[graft.ops.Dedup
-    * .incrementalSimhashPairs]] shape for the image/audio detectors; any
+    * .incrementalSimhashPairs]] shape for the image detector; any
     * frame with doc_id + p0..p3 works). Per-batch cost is
     * O(batch x band collision rate); the result equals the full banded
     * join restricted to batch-touching pairs (fingerprints are per-doc,

@@ -6,14 +6,14 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column plumbing: media as opaque `binary` payloads with typed
-  * metadata, decoded/feature-extracted partition-wise.
+/** Multimodal column plumbing: media as opaque `binary` payloads with a
+  * type tag, decoded partition-wise.
   *
-  * Image dimension decode is REAL for PNG and JPEG (pure-JVM header
-  * parsing, see [[ImageHeaders]] — no codec dependency). Payloads in
-  * formats without a parser fall back to a deterministic md5-derived
-  * pseudo-decode, which keeps the feature values oracle-reproducible on
-  * the synthetic (text-byte) test corpus.
+  * GIF payloads get a REAL frame walk ([[GifHeaders.gifInfo]]: logical
+  * screen, per-frame geometry, delays and each frame's own data bytes;
+  * pure-JVM, no codec dependency). Other payloads fall back to a
+  * deterministic md5-derived stand-in, which keeps the feature values
+  * oracle-reproducible on the synthetic (text-byte) test corpus.
   *
   * At scale: payloads dominate row size, so feature extraction runs before
   * any wide shuffle, the codec (here the MessageDigest) is allocated once
@@ -23,39 +23,6 @@ import org.apache.spark.sql.functions._
 object Multimodal {
 
   case class MediaRecord(doc_id: Long, payload: Array[Byte], media_type: String)
-
-  case class MediaFeatures(
-      doc_id: Long,
-      media_type: String,
-      byte_len: Long,
-      checksum: String,
-      width: Int,
-      height: Int,
-      n_frames: Int)
-
-  /** Real media ingestion: one row per file via Spark's `binaryFile`
-    * source — (path, modificationTime, length, content). This is how
-    * image/audio/video corpora actually enter the pipeline at scale;
-    * doc_id is a stable hash of the file path (collision-checked by the
-    * caller if ids must be dense), media_type from the extension, and
-    * the payload feeds the same [[decodeFeatures]] partition shape the
-    * synthetic corpus uses. The source prunes `content` when a query
-    * only selects metadata columns, so listings stay cheap. */
-  def readMedia(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(
-        // sign-bit mask, NOT abs(): abs(Long.MinValue) wraps negative in
-        // non-ANSI mode, and downstream (media-type tagging, doc_id % 3
-        // conventions) assumes non-negative ids
-        xxhash64(col("path")).bitwiseAND(lit(Long.MaxValue)).as("doc_id"),
-        col("path"),
-        col("content").as("payload"),
-        when(lower(col("path")).rlike("\\.(png|jpe?g|gif|bmp|webp)$"), "image")
-          .when(lower(col("path")).rlike("\\.(wav|mp3|flac|ogg)$"), "audio")
-          .when(lower(col("path")).rlike("\\.(mp4|mkv|webm|avi)$"), "video")
-          .otherwise("binary").as("media_type"))
 
   /** Wrap a text table as fake media payloads (binary column + type tag). */
   def asMedia(docs: DataFrame): DataFrame =
@@ -145,653 +112,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  case class AudioFeatures(
-      doc_id: Long,
-      byte_len: Long,
-      checksum: String,
-      sample_rate: Int,
-      channels: Int,
-      bits_per_sample: Int,
-      n_samples: Long,
-      duration_ms: Long)
-
-  /** Audio feature decoder: REAL header parse for WAV/RIFF payloads
-    * ([[AudioHeaders.wavInfo]] — sample rate / channels / bit depth /
-    * sample count straight from the fmt and data chunks, no codec
-    * dependency); other payloads get the deterministic md5-derived
-    * stand-in (sample_rate in 8000..47999 so the duration arithmetic
-    * never divides by zero), which is what the oracle-gated `q_mm_audio`
-    * pins on the text-byte corpus. Same partition shape as
-    * [[decodeFeatures]]: one digest per partition, payload dropped from
-    * the output. */
-  def decodeAudio(spark: SparkSession, media: DataFrame): Dataset[AudioFeatures] = {
-    import spark.implicits._
-    media.filter(col("media_type") === "audio").as[MediaRecord].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5") // per-partition "codec"
-      it.map { r =>
-        val digest = md.digest(r.payload)
-        md.reset()
-        val hex = digest.map(b => f"${b & 0xff}%02x").mkString
-        val (rate, channels, bits, nSamples) =
-          AudioHeaders.wavInfo(r.payload).getOrElse {
-            val pseudoRate = 8000 + Integer.parseInt(hex.substring(4, 8), 16) % 40000
-            val pseudoCh = Integer.parseInt(hex.substring(8, 9), 16) % 2 + 1
-            val pseudoBits = 8 * (Integer.parseInt(hex.substring(9, 10), 16) % 2 + 1)
-            (pseudoRate, pseudoCh, pseudoBits, r.payload.length.toLong)
-          }
-        AudioFeatures(
-          doc_id = r.doc_id,
-          byte_len = r.payload.length.toLong,
-          checksum = hex,
-          sample_rate = rate,
-          channels = channels,
-          bits_per_sample = bits,
-          n_samples = nSamples,
-          duration_ms = nSamples * 1000L / rate)
-      }
-    }
-  }
-
-  case class VideoFeatures(
-      doc_id: Long,
-      byte_len: Long,
-      checksum: String,
-      timescale: Int,
-      duration_ticks: Long,
-      duration_ms: Long)
-
-  /** Video feature decoder: REAL container parse for MP4/ISO-BMFF
-    * payloads ([[VideoHeaders.mp4Info]] — movie timescale and duration
-    * straight from the moov/mvhd box, no codec dependency); other
-    * payloads get the md5-derived stand-in (timescale in 600..90599 —
-    * the conventional mvhd range — so the duration arithmetic never
-    * divides by zero), which is what the oracle-gated `q_mm_video` pins
-    * on the text-byte corpus. */
-  def decodeVideo(spark: SparkSession, media: DataFrame): Dataset[VideoFeatures] = {
-    import spark.implicits._
-    media.filter(col("media_type") === "video").as[MediaRecord].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5") // per-partition "codec"
-      it.map { r =>
-        val digest = md.digest(r.payload)
-        md.reset()
-        val hex = digest.map(b => f"${b & 0xff}%02x").mkString
-        val (scale, ticks) = VideoHeaders.mp4Info(r.payload).getOrElse {
-          (600 + Integer.parseInt(hex.substring(4, 8), 16) % 90000,
-            r.payload.length.toLong)
-        }
-        VideoFeatures(
-          doc_id = r.doc_id,
-          byte_len = r.payload.length.toLong,
-          checksum = hex,
-          timescale = scale,
-          duration_ticks = ticks,
-          duration_ms = ticks * 1000L / scale)
-      }
-    }
-  }
-
-  case class AviFrameFeature(
-      doc_id: Long,
-      frame_idx: Int,
-      n_frames: Int,
-      codec: String,
-      frame_bytes: Long,
-      width: Int,
-      height: Int,
-      luma_sum: Option[Long],
-      mean_luma: Option[Long])
-
-  /** REAL per-frame video decode for MJPEG/raw-in-AVI payloads
-    * ([[AviHeaders.aviInfo]] walks the RIFF container to each movi frame's
-    * own byte range): "dc" frames are complete JPEGs whose dimensions come
-    * from the per-frame SOF parse ([[ImageHeaders.jpegDims]] — NOT the
-    * container header, which may disagree), "db" frames are 8-bit luma
-    * rasters summed exactly. Non-AVI payloads are dropped (typed decode
-    * surface, like [[decodeGifFrames]]). H.264-in-MP4 stays out of scope —
-    * a pure-JVM entropy decoder is not reasonable; MJPEG/raw is the
-    * codec-free container path real pipelines use for frame extraction.
-    * Same partition shape as every decoder here: parse inside the
-    * partition, emit features only, payload bytes never duplicated per
-    * frame or shuffled. */
-  def decodeAviFrames(spark: SparkSession, media: DataFrame): Dataset[AviFrameFeature] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.flatMap { r =>
-        AviHeaders.aviInfo(r.payload).iterator.flatMap { info =>
-          // video chunks only: audio (wb) streams go through decodeAviAudio
-          info.frames.iterator.filter(f => f.codeType != "wb")
-            .zipWithIndex.map { case (f, i) =>
-            val nBytes = (f.dataEnd - f.dataStart).toLong
-            if (f.codeType == "dc") {
-              val (w, h) = ImageHeaders.jpegDims(java.util.Arrays.copyOfRange(
-                r.payload, f.dataStart, f.dataEnd)).getOrElse((-1, -1))
-              AviFrameFeature(r.doc_id, i, info.frames.length, "mjpeg",
-                nBytes, w, h, None, None)
-            } else {
-              val sum = AviHeaders.byteSum(r.payload, f.dataStart, f.dataEnd)
-              AviFrameFeature(r.doc_id, i, info.frames.length, "raw",
-                nBytes, info.width, info.height,
-                Some(sum), Some(sum / math.max(1L, nBytes)))
-            }
-          }
-        }
-      }
-    }
-  }
-
-  case class AviPixelFrame(
-      doc_id: Long,
-      frame_idx: Int,
-      width: Int,
-      height: Int,
-      n_pixels: Long,
-      luma_sum: Long)
-
-  /** PIXEL-level MJPEG video decode: the RIFF walk hands each 00dc
-    * frame's byte range to the full baseline JPEG decoder
-    * ([[Jpeg.decode]] — Huffman + dequant + IDCT), so per-frame output
-    * is real decoded luma, not header echo. Container walk and codec
-    * both run inside the partition; a frame row carries four numbers.
-    * Frames the decoder refuses (non-baseline) are skipped — the honest
-    * degradation at corpus scale. */
-  def decodeAviPixelFrames(spark: SparkSession, media: DataFrame): Dataset[AviPixelFrame] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.flatMap { r =>
-        AviHeaders.aviInfo(r.payload).iterator.flatMap { info =>
-          info.frames.iterator.zipWithIndex
-            .filter(_._1.codeType == "dc")
-            .flatMap { case (f, i) =>
-              Jpeg.decode(java.util.Arrays.copyOfRange(
-                r.payload, f.dataStart, f.dataEnd)).map { img =>
-                AviPixelFrame(r.doc_id, i, img.width, img.height,
-                  img.gray.length.toLong, img.gray.map(_.toLong).sum)
-              }
-            }
-        }
-      }
-    }
-  }
-
-  case class Mp4PixelFrame(
-      doc_id: Long,
-      frame_idx: Int,
-      chunk_idx: Int,
-      n_chunks: Int,
-      codec: String,
-      width: Int,
-      height: Int,
-      n_pixels: Long,
-      luma_sum: Long)
-
-  /** PIXEL-level MJPEG-in-MP4 decode: [[VideoHeaders.mp4Track]] walks the
-    * stsd/stsc/stsz/stco sample tables to every sample's absolute byte
-    * range, and each `jpeg`-fourcc sample goes through the full baseline
-    * JPEG decoder ([[Jpeg.decode]] — Huffman + dequant + IDCT). This
-    * closes the last md5 stand-in: MP4 frame payloads now real-decode
-    * via the same codec the AVI family uses; H.264 entropy decode stays
-    * documented out of scope. Frames the decoder refuses are skipped —
-    * the honest degradation at corpus scale. Same partition shape as
-    * every decoder here: walk + codec inside the partition, a frame row
-    * carries numbers only. */
-  def decodeMp4PixelFrames(spark: SparkSession, media: DataFrame): Dataset[Mp4PixelFrame] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.flatMap { r =>
-        VideoHeaders.mp4Track(r.payload).iterator.flatMap { t =>
-          if (t.codec != "jpeg") Iterator.empty
-          else t.samples.iterator.zipWithIndex.flatMap { case (sm, i) =>
-            Jpeg.decode(java.util.Arrays.copyOfRange(
-              r.payload, sm.start, sm.end)).map { img =>
-              Mp4PixelFrame(r.doc_id, i, sm.chunkIdx, t.nChunks, "jpeg",
-                img.width, img.height,
-                img.gray.length.toLong, img.gray.map(_.toLong).sum)
-            }
-          }
-        }
-      }
-    }
-  }
-
-  case class AviAudioTrack(
-      doc_id: Long,
-      n_chunks: Int,
-      n_samples: Long,
-      abs_sum: Long,
-      a0: Int, a1: Int, a2: Int, a3: Int)
-
-  /** AUDIO track extraction from interleaved AVI containers: the RIFF
-    * walk surfaces the `##wb` chunks, their payloads concatenate (in
-    * walk order) into the stream's 16-bit PCM track, and the SAME
-    * 65-window energy fingerprint that serves standalone WAV audio
-    * ([[AudioHash.energyBands]]) fingerprints the embedded track — one
-    * pipeline across container formats. Demux + fingerprint run inside
-    * the partition; a track row carries 4 band ints. */
-  def decodeAviAudio(spark: SparkSession, media: DataFrame): Dataset[AviAudioTrack] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      it.flatMap { r =>
-        AviHeaders.aviInfo(r.payload).iterator.flatMap { info =>
-          val wb = info.frames.filter(_.codeType == "wb")
-          if (wb.isEmpty) None
-          else {
-            val nBytes = wb.map(f => f.dataEnd - f.dataStart).sum
-            val s = new Array[Int](nBytes / 2)
-            var o = 0
-            wb.foreach { f =>
-              var i = f.dataStart
-              while (i + 1 < f.dataEnd) {
-                // little-endian signed 16-bit
-                s(o) = ((r.payload(i) & 0xff) | (r.payload(i + 1) << 8)).toShort.toInt
-                o += 1; i += 2
-              }
-            }
-            AudioHash.energyBands(s).map { case (total, (a0, a1, a2, a3)) =>
-              AviAudioTrack(r.doc_id, wb.length, s.length.toLong, total,
-                a0, a1, a2, a3)
-            }
-          }
-        }
-      }
-    }
-  }
-
-  /** Feature decoder. Dimensions come from a REAL header parse when the
-    * payload is PNG or JPEG ([[ImageHeaders.dims]]); other formats fall
-    * back to the deterministic md5-derived pseudo-decode (documented
-    * stand-in for codecs this environment lacks — audio/video). The
-    * partition iteration shape (one codec instance per partition,
-    * streaming rows, payload dropped from the output) is the production
-    * shape either way. */
-  def decodeFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRecord].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5") // per-partition "codec"
-      it.map { r =>
-        val digest = md.digest(r.payload)
-        md.reset()
-        val hex = digest.map(b => f"${b & 0xff}%02x").mkString
-        val (width, height) = ImageHeaders.dims(r.payload).getOrElse(
-          // non-image payload: deterministic checksum-derived stand-in
-          (Integer.parseInt(hex.substring(0, 2), 16),
-            Integer.parseInt(hex.substring(2, 4), 16)))
-        MediaFeatures(
-          doc_id = r.doc_id,
-          media_type = r.media_type,
-          byte_len = r.payload.length.toLong,
-          checksum = hex,
-          width = width,
-          height = height,
-          n_frames = (r.payload.length % 7 + 1).toInt)
-      }
-    }
-  }
-}
-
-/** Pure-JVM image header decoding — dimension fields live at fixed or
-  * walkable offsets, so no codec library is needed to read them.
-  *
-  * Formats:
-  *  - PNG: 8-byte signature, then the IHDR chunk (the spec requires it
-  *    first): 4-byte big-endian length, ASCII "IHDR", 4-byte BE width,
-  *    4-byte BE height.
-  *  - JPEG: SOI marker FF D8, then a marker-segment walk (2-byte BE
-  *    lengths including themselves) to the first SOF frame header
-  *    (C0-CF minus C4/C8/CC), which carries precision(1), height(2 BE),
-  *    width(2 BE).
-  */
-object ImageHeaders {
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-
-  private val PngSig: Array[Int] =
-    Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-
-  /** (width, height) from a PNG IHDR, or None if not a (plausible) PNG. */
-  def pngDims(b: Array[Byte]): Option[(Int, Int)] =
-    if (b.length < 24 ||
-        (0 until 8).exists(i => (b(i) & 0xff) != PngSig(i)) ||
-        b(12) != 'I' || b(13) != 'H' || b(14) != 'D' || b(15) != 'R')
-      None
-    else {
-      val w = be32(b, 16)
-      val h = be32(b, 20)
-      if (w > 0 && h > 0) Some((w, h)) else None
-    }
-
-  /** (width, height) from the first JPEG SOF marker, or None. */
-  def jpegDims(b: Array[Byte]): Option[(Int, Int)] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
-      return None
-    var i = 2
-    while (i + 3 < b.length) {
-      if ((b(i) & 0xff) != 0xff) return None // lost marker sync
-      var j = i
-      while (j < b.length && (b(j) & 0xff) == 0xff) j += 1 // fill bytes
-      if (j >= b.length) return None
-      val marker = b(j) & 0xff
-      marker match {
-        case m if (m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 && m != 0xcc =>
-          // SOF: len(2) precision(1) height(2) width(2)
-          if (j + 7 >= b.length) return None
-          val h = be16(b, j + 4)
-          val w = be16(b, j + 6)
-          return if (w > 0 && h > 0) Some((w, h)) else None
-        case 0xd9 | 0xda => return None // EOI / start of scan: no SOF seen
-        case m if (m >= 0xd0 && m <= 0xd7) || m == 0x01 =>
-          i = j + 1 // standalone marker, no length field
-        case _ =>
-          if (j + 2 >= b.length) return None
-          val len = be16(b, j + 1)
-          if (len < 2) return None
-          i = j + 1 + len
-      }
-    }
-    None
-  }
-
-  /** First successful header parse across supported formats. */
-  def dims(b: Array[Byte]): Option[(Int, Int)] =
-    pngDims(b).orElse(jpegDims(b))
-}
-
-/** Deterministic WAV fixture encoder — the encoding side of the
-  * `q_mm_audio_fp` oracle gate (mirror of [[GifPixelFixtures]] for
-  * audio). Every 16-bit PCM sample is a pure integer function of
-  * `docId`, so the DuckDB oracle predicts window energies and the
-  * fingerprint without reading a byte; [[AudioHash.pcmSamples]] shares
-  * no code with this writer. Same-`abase` docs are sample-identical
-  * (planted near-dup clusters); docs with `docId % 31 == 0` get a
-  * click every 50 samples (a genuine near-duplicate). */
-private[graft] object AudioFixtures {
-
-  def abase(docId: Long): Int = (docId % 5).toInt
-  def nSamples(docId: Long): Int = 2048 + abase(docId) * 512
-  def sampleRate(docId: Long): Int = 8000 + abase(docId) * 1000
-  def clicky(docId: Long): Boolean = docId % 31 == 0
-
-  /** Sample t: a base-scaled quadratic-residue waveform in [-1000, 1000],
-    * plus a +200 click on every 50th sample for clicky docs. */
-  def sample(docId: Long, t: Int): Int = {
-    val v = ((abase(docId) + 1) * ((t.toLong * t + 3L * t) % 977) % 2001 - 1000).toInt
-    v + (if (clicky(docId) && t % 50 == 0) 200 else 0)
-  }
-
-  def synthWav(docId: Long): Array[Byte] = {
-    val n = nSamples(docId)
-    val out = new java.io.ByteArrayOutputStream(44 + 2 * n)
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v); u8(v >> 8) }
-    def u32(v: Long): Unit = { u8(v.toInt); u8((v >> 8).toInt); u8((v >> 16).toInt); u8((v >> 24).toInt) }
-    def tag4(s: String): Unit = out.write(s.getBytes(StandardCharsets.US_ASCII))
-    val rate = sampleRate(docId)
-    tag4("RIFF"); u32(36L + 2L * n); tag4("WAVE")
-    tag4("fmt "); u32(16)
-    u16(1); u16(1) // PCM, mono
-    u32(rate); u32(rate * 2L) // byte rate
-    u16(2); u16(16) // block align, bits
-    tag4("data"); u32(2L * n)
-    var t = 0
-    while (t < n) { u16(sample(docId, t)); t += 1 }
-    out.toByteArray
-  }
-}
-
-/** Pure-JVM WAV (RIFF) header decoding: "RIFF" + size + "WAVE", then a
-  * chunk walk (4-byte id, 4-byte little-endian size, payload padded to
-  * even length). The "fmt " chunk carries format(2 LE), channels(2 LE),
-  * sample_rate(4 LE), byte_rate(4), block_align(2 LE),
-  * bits_per_sample(2 LE); the "data" chunk size divided by block_align
-  * gives the sample count. */
-object AudioHeaders {
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL)) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
-  private def tag(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)),
-      java.nio.charset.StandardCharsets.US_ASCII)
-
-  /** (sample_rate, channels, bits_per_sample, n_samples) from a WAV
-    * payload, or None if it isn't one (or the fmt/data chunks are
-    * missing/truncated/inconsistent). */
-  def wavInfo(b: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (b.length < 44 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") return None
-    var rate = 0; var channels = 0; var bits = 0; var blockAlign = 0
-    var dataBytes = -1L
-    var i = 12
-    while (i + 8 <= b.length) {
-      val id = tag(b, i)
-      val sz = le32(b, i + 4)
-      if (id == "fmt " && i + 8 + 16 <= b.length && sz >= 16) {
-        channels = le16(b, i + 10)
-        rate = le32(b, i + 12).toInt
-        blockAlign = le16(b, i + 20)
-        bits = le16(b, i + 22)
-      } else if (id == "data") {
-        // size may legitimately exceed what we were handed (truncated
-        // fetch); the header value is still the authoritative length
-        dataBytes = sz
-      }
-      // chunks pad to even offsets; clamp in Long so a huge/corrupt size
-      // can't overflow Int and loop forever
-      val next = i.toLong + 8L + sz + (sz & 1L)
-      i = if (next > b.length) b.length else next.toInt
-    }
-    if (rate > 0 && channels > 0 && blockAlign > 0 && dataBytes >= 0)
-      Some((rate, channels, bits, dataBytes / blockAlign))
-    else None
-  }
-}
-
-/** Pure-JVM MP4 (ISO base media) header decoding: top-level box walk
-  * ([size:4 BE][type:4 ASCII]; size 1 = 64-bit largesize follows, size 0
-  * = to end of file) to the `moov` box, then its children to `mvhd`
-  * (a FullBox: version+flags, then — v0 — ctime(4) mtime(4) timescale(4)
-  * duration(4), or — v1 — 8/8/4/8). */
-object VideoHeaders {
-
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-
-  private def tag(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)),
-      java.nio.charset.StandardCharsets.US_ASCII)
-
-  /** Walk sibling boxes in [from, until) for `boxType`; returns the
-    * payload offset and end, or None. */
-  private def findBox(b: Array[Byte], from: Int, until: Int,
-                      boxType: String): Option[(Int, Int)] = {
-    var i = from
-    while (i + 8 <= until) {
-      val size0 = be32(b, i)
-      val tpe = tag(b, i + 4)
-      val (payload, size) =
-        if (size0 == 1L && i + 16 <= until) (i + 16, be64(b, i + 8))
-        else if (size0 == 0L) (i + 8, (until - i).toLong)
-        else (i + 8, size0)
-      if (size < 8 || i.toLong + size > until) return None // corrupt size
-      if (tpe == boxType) return Some((payload, (i + size).toInt))
-      i = (i + size).toInt
-    }
-    None
-  }
-
-  /** (timescale, duration_ticks) from the moov/mvhd box, or None.
-    * See also [[GifHeaders]] for the GIF frame walk. */
-  def mp4Info(b: Array[Byte]): Option[(Int, Long)] = {
-    // sanity: a real MP4 starts with a box whose type is printable ASCII
-    // (conventionally ftyp); random text bytes fail the size walk below
-    for {
-      (moovStart, moovEnd) <- findBox(b, 0, b.length, "moov")
-      (mvhd, _) <- findBox(b, moovStart, moovEnd, "mvhd")
-      if mvhd + 4 <= b.length
-      version = b(mvhd) & 0xff
-      info <- version match {
-        case 0 if mvhd + 20 <= b.length =>
-          Some((be32(b, mvhd + 12).toInt, be32(b, mvhd + 16)))
-        case 1 if mvhd + 32 <= b.length =>
-          Some((be32(b, mvhd + 20).toInt, be64(b, mvhd + 24)))
-        case _ => None
-      }
-      if info._1 > 0 && info._2 >= 0
-    } yield info
-  }
-
-  /** One sample located purely via the stbl tables: its chunk index and
-    * [start, end) byte range in the file. */
-  case class Mp4Sample(chunkIdx: Int, start: Int, end: Int)
-  case class Mp4Track(codec: String, nChunks: Int, samples: Vector[Mp4Sample])
-
-  /** Sample-table walk — the part of ISO-BMFF that actually locates
-    * media bytes: moov/trak/mdia/minf/stbl, then stsd (codec fourcc of
-    * sample entry 1), stsc (sample-to-chunk runs), stsz (per-sample
-    * sizes, or one fixed size), stco (chunk file offsets), expanded to
-    * per-sample ABSOLUTE byte ranges: chunk c's samples lie back to
-    * back from stco[c], sample counts per chunk from the stsc run in
-    * effect. A miscounted byte anywhere in the walk shifts a sample
-    * range and the downstream codec fails — which is what makes the
-    * walk oracle-gateable. */
-  def mp4Track(b: Array[Byte]): Option[Mp4Track] = for {
-    (moovS, moovE) <- findBox(b, 0, b.length, "moov")
-    (trakS, trakE) <- findBox(b, moovS, moovE, "trak")
-    (mdiaS, mdiaE) <- findBox(b, trakS, trakE, "mdia")
-    (minfS, minfE) <- findBox(b, mdiaS, mdiaE, "minf")
-    (stblS, stblE) <- findBox(b, minfS, minfE, "stbl")
-    (stsd, stsdE) <- findBox(b, stblS, stblE, "stsd")
-    (stsc, stscE) <- findBox(b, stblS, stblE, "stsc")
-    (stsz, stszE) <- findBox(b, stblS, stblE, "stsz")
-    (stco, stcoE) <- findBox(b, stblS, stblE, "stco")
-    track <- expandSamples(b, stsd, stsdE, stsc, stscE, stsz, stszE,
-      stco, stcoE)
-  } yield track
-
-  private def expandSamples(b: Array[Byte], stsd: Int, stsdE: Int,
-                            stsc: Int, stscE: Int, stsz: Int, stszE: Int,
-                            stco: Int, stcoE: Int): Option[Mp4Track] = {
-    // stsd: FullBox ver/flags(4) entry_count(4), entry 1: size(4) fourcc(4)
-    if (stsd + 16 > stsdE || be32(b, stsd + 4) < 1) return None
-    val codec = tag(b, stsd + 12)
-    // stsc: runs of (first_chunk 1-based, samples_per_chunk, desc_idx)
-    val nRuns = be32(b, stsc + 4).toInt
-    if (stsc + 8 + 12 * nRuns > stscE || nRuns < 1) return None
-    val runs = (0 until nRuns).map(k =>
-      (be32(b, stsc + 8 + 12 * k).toInt, be32(b, stsc + 12 + 12 * k).toInt))
-    // stsz: fixed sample_size (0 = per-sample table follows)
-    if (stsz + 12 > stszE) return None
-    val fixed = be32(b, stsz + 4).toInt
-    val nSamples = be32(b, stsz + 8).toInt
-    if (fixed == 0 && stsz + 12 + 4 * nSamples > stszE) return None
-    val sizes =
-      if (fixed != 0) Vector.fill(nSamples)(fixed)
-      else (0 until nSamples).map(k => be32(b, stsz + 12 + 4 * k).toInt).toVector
-    // stco: chunk offsets (absolute file positions)
-    val nChunks = be32(b, stco + 4).toInt
-    if (stco + 8 + 4 * nChunks > stcoE) return None
-    val offs = (0 until nChunks).map(k => be32(b, stco + 8 + 4 * k).toInt)
-    val out = Vector.newBuilder[Mp4Sample]
-    var si = 0
-    var c = 0
-    while (c < nChunks && si < nSamples) {
-      // the stsc run in effect for 1-based chunk c+1
-      val spc = runs.filter(_._1 <= c + 1).lastOption.map(_._2).getOrElse(0)
-      var off = offs(c)
-      var k = 0
-      while (k < spc && si < nSamples) {
-        if (off < 0 || off + sizes(si) > b.length) return None
-        out += Mp4Sample(c, off, off + sizes(si))
-        off += sizes(si); si += 1; k += 1
-      }
-      c += 1
-    }
-    if (si != nSamples) None else Some(Mp4Track(codec, nChunks, out.result()))
-  }
-}
-
-/** Independent MJPEG-in-MP4 fixture muxer: ftyp + mdat (frame JPEGs back
-  * to back) + moov with a REAL sample table — stsd `jpeg` (the QuickTime
-  * Photo-JPEG fourcc), stts, a 2-run stsc (first chunk holds 2 samples,
-  * every later chunk 1 — so the run expansion is exercised, not just a
-  * constant), per-sample stsz, absolute stco offsets. Frame i is the
-  * SAME independently-encoded block-constant baseline JPEG the AVI pixel
-  * family uses ([[JpegFixtures.synthJpeg]] at [[AviFixtures.pxSeed]]),
-  * so the oracle replays decoded luma from the closed form without
-  * touching a byte while the offsets/sizes must be recovered from the
-  * tables alone. */
-private[graft] object Mp4Fixtures {
-
-  def nFrames(docId: Long): Int = (docId % 4).toInt + 2
-
-  private def be32(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-
-  private def box(tpe: String, payload: Array[Byte]*): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(be32(8L + payload.map(_.length).sum))
-    out.write(tpe.getBytes(StandardCharsets.US_ASCII))
-    payload.foreach(out.write)
-    out.toByteArray
-  }
-
-  def synthMjpegMp4(docId: Long): Array[Byte] = {
-    val n = nFrames(docId)
-    val frames = (0 until n).map(i =>
-      JpegFixtures.synthJpeg(AviFixtures.pxSeed(docId, i)))
-    val ftyp = box("ftyp",
-      "isom".getBytes(StandardCharsets.US_ASCII), be32(0),
-      "isom".getBytes(StandardCharsets.US_ASCII))
-    // chunk plan: chunk 0 = samples 0,1; chunk c>0 = sample c+1
-    val nChunks = n - 1
-    val mdatDataOff = ftyp.length + 8
-    val chunkOffs = (0 until nChunks).map { c =>
-      val firstSample = if (c == 0) 0 else c + 1
-      mdatDataOff + frames.take(firstSample).map(_.length).sum
-    }
-    val full = new Array[Byte](0)
-    val mvhd = box("mvhd",
-      be32(0), be32(0), be32(0), be32(90000), be32(3000L * n),
-      new Array[Byte](80)) // rate/volume/matrix/predefined/next_track
-    val tkhd = box("tkhd", be32(0), new Array[Byte](80))
-    val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(90000),
-      be32(3000L * n), be32(0))
-    val hdlr = box("hdlr", be32(0), be32(0),
-      "vide".getBytes(StandardCharsets.US_ASCII), new Array[Byte](13))
-    val stsd = box("stsd", be32(0), be32(1),
-      box("jpeg", new Array[Byte](78))) // VisualSampleEntry body, unread
-    val stts = box("stts", be32(0), be32(1), be32(n.toLong), be32(3000))
-    val stsc =
-      if (n > 2)
-        box("stsc", be32(0), be32(2),
-          be32(1), be32(2), be32(1), // chunks >= 1: 2 samples
-          be32(2), be32(1), be32(1)) // chunks >= 2: 1 sample
-      else box("stsc", be32(0), be32(1), be32(1), be32(2), be32(1))
-    val stsz = box("stsz", be32(0), be32(0), be32(n.toLong),
-      frames.map(f => be32(f.length.toLong)).foldLeft(full)(_ ++ _))
-    val stco = box("stco", be32(0), be32(nChunks.toLong),
-      chunkOffs.map(o => be32(o.toLong)).foldLeft(full)(_ ++ _))
-    val stbl = box("stbl", stsd, stts, stsc, stsz, stco)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd, hdlr, minf)
-    val trak = box("trak", tkhd, mdia)
-    val moov = box("moov", mvhd, trak)
-    val mdat = box("mdat", frames.foldLeft(full)(_ ++ _))
-    ftyp ++ mdat ++ moov
   }
 }
 

@@ -150,8 +150,26 @@ object OrderStats {
     * that can produce them handle absence on their side. Returns
     * (strata..., tag, rank_target, `value`, `id`, n).
     *
+    * Contract: `value` and `id` are non-null; a stratum whose values are
+    * all null yields no rows. `knownSize` is an honest upper bound on
+    * df's rows, used ONLY to gate round planning (AQE off below reducer
+    * scale, [[Rounds.scopedForSize]], same policy as the iterative ops).
+    *
+    * Grid: PER-STRATUM (unlike valueRankedBy's shared grid), because
+    * strata may carry wildly different value ranges (RFM stacks
+    * recency-days next to revenue-cents) and a shared grid would collapse
+    * a narrow-range stratum into one cell. The per-stratum (lo, step)
+    * parameters stay IN THE PLAN as a broadcast-joined ≤|strata|-row
+    * frame, so the whole lookup — grid probe, cell counts, locate,
+    * matched-cell rank — runs under ONE bounded driver action (the
+    * element collect). Cell geometry is step division, cell = (v − lo)
+    * div step with step = ceil(span/cells): monotone non-decreasing in v,
+    * the only property the rank arithmetic relies on, and free of any
+    * span·cells product that could overflow; span ≥ 0 is asserted in-plan
+    * on the tiny frame (DECIMAL interior, no long wrap for any lo/hi).
+    *
     * The result is a LITERAL LocalRelation: the ≤|strata|·|formulas|
-    * boundary rows are pulled through two audited bounded collects (the
+    * boundary rows are pulled through one audited bounded collect (the
     * IVF-seed class — cardinality is fixed by the call, never by data).
     * Deliberate, for plan hygiene: consumers embed the boundary frame in
     * broadcasts and chained stages (RFM chains three), and a lineage-
@@ -160,125 +178,38 @@ object OrderStats {
     * projection a constant-time compare. */
   def rankElements(df: DataFrame, strata: Seq[String], value: String,
                    id: String, formulas: Seq[(String, String)],
-                   cells: Int = GridCells,
-                   knownSize: Option[Long] = None): DataFrame = knownSize match {
-    case Some(n) =>
-      // ONE-ACTION path (callers that can vouch an input size bound):
-      // the per-stratum (lo, hi) grid parameters stay IN THE PLAN as a
-      // broadcast-joined tiny frame instead of a driver collect, so the
-      // whole lookup — grid probe, cell counts, locate, matched-cell
-      // rank — executes under a single bounded driver action (the
-      // element collect). Besides deleting a driver job per call, this
-      // removes the per-stratum Catalyst when-chain and the
-      // strata-cardinality driver collect the two-action path carries
-      // (a data-dependent stratum column no longer grows either).
-      // `n` is an honest upper bound on df's rows, used ONLY to gate
-      // round planning (AQE off below reducer scale, same policy as the
-      // iterative ops).
-      Rounds.scopedForSize(df.sparkSession, n) {
-        rankElementsOneAction(df, strata, value, id, formulas, cells)
-      }
-    case None => rankElementsTwoAction(df, strata, value, id, formulas, cells)
-  }
-
-  private def rankElementsTwoAction(
-      df: DataFrame, strata: Seq[String], value: String,
-      id: String, formulas: Seq[(String, String)],
-      cells: Int): DataFrame = {
-    // PER-STRATUM grids (unlike valueRankedBy's shared grid): strata here
-    // may carry wildly different value ranges (RFM stacks recency-days
-    // next to revenue-cents), and a shared grid would collapse a
-    // narrow-range stratum into one cell — one reducer ranks the whole
-    // stratum. The per-stratum (lo, hi) pull is ≤|strata| rows, the same
-    // driver-bounded class as the |strata|·|formulas| result collect.
-    // Stratum counts ride the SAME pass for free: they size the
-    // round-planning scope below (and nothing else — n still comes from
-    // the cell-count frame so the lookup plan is unchanged).
-    val mmRows = df.groupBy(strata.map(col): _*)
-      .agg(min(col(value).cast("long")).as("__lo"),
-        max(col(value).cast("long")).as("__hi"),
-        count(col(value)).as("__n"))
-      .collect()
-      .filter(!_.isNullAt(strata.size))
-    def emptyOut = df.limit(0).select(
-      strata.map(col) ++ Seq(lit("").as("tag"), lit(0L).as("rank_target"),
-        col(value), col(id), lit(0L).as("n")): _*)
-    if (mmRows.isEmpty) return emptyOut
-    // Sub-reducer-scale inputs run the whole bounded lookup (cell counts,
-    // locate, matched-cell rank, element collect) as ONE un-replanned job:
-    // AQE's per-stage materialization turns this ~5-exchange interior into
-    // as many driver jobs of pure fixed cost at local scale. The gate is
-    // the measured row count from the pull above — a real corpus keeps AQE
-    // on (skew-splitting the cell window is exactly what it needs), same
-    // policy and threshold as the iterative ops ([[Rounds.scopedForSize]]).
-    val nTotal = mmRows.map(_.getAs[Long]("__n")).sum
-    Rounds.scopedForSize(df.sparkSession, nTotal) {
-    val cellOf = mmRows.map { r =>
-      val (lo, hi) = (r.getAs[Long]("__lo"), r.getAs[Long]("__hi"))
-      val span = hi - lo + 1
-      require(span > 0 && span <= Long.MaxValue / cells,
-        s"value range [$lo,$hi] x $cells cells overflows the grid arithmetic")
-      val cond = strata.map(c => col(c) <=> lit(r.getAs[Any](c)))
-        .reduceOption(_ && _).getOrElse(lit(true))
-      (cond,
-        expr(s"CAST(((`$value` - ${lo}L) * ${cells}L) div ${span}L AS INT)"))
+                   knownSize: Long,
+                   cells: Int = GridCells): DataFrame =
+    Rounds.scopedForSize(df.sparkSession, knownSize) {
+      val mm = df.groupBy(strata.map(col): _*)
+        .agg(min(col(value).cast("long")).as("__lo"),
+          max(col(value).cast("long")).as("__hi"))
+        .filter(col("__lo").isNotNull)
+        // ceil(span/cells) = (hi − lo + cells) div cells, DECIMAL-widened
+        // on this ≤|strata|-row frame; assert_true fails an un-griddable
+        // range (hi < lo is impossible from min/max — the assert
+        // documents and enforces it)
+        .withColumn("__step", when(
+          assert_true(col("__hi") >= col("__lo")).isNull,
+          expr(s"CAST((CAST(__hi AS DECIMAL(38,0)) - __lo + $cells) div $cells AS BIGINT)")))
+        .withColumn("__step", greatest(col("__step"), lit(1L)))
+      val mmj = mm.select(
+        strata.map(c => col(c).as(s"__mm_$c")) ++
+          Seq(col("__lo"), col("__step")): _*)
+      // an all-null stratum has no grid row, so its rows drop here
+      val joined =
+        if (strata.isEmpty) df.crossJoin(broadcast(mmj))
+        else df.join(broadcast(mmj),
+          strata.map(c => col(c) <=> col(s"__mm_$c")).reduce(_ && _))
+      val withCell = joined
+        .withColumn("__cell",
+          expr(s"CAST(((`$value` - __lo) div __step) AS INT)"))
+        .drop(strata.map(c => s"__mm_$c") ++ Seq("__lo", "__step"): _*)
+      boundaryLookup(withCell, strata, value, id, formulas)
     }
-    val withCell = df.withColumn("__cell",
-      cellOf.foldRight(lit(-1)) { case ((cond, cell), acc) =>
-        when(cond, cell).otherwise(acc)
-      })
-    boundaryLookup(withCell, strata, value, id, formulas)
-    }
-  }
 
-  /** One-action variant of the boundary lookup ([[rankElements]] with
-    * `knownSize`): the per-stratum grid parameters stay IN THE PLAN as a
-    * broadcast-joined ≤|strata|-row frame instead of a driver collect.
-    * Cell geometry is step-division — cell = (v − lo) div step with
-    * step = ceil(span/cells) — instead of the two-action path's
-    * proportional map ((v − lo)·cells div span): both are monotone
-    * non-decreasing in v, which is the only property the rank arithmetic
-    * relies on (cells only partition the strict (v, id) order into
-    * contiguous runs), so the returned elements are identical. Step
-    * division needs no span·cells product, so the product-overflow
-    * require() has nothing to guard; span ≥ 0 is asserted in-plan on the
-    * tiny frame (DECIMAL interior, no long wrap for any lo/hi).
-    * Rows of a stratum whose values are ALL null drop at the inner grid
-    * join (the two-action path routes them to a sentinel cell; `value`
-    * and `id` are non-null by the primitive's contract, so callers see
-    * no difference — law-checked in OrderStatsSpec). */
-  private def rankElementsOneAction(
-      df: DataFrame, strata: Seq[String], value: String,
-      id: String, formulas: Seq[(String, String)],
-      cells: Int): DataFrame = {
-    val mm = df.groupBy(strata.map(col): _*)
-      .agg(min(col(value).cast("long")).as("__lo"),
-        max(col(value).cast("long")).as("__hi"))
-      .filter(col("__lo").isNotNull)
-      // ceil(span/cells) = (hi − lo + cells) div cells, DECIMAL-widened
-      // on this ≤|strata|-row frame; assert_true preserves the old
-      // require()'s failure mode for an un-griddable range (hi < lo is
-      // impossible from min/max — the assert documents and enforces it)
-      .withColumn("__step", when(
-        assert_true(col("__hi") >= col("__lo")).isNull,
-        expr(s"CAST((CAST(__hi AS DECIMAL(38,0)) - __lo + $cells) div $cells AS BIGINT)")))
-      .withColumn("__step", greatest(col("__step"), lit(1L)))
-    val mmj = mm.select(
-      strata.map(c => col(c).as(s"__mm_$c")) ++
-        Seq(col("__lo"), col("__step")): _*)
-    val joined =
-      if (strata.isEmpty) df.crossJoin(broadcast(mmj))
-      else df.join(broadcast(mmj),
-        strata.map(c => col(c) <=> col(s"__mm_$c")).reduce(_ && _))
-    val withCell = joined
-      .withColumn("__cell",
-        expr(s"CAST(((`$value` - __lo) div __step) AS INT)"))
-      .drop(strata.map(c => s"__mm_$c") ++ Seq("__lo", "__step", "__hi"): _*)
-    boundaryLookup(withCell, strata, value, id, formulas)
-  }
-
-  /** Shared interior of both [[rankElements]] paths: cell counts →
-    * target location → matched-cell rank → bounded element collect.
+  /** Interior of [[rankElements]]: cell counts → target location →
+    * matched-cell rank → bounded element collect.
     * `withCell` must carry the original `df` columns plus a monotone
     * `__cell` grid column. */
   private def boundaryLookup(
@@ -358,9 +289,9 @@ object OrderStats {
     * pass or a corpus length-distribution report needs, with none of the
     * tie drift a quantile-boundary formulation has). */
   def equiDepthHistogram(df: DataFrame, value: String, id: String,
+                         knownSize: Long,
                          buckets: Int = 10,
-                         cells: Int = GridCells,
-                         knownSize: Option[Long] = None): DataFrame = {
+                         cells: Int = GridCells): DataFrame = {
     // boundary-element formulation: bucket(r) = ((r−1)·buckets) div N + 1
     // changes value exactly after rank b_q = ((q·N − 1) div buckets) + 1,
     // so the per-row bucket label is 1 + #{q : (v, id) >lex element(b_q)}
@@ -370,7 +301,7 @@ object OrderStats {
     // rank formulation is OrderStatsSpec's law oracle)
     val bounds = rankElements(df, Nil, value, id,
       (1 until buckets).map(q =>
-        (s"$q", s"(($q * n - 1) div $buckets) + 1")), cells, knownSize)
+        (s"$q", s"(($q * n - 1) div $buckets) + 1")), knownSize, cells)
       .collect() // LocalRelation — a driver-local read, not a job
     val label = (1 until buckets).map { q =>
       bounds.find(_.getAs[String]("tag") == s"$q") match {

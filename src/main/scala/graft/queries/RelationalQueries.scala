@@ -478,7 +478,7 @@ object RelationalQueries extends QueryGroup {
           .cast("decimal(38,0)").cast("long").as("cents"),
         (col("l_orderkey") * 10 + col("l_linenumber")).cast("long").as("rid"))
     graft.ops.OrderStats.equiDepthHistogram(v, "cents", "rid", buckets = 10,
-        knownSize = Some(Tables.rowCount(s, dir, "lineitem")))
+        knownSize = Tables.rowCount(s, dir, "lineitem"))
       .select(col("bucket"), col("n_rows"),
         col("lo").as("lo_cents"), col("hi").as("hi_cents"),
         col("total").cast("long").as("total_cents"),
@@ -521,11 +521,11 @@ object RelationalQueries extends QueryGroup {
     // 8 positional lookups via the boundary-element primitive — the
     // sample is never shuffled into rank order
     // knownSize: the UNSAMPLED fact count is an honest upper bound on
-    // the sample — it only gates round planning (one-action path)
+    // the sample — it only gates round planning
     graft.ops.OrderStats.rankElements(sampP, Nil, "cents", "rid",
         Seq(1, 5, 25, 50, 75, 90, 95, 99).map(p =>
           (s"$p", s"((n - 1) * $p) div 100 + 1")),
-        knownSize = Some(Tables.rowCount(s, dir, "lineitem")))
+        knownSize = Tables.rowCount(s, dir, "lineitem"))
       .select(col("tag").cast("int").as("pct"), col("rank_target"),
         col("cents").as("value_cents"), col("n").as("n_sample"))
       .orderBy("pct")
@@ -552,7 +552,7 @@ object RelationalQueries extends QueryGroup {
           "m1" -> "(n + 1) div 2",
           "m2" -> "n div 2 + 1",
           "p90" -> "(9 * n + 9) div 10"),
-        knownSize = Some(Tables.rowCount(s, dir, "customer")))
+        knownSize = Tables.rowCount(s, dir, "customer"))
       .groupBy("c_nationkey", "n")
       .agg(
         (sum(when(col("tag") === "m1", col("cents")).otherwise(0L)) +
@@ -601,7 +601,7 @@ object RelationalQueries extends QueryGroup {
     val bRows = graft.ops.OrderStats.rankElements(stacked, Seq("dim"), "v",
         "o_custkey", (1 to 4).map(i => (s"$i", s"($i * n + 4) div 5")),
         // 3 stacked dims x |customers|, customers <= orders rows
-        knownSize = Some(3 * Tables.rowCount(s, dir, "orders")))
+        knownSize = 3 * Tables.rowCount(s, dir, "orders"))
       .collect() // LocalRelation — a driver-local read, not a job
     def label(dim: String, v: String): Column = (1 to 4).map { i =>
       bRows.find(r => r.getAs[String]("dim") == dim &&
@@ -691,7 +691,7 @@ object RelationalQueries extends QueryGroup {
     val bounds = graft.ops.OrderStats.rankElements(cust, Nil, "v",
         "o_custkey", Seq(1, 5, 10, 20).map(p =>
           (s"$p", s"n - (n * $p) div 100")),
-        knownSize = Some(Tables.rowCount(s, dir, "orders")))
+        knownSize = Tables.rowCount(s, dir, "orders"))
       .select(col("tag").cast("int").as("pct"), col("n"),
         col("v").as("bv"), col("o_custkey").as("bid"))
     val total = cust.agg(sum(col("v")).cast("long").as("total"))
@@ -726,7 +726,7 @@ object RelationalQueries extends QueryGroup {
     val el = graft.ops.OrderStats.rankElements(v, Nil, "cents", "rid",
       Seq("lo" -> "(n - 1) div 100 + 1",
         "hi" -> "(99 * (n - 1)) div 100 + 1"),
-      knownSize = Some(Tables.rowCount(s, dir, "lineitem")))
+      knownSize = Tables.rowCount(s, dir, "lineitem"))
     val thr = el
       .agg(min(when(col("tag") === "lo", col("cents"))).as("lo"),
         max(when(col("tag") === "hi", col("cents"))).as("hi"))
@@ -1056,51 +1056,6 @@ object RelationalQueries extends QueryGroup {
       .orderBy("m_a", "m_b")
   }
 
-  /** Parquet footer facts for every testdata table via the from-scratch
-    * Thrift-compact footer reader ([[graft.ops.ParquetFooter]]) — the
-    * planner-facing metadata layer (row counts, per-leaf value counts,
-    * null counts, physical types) read WITHOUT any parquet library and
-    * without touching a data page. Oracle design: only split-invariant,
-    * data-derivable facts are emitted (num_values / null_count sums
-    * across row groups; physical types fixed by the writer's schema
-    * mapping), so DuckDB recomputes the expected table from the DATA —
-    * the parser is checked against ground truth through a completely
-    * independent route. */
-  private def parquetMeta(s: SparkSession, dir: String): DataFrame =
-    graft.ops.ParquetFooter.tableColumnMeta(s, dir)
-      .orderBy("tbl", "path_in_schema")
-
-  /** (table, column, physical type) rows of the driver-written testdata
-    * files (pyarrow's fixed schema mapping). */
-  private val pqCols: Seq[(String, String, String)] = Seq(
-    ("region", "r_regionkey", "INT32"), ("region", "r_name", "BYTE_ARRAY"),
-    ("nation", "n_nationkey", "INT32"), ("nation", "n_name", "BYTE_ARRAY"),
-    ("nation", "n_regionkey", "INT32"),
-    ("customer", "c_custkey", "INT64"), ("customer", "c_name", "BYTE_ARRAY"),
-    ("customer", "c_nationkey", "INT32"), ("customer", "c_acctbal", "DOUBLE"),
-    ("customer", "c_mktsegment", "BYTE_ARRAY"),
-    ("supplier", "s_suppkey", "INT64"), ("supplier", "s_name", "BYTE_ARRAY"),
-    ("supplier", "s_nationkey", "INT32"), ("supplier", "s_acctbal", "DOUBLE"),
-    ("part", "p_partkey", "INT64"), ("part", "p_name", "BYTE_ARRAY"),
-    ("part", "p_brand", "BYTE_ARRAY"), ("part", "p_type", "BYTE_ARRAY"),
-    ("part", "p_size", "INT32"), ("part", "p_retailprice", "DOUBLE"),
-    ("orders", "o_orderkey", "INT64"), ("orders", "o_custkey", "INT64"),
-    ("orders", "o_orderstatus", "BYTE_ARRAY"), ("orders", "o_totalprice", "DOUBLE"),
-    ("orders", "o_orderdate", "INT64"), ("orders", "o_orderpriority", "BYTE_ARRAY"),
-    ("lineitem", "l_orderkey", "INT64"), ("lineitem", "l_partkey", "INT64"),
-    ("lineitem", "l_suppkey", "INT64"), ("lineitem", "l_linenumber", "INT32"),
-    ("lineitem", "l_quantity", "DOUBLE"), ("lineitem", "l_extendedprice", "DOUBLE"),
-    ("lineitem", "l_discount", "DOUBLE"), ("lineitem", "l_tax", "DOUBLE"),
-    ("lineitem", "l_returnflag", "BYTE_ARRAY"), ("lineitem", "l_linestatus", "BYTE_ARRAY"),
-    ("lineitem", "l_shipdate", "INT64"),
-    ("events", "event_id", "INT64"), ("events", "ts", "INT64"),
-    ("events", "user_id", "INT64"), ("events", "event_type", "BYTE_ARRAY"),
-    ("events", "value", "DOUBLE"), ("events", "props", "BYTE_ARRAY"),
-    ("documents", "doc_id", "INT64"), ("documents", "text", "BYTE_ARRAY"),
-    ("documents", "lang", "BYTE_ARRAY"), ("documents", "source", "BYTE_ARRAY"),
-    ("documents", "n_chars", "INT64"),
-    ("embeddings", "vec_id", "INT64"), ("embeddings", "label", "INT32"))
-
   /** Incremental view maintenance for a grouped aggregate — the
     * keep-the-summary-fresh primitive a 100 TB warehouse uses instead of
     * re-aggregating the base table per batch: the maintained view
@@ -1147,7 +1102,6 @@ object RelationalQueries extends QueryGroup {
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_ivm_agg" -> ivmAgg,
-    "q_parquet_meta" -> parquetMeta,
     "q_corr_matrix" -> corrMatrix,
     "q_group_outliers" -> groupOutliers,
     "q_mad_outliers" -> madOutliers,
@@ -1211,25 +1165,6 @@ object RelationalQueries extends QueryGroup {
         |   OR (o_orderdate < TIMESTAMP '1999-01-01' AND o_orderkey % 10 <> 3)
         |GROUP BY o_custkey
         |ORDER BY o_custkey""".stripMargin,
-    // ground truth from the DATA, never the file: num_values = count(*)
-    // per flat leaf (sum of element counts for the list leaf), null_count
-    // from count differences — the footer parse must land on these
-    "q_parquet_meta" -> {
-      val flat = pqCols.map { case (t, c, ty) =>
-        s"""SELECT '$t' AS tbl, '$c' AS path_in_schema, '$ty' AS phys_type,
-           |  CAST(count(*) AS BIGINT) AS num_values,
-           |  CAST(count(*) - count($c) AS BIGINT) AS null_count FROM $t""".stripMargin
-      }
-      val listLeaf =
-        """SELECT 'embeddings', 'embedding.list.element', 'FLOAT',
-          |  CAST(coalesce(sum(len(embedding)), 0) AS BIGINT),
-          |  CAST(coalesce(sum(len(embedding)
-          |    - len(list_filter(embedding, x -> x IS NOT NULL))), 0) AS BIGINT)
-          |FROM embeddings""".stripMargin
-      (flat :+ listLeaf).mkString("", "\nUNION ALL\n",
-        "\nORDER BY tbl, path_in_schema")
-    },
-
     // exact HUGEINT moment sums; doubles only in the final sqrt/divide,
     // routed through VARCHAR (direct HUGEINT->DOUBLE double-rounds >2^63)
     "q_corr_matrix" -> {

@@ -8,7 +8,8 @@ import graft.ops.{ImageHash, Multimodal, Similarity}
 /** Similarity search over `embeddings` and multimodal feature extraction
   * over binary payloads: brute-force cosine top-k (the correctness
   * baseline), random-hyperplane LSH bucketed near-dup pairs, seeded IVF
-  * ANN (both scale paths), and the partition-wise media decode stub.
+  * ANN (both scale paths), and the partition-wise GIF decode (frame walk,
+  * LZW pixels, dHash near-dup pairs).
   * Every query is oracle-verified — the LSH plane matrix is inlined into
   * the generated SQL, and the IVF centroid seeding is recomputed by the
   * SQL itself.
@@ -165,13 +166,6 @@ object SimilarityQueries extends QueryGroup {
       .orderBy("vec_id")
   }
 
-  /** Multimodal decode: binary payloads -> typed features via partition-wise
-    * stub codec (md5-derived, so fully oracle-checkable). */
-  private def mmFeatures(s: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeFeatures(s, Multimodal.asMedia(Tables.documents(s, dir)))
-      .toDF()
-      .orderBy("doc_id")
-
   /** IVF ANN top-5 (8 seeded centroids, probe 3). Oracle-verified: the
     * centroids are the 8 corpus vectors whose md5("ivf_" || vec_id) keys
     * sort first — a deterministic function of the data the SQL oracle
@@ -195,24 +189,6 @@ object SimilarityQueries extends QueryGroup {
         k = 5, nCentroids = 8, nProbe = 3)
       .withColumn("from_batch", col("neighbor_id") % 10 === 9)
       .orderBy("query_id", "rank")
-
-  /** Audio decode over audio-typed payloads: real WAV header parse where
-    * the bytes are RIFF, md5-derived stand-in otherwise (the text corpus
-    * is all stand-in — that is what the oracle replays; real-WAV parsing
-    * is pinned by MultimodalSpec fixture bytes). */
-  private def mmAudio(s: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeAudio(s, Multimodal.asMedia(Tables.documents(s, dir)))
-      .toDF()
-      .orderBy("doc_id")
-
-  /** Video container decode over video-typed payloads: real MP4 mvhd
-    * parse where the bytes are ISO-BMFF, md5-derived stand-in otherwise
-    * (the text corpus is all stand-in — what the oracle replays; real
-    * MP4 parsing is pinned by MultimodalSpec fixture bytes). */
-  private def mmVideo(s: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeVideo(s, Multimodal.asMedia(Tables.documents(s, dir)))
-      .toDF()
-      .orderBy("doc_id")
 
   /** Frame sampling over video payloads: per-frame rows fan out AFTER
     * partition-wise feature extraction, so media bytes are never
@@ -253,98 +229,6 @@ object SimilarityQueries extends QueryGroup {
       .toDF()
   }
 
-  /** REAL baseline JPEG pixel decode under an oracle gate
-    * ([[graft.ops.Jpeg]]): block-constant grayscale fixtures from the
-    * independent encoder (own bit-writer, canonical-code assignment,
-    * restart markers, byte stuffing) through the full marker walk +
-    * Huffman + dequant + IDCT chain, then dHashed. A constant 8x8 block
-    * has only a DC coefficient, whose quantize->dequantize->IDCT
-    * round-trip is integer arithmetic — decoded = clamp(v + v%2) at
-    * q_DC=16 — which is what makes a LOSSY codec hash-gateable; the
-    * general AC path is JpegSpec's bounded-error round-trip. */
-  private def mmJpegPx(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 600).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.JpegFixtures.synthJpeg(id), "image"))
-      .toDF()
-    graft.ops.Jpeg.phash(s, media).toDF().orderBy("doc_id")
-  }
-
-  /** Per-frame VIDEO PIXEL decode: AVI containers whose every 00dc frame
-    * is a real block-constant baseline JPEG; the RIFF walk + full JPEG
-    * decode chain runs per frame and the oracle replays each frame's
-    * decoded luma from the closed form ([[graft.ops.Multimodal.decodeAviPixelFrames]]).
-    * Composes the two decoders the round built separately: container
-    * framing from `q_mm_video_frames`, pixel arithmetic from
-    * `q_mm_jpeg_px`. */
-  private def mmVideoPx(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 400).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.AviFixtures.synthMjpegPxAvi(id), "video"))
-      .toDF()
-    Multimodal.decodeAviPixelFrames(s, media).toDF()
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  /** Scene-change detection over decoded video frames — the frame-sample
-    * selector a video training pipeline runs (keep one frame per scene
-    * instead of one per N): consecutive-frame mean-luma comparison in
-    * the EXACT cross-multiplied integer domain, cut when
-    * |luma·px_prev − luma_prev·px| ≥ 16·px·px_prev (mean-luma jump of
-    * 16/255) — no per-pixel diff ever crosses the decode boundary, and
-    * no decision sits on a float. Products are frame-bounded
-    * (luma ≤ 255·px; at 1e6-px production frames the cross terms stay
-    * ~2.5e14 « 2^63). Decode is per-partition (the q_mm_video_px
-    * chain); the only exchange is the doc-keyed lag window over
-    * frames-per-video rows. */
-  private def mmSceneCuts(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 400).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.AviFixtures.synthMjpegPxAvi(id), "video"))
-      .toDF()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("frame_idx")
-    Multimodal.decodeAviPixelFrames(s, media).toDF()
-      .withColumn("prev_luma", lag("luma_sum", 1).over(w))
-      .withColumn("prev_px", lag("n_pixels", 1).over(w))
-      .filter(col("prev_luma").isNotNull)
-      .withColumn("is_cut",
-        abs(col("luma_sum") * col("prev_px") -
-          col("prev_luma") * col("n_pixels")) >=
-          lit(16L) * col("n_pixels") * col("prev_px"))
-      .withColumn("n_cuts",
-        sum(when(col("is_cut"), 1L).otherwise(0L))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-      .select("doc_id", "frame_idx", "n_pixels", "luma_sum",
-        "prev_px", "prev_luma", "is_cut", "n_cuts")
-      .orderBy("doc_id", "frame_idx")
-  }
-
-  /** Per-frame MP4 PIXEL decode ([[graft.ops.Multimodal.decodeMp4PixelFrames]]):
-    * MJPEG-in-MP4 containers from the independent fixture muxer
-    * ([[graft.ops.Mp4Fixtures]] — real ftyp/mdat/moov with a 2-run stsc,
-    * per-sample stsz, absolute stco), every sample located purely via
-    * the stsd/stsc/stsz/stco walk and decoded by the full baseline JPEG
-    * chain. The oracle replays the decoded luma from the closed form and
-    * the chunk assignment from the stsc plan — a shifted offset or
-    * miscounted size anywhere in the table walk breaks the hash. */
-  private def mmMp4Frames(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 400).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.Mp4Fixtures.synthMjpegMp4(id), "video"))
-      .toDF()
-    Multimodal.decodeMp4PixelFrames(s, media).toDF()
-      .orderBy("doc_id", "frame_idx")
-  }
-
   /** ANN index EVALUATION: recall@5 of the seeded IVF against the
     * brute-force exact top-5, per query — the accept/reject number an
     * index rollout is judged by, produced by the engine itself instead
@@ -365,21 +249,6 @@ object SimilarityQueries extends QueryGroup {
       .agg(count(col("ivf_neighbor")).as("n_hits"))
       .withColumn("recall", round(col("n_hits").cast("double") / 5, 6))
       .orderBy("query_id")
-  }
-
-  /** Audio track demuxed from INTERLEAVED AVI containers
-    * ([[graft.ops.Multimodal.decodeAviAudio]]): 01wb PCM chunks woven
-    * between the 00dc video frames concatenate into the stream's track,
-    * fingerprinted by the SAME 65-window energy pipeline standalone WAV
-    * uses — one audio fingerprint across container formats. */
-  private def mmAviAudio(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 300).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.AviFixtures.synthAvAvi(id), "video"))
-      .toDF()
-    Multimodal.decodeAviAudio(s, media).toDF().orderBy("doc_id")
   }
 
   /** REAL pixel decode under an oracle gate: LZW-decompress frame 0,
@@ -410,90 +279,6 @@ object SimilarityQueries extends QueryGroup {
     ImageHash.frameLumas(s, pixelGifMedia(s, dir)).toDF()
       .orderBy("doc_id", "frame_idx")
 
-  /** REAL per-frame video decode under an oracle gate: every doc_id is
-    * encoded as an MJPEG/raw AVI ([[graft.ops.AviFixtures]] — RIFF lists,
-    * JUNK padding, idx1 index, odd-size chunk padding, per-frame JPEG
-    * dimensions and raw 8-bit rasters, all pure integer functions of
-    * doc_id), then decoded back by the real container walk
-    * ([[graft.ops.AviHeaders]] + the per-frame SOF parse / exact luma
-    * sum). The SQL oracle predicts geometry, byte counts, and pixel sums
-    * from the same formulas WITHOUT parsing bytes. Corpus bounded at
-    * doc_id < 600 to keep the oracle's per-pixel replay bounded at any
-    * sf; the Spark decode path itself is per-partition streaming and
-    * corpus-size-independent. */
-  private def mmVideoFrames(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).filter(col("doc_id") < 600).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.AviFixtures.synthAvi(id), "video"))
-      .toDF()
-    Multimodal.decodeAviFrames(s, media).toDF().orderBy("doc_id", "frame_idx")
-  }
-
-  /** PCM fixture corpus: every doc_id encoded as a 16-bit mono WAV whose
-    * samples follow [[graft.ops.AudioFixtures]]' integer formulas. */
-  private def wavMedia(s: SparkSession, dir: String,
-                       limit: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    limit.fold(ids)(n => ids.filter(col("doc_id") < n)).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.AudioFixtures.synthWav(id), "audio"))
-      .toDF()
-  }
-
-  /** REAL PCM decode under an oracle gate: 16-bit LE samples decoded
-    * from the independently-encoded WAV, 65-window exact abs-sum
-    * energies, 64 adjacent comparisons as 4x16-bit bands — the audio
-    * mirror of `q_mm_phash`. */
-  private def mmAudioFp(s: SparkSession, dir: String): DataFrame =
-    graft.ops.AudioHash.fingerprint(s, wavMedia(s, dir)).toDF()
-      .orderBy("doc_id")
-
-  /** Silence-aware audio segmentation — the VAD-style pass a speech
-    * corpus runs before transcription (split tracks on low-energy
-    * stretches, keep voiced segments): a fingerprint window is SILENT
-    * when its mean |sample| falls below 9/10 of the track mean, decided
-    * in the cross-multiplied integer domain (10·e·n < 9·total·c — no
-    * float boundary). The comparison operands are DECIMAL(38,0): for a
-    * day-long 16-bit 48 kHz track both products reach ~1e22, past 2^63,
-    * so the raw-BIGINT form would wrap exactly at the documented
-    * production scale. Contiguous voiced windows group into segments by the
-    * island identity w − row_number() (two doc-keyed windows over 65
-    * rows per track); output is one row per voiced segment with its
-    * window span and energy. Decode is per-partition
-    * ([[graft.ops.AudioHash.windowEnergies]]); bytes never shuffle. */
-  private def mmSilence(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wins = graft.ops.AudioHash.windowEnergies(s, wavMedia(s, dir)).toDF()
-    val voiced = wins
-      .filter(col("e").cast("decimal(38,0)") * 10 * col("n") >=
-        col("total").cast("decimal(38,0)") * 9 * col("c"))
-    val byDoc = Window.partitionBy("doc_id").orderBy("w")
-    voiced
-      .withColumn("island", col("w") - row_number().over(byDoc))
-      .groupBy("doc_id", "island")
-      .agg(min(col("w")).as("start_w"), max(col("w")).as("end_w"),
-        count(lit(1)).as("n_windows"), sum(col("e")).as("seg_energy"))
-      .withColumn("seg_idx",
-        row_number().over(Window.partitionBy("doc_id").orderBy("start_w"))
-          .cast("int"))
-      .select("doc_id", "seg_idx", "start_w", "end_w", "n_windows",
-        "seg_energy")
-      .orderBy("doc_id", "seg_idx")
-  }
-
-  /** Audio near-dup pairs: the SAME banded pair generator as image
-    * dHash ([[ImageHash.phashPairs]]) over the audio fingerprints —
-    * hamming <= 3 recall exact by pigeonhole; brute-force oracle twin
-    * over doc_id < 120. */
-  private def mmAudioDup(s: SparkSession, dir: String): DataFrame =
-    ImageHash.phashPairs(
-        graft.ops.AudioHash.fingerprint(s, wavMedia(s, dir, Some(120L))).toDF(),
-        maxHamming = 3)
-      .orderBy("doc_a", "doc_b")
-
   /** Incremental image near-dup: docs >= 100 arrive as a new batch
     * against the persisted fingerprint index of docs < 100 —
     * batch-vs-index + batch-vs-batch banded joins only. The oracle is
@@ -505,39 +290,6 @@ object SimilarityQueries extends QueryGroup {
         fpAll.filter(col("doc_id") < 100),
         fpAll.filter(col("doc_id") >= 100),
         maxHamming = 3)
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Incremental audio near-dup: same split as `q_mm_phash_incr`, same
-    * generic banded core ([[ImageHash.incrementalPhashPairs]] works on
-    * ANY doc_id + p0..p3 frame) over the audio fingerprints. */
-  private def mmAudioIncr(s: SparkSession, dir: String): DataFrame = {
-    val fpAll = graft.ops.AudioHash.fingerprint(s, wavMedia(s, dir, Some(120L))).toDF()
-    ImageHash.incrementalPhashPairs(
-        fpAll.filter(col("doc_id") < 100),
-        fpAll.filter(col("doc_id") >= 100),
-        maxHamming = 3)
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Cross-modal near-dup ensemble: the image-dHash and audio-energy
-    * pair sets (both banded, hamming <= 3) full-outer merged with a
-    * modality-agreement count — the multimodal mirror of the lexical
-    * `q_dedup_ensemble`. A pair flagged in BOTH modalities is the
-    * highest-confidence duplicate; single-modality pairs localize WHICH
-    * channel matches. Inputs are the same banded joins, so the ensemble
-    * costs one outer join over two bounded pair sets. */
-  private def mmEnsemble(s: SparkSession, dir: String): DataFrame = {
-    val img = ImageHash.phashPairs(
-        ImageHash.phash(s, pixelGifMedia(s, dir, Some(120L))).toDF(), 3)
-      .withColumnRenamed("hamming", "img_hamming")
-    val aud = ImageHash.phashPairs(
-        graft.ops.AudioHash.fingerprint(s, wavMedia(s, dir, Some(120L))).toDF(), 3)
-      .withColumnRenamed("hamming", "aud_hamming")
-    img.join(aud, Seq("doc_a", "doc_b"), "full_outer")
-      .withColumn("n_modalities",
-        when(col("img_hamming").isNotNull, 1).otherwise(0) +
-          when(col("aud_hamming").isNotNull, 1).otherwise(0))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -893,26 +645,12 @@ object SimilarityQueries extends QueryGroup {
     "q_sim_ivf" -> ivf,
     "q_sim_ivf_incr" -> ivfIncr,
     "q_ann_recall" -> annRecall,
-    "q_mm_features" -> mmFeatures,
     "q_mm_frames" -> mmFrames,
     "q_mm_gif" -> mmGif,
-    "q_mm_jpeg_px" -> mmJpegPx,
-    "q_mm_video_px" -> mmVideoPx,
-    "q_mm_scene_cuts" -> mmSceneCuts,
-    "q_mm_mp4_frames" -> mmMp4Frames,
-    "q_mm_avi_audio" -> mmAviAudio,
     "q_mm_phash" -> mmPhash,
     "q_mm_phash_dup" -> mmPhashDup,
     "q_mm_frame_px" -> mmFramePx,
-    "q_mm_audio" -> mmAudio,
-    "q_mm_audio_fp" -> mmAudioFp,
-    "q_mm_silence" -> mmSilence,
-    "q_mm_audio_dup" -> mmAudioDup,
-    "q_mm_ensemble" -> mmEnsemble,
     "q_mm_phash_incr" -> mmPhashIncr,
-    "q_mm_audio_incr" -> mmAudioIncr,
-    "q_mm_video" -> mmVideo,
-    "q_mm_video_frames" -> mmVideoFrames,
   )
 
   /** Shared phash oracle preamble: replays the ENTIRE pixel pipeline of
@@ -920,81 +658,42 @@ object SimilarityQueries extends QueryGroup {
     * fixture formulas — per-pixel luma, 9x8 floor-div cell sums, the 64
     * cross-multiplied comparison bits, and the four 16-bit bands — ending
     * in a `ph(doc_id, w, h, gray_sum, p0..p3)` CTE. `docFilter` bounds
-    * the doc set (e.g. "WHERE doc_id < 120" for the pair twin); `n`
-    * prefixes every CTE name so two preambles can share one WITH clause
-    * (parameterized names, never post-hoc string surgery). */
-  private def phashSqlPrefix(docFilter: String, n: String = ""): String =
-    s"""${n}d AS (
+    * the doc set (e.g. "WHERE doc_id < 120" for the pair twin). */
+  private def phashSqlPrefix(docFilter: String): String =
+    s"""d AS (
        |  SELECT doc_id, doc_id % 7 AS base, doc_id % 40 AS poff,
        |    9 * ((doc_id % 7) % 3 + 2) AS w, 8 * ((doc_id % 7) % 4 + 2) AS h,
        |    CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END AS pert
        |  FROM documents $docFilter),
-       |${n}xs AS (SELECT unnest(generate_series(0, 35)) AS x),
-       |${n}ys AS (SELECT unnest(generate_series(0, 39)) AS y),
-       |${n}pix AS (
+       |xs AS (SELECT unnest(generate_series(0, 35)) AS x),
+       |ys AS (SELECT unnest(generate_series(0, 39)) AS y),
+       |pix AS (
        |  SELECT doc_id, w, h, x, y,
        |    40 * ((CAST(base + 1 AS BIGINT) * (3 * x + 7 * y + x * y + 1)
        |           + CASE WHEN pert = 1 AND x = y THEN 1 ELSE 0 END) % 4) + poff AS g
-       |  FROM ${n}d CROSS JOIN ${n}xs CROSS JOIN ${n}ys
+       |  FROM d CROSS JOIN xs CROSS JOIN ys
        |  WHERE x < w AND y < h),
-       |${n}cells AS (
+       |cells AS (
        |  SELECT doc_id, (y * 8) // h AS r, (x * 9) // w AS c,
        |    CAST(sum(g) AS BIGINT) AS cs, COUNT(*) AS cn
-       |  FROM ${n}pix GROUP BY 1, 2, 3),
-       |${n}bits AS (
+       |  FROM pix GROUP BY 1, 2, 3),
+       |bits AS (
        |  SELECT a.doc_id, a.r * 8 + a.c AS idx,
        |    CASE WHEN a.cs * b.cn < b.cs * a.cn THEN 1 ELSE 0 END AS bit
-       |  FROM ${n}cells a JOIN ${n}cells b
+       |  FROM cells a JOIN cells b
        |    ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
        |  WHERE a.c < 8),
-       |${n}bands AS (
+       |bands AS (
        |  SELECT doc_id,
        |    CAST(sum(CASE WHEN idx // 16 = 0 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p0,
        |    CAST(sum(CASE WHEN idx // 16 = 1 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p1,
        |    CAST(sum(CASE WHEN idx // 16 = 2 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p2,
        |    CAST(sum(CASE WHEN idx // 16 = 3 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p3
-       |  FROM ${n}bits GROUP BY doc_id),
-       |${n}gs AS (SELECT doc_id, CAST(sum(g) AS BIGINT) AS gray_sum FROM ${n}pix GROUP BY doc_id),
-       |${n}ph AS (
-       |  SELECT ${n}d.doc_id, w, h, gray_sum, p0, p1, p2, p3
-       |  FROM ${n}d JOIN ${n}gs USING (doc_id) JOIN ${n}bands USING (doc_id))""".stripMargin
-
-  /** Shared audio-fingerprint oracle preamble: replays sample synthesis
-    * ([[graft.ops.AudioFixtures]] formulas) -> 65-window abs-sum energies
-    * -> 64 comparison bits -> 4x16-bit bands, ending in an
-    * `af(doc_id, n, abs_sum, p0..p3)` CTE. `n` prefixes every CTE name
-    * (shared-WITH composition, as in [[phashSqlPrefix]]). */
-  private def audioFpSqlPrefix(docFilter: String, n: String = ""): String =
-    s"""${n}d AS (
-       |  SELECT doc_id, doc_id % 5 AS abase,
-       |    2048 + (doc_id % 5) * 512 AS n,
-       |    CASE WHEN doc_id % 31 = 0 THEN 1 ELSE 0 END AS clicky
-       |  FROM documents $docFilter),
-       |${n}ts AS (SELECT unnest(generate_series(0, 5119)) AS t),
-       |${n}smp AS (
-       |  SELECT doc_id, n, t, (t * 65) // n AS w,
-       |    CAST((abase + 1) * ((t * t + 3 * t) % 977) % 2001 - 1000
-       |      + CASE WHEN clicky = 1 AND t % 50 = 0 THEN 200 ELSE 0 END AS BIGINT) AS s
-       |  FROM ${n}d CROSS JOIN ${n}ts WHERE t < n),
-       |${n}wins AS (
-       |  SELECT doc_id, w, CAST(sum(abs(s)) AS BIGINT) AS e, COUNT(*) AS c
-       |  FROM ${n}smp GROUP BY 1, 2),
-       |${n}bits AS (
-       |  SELECT a.doc_id, a.w AS idx,
-       |    CASE WHEN a.e * b.c < b.e * a.c THEN 1 ELSE 0 END AS bit
-       |  FROM ${n}wins a JOIN ${n}wins b ON a.doc_id = b.doc_id AND b.w = a.w + 1
-       |  WHERE a.w < 64),
-       |${n}bands AS (
-       |  SELECT doc_id,
-       |    CAST(sum(CASE WHEN idx // 16 = 0 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p0,
-       |    CAST(sum(CASE WHEN idx // 16 = 1 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p1,
-       |    CAST(sum(CASE WHEN idx // 16 = 2 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p2,
-       |    CAST(sum(CASE WHEN idx // 16 = 3 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p3
-       |  FROM ${n}bits GROUP BY doc_id),
-       |${n}asum AS (SELECT doc_id, CAST(sum(abs(s)) AS BIGINT) AS abs_sum FROM ${n}smp GROUP BY doc_id),
-       |${n}af AS (
-       |  SELECT ${n}d.doc_id, n, abs_sum, p0, p1, p2, p3
-       |  FROM ${n}d JOIN ${n}asum USING (doc_id) JOIN ${n}bands USING (doc_id))""".stripMargin
+       |  FROM bits GROUP BY doc_id),
+       |gs AS (SELECT doc_id, CAST(sum(g) AS BIGINT) AS gray_sum FROM pix GROUP BY doc_id),
+       |ph AS (
+       |  SELECT d.doc_id, w, h, gray_sum, p0, p1, p2, p3
+       |  FROM d JOIN gs USING (doc_id) JOIN bands USING (doc_id))""".stripMargin
 
   /** Shared PQ oracle preamble (after an `e(vec_id, v)` CTE): per
     * subspace j, `cent<j>(c, cv)` = the md5-seeded codebook and
@@ -1575,175 +1274,6 @@ object SimilarityQueries extends QueryGroup {
         |  CAST((doc_id + i) % 500 AS INTEGER) AS delay_cs
         |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
 
-    // demuxed audio track = concatenated 01wb payloads; the 65-window
-    // energy fingerprint replayed from the chunk sample formula
-    "q_mm_avi_audio" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 4 + 2 AS INTEGER) AS nc,
-        |    256 * (doc_id % 4 + 2) AS n
-        |  FROM documents WHERE doc_id < 300),
-        |ts AS (SELECT unnest(generate_series(0, 1279)) AS t),
-        |smp AS (
-        |  SELECT doc_id, nc, n, t, (t * 65) // n AS w,
-        |    CAST((doc_id * 31 + 7 * t + (t * t) % 101) % 4001 - 2000 AS BIGINT) AS s
-        |  FROM d CROSS JOIN ts WHERE t < n),
-        |wins AS (
-        |  SELECT doc_id, w, CAST(sum(abs(s)) AS BIGINT) AS e, COUNT(*) AS c
-        |  FROM smp GROUP BY 1, 2),
-        |bits AS (
-        |  SELECT a.doc_id, a.w AS idx,
-        |    CASE WHEN a.e * b.c < b.e * a.c THEN 1 ELSE 0 END AS bit
-        |  FROM wins a JOIN wins b ON a.doc_id = b.doc_id AND b.w = a.w + 1
-        |  WHERE a.w < 64),
-        |bands AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN idx // 16 = 0 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS a0,
-        |    CAST(sum(CASE WHEN idx // 16 = 1 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS a1,
-        |    CAST(sum(CASE WHEN idx // 16 = 2 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS a2,
-        |    CAST(sum(CASE WHEN idx // 16 = 3 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS a3
-        |  FROM bits GROUP BY doc_id),
-        |asum AS (SELECT doc_id, CAST(sum(abs(s)) AS BIGINT) AS abs_sum
-        |         FROM smp GROUP BY doc_id)
-        |SELECT d.doc_id, nc AS n_chunks, CAST(n AS BIGINT) AS n_samples,
-        |  abs_sum, a0, a1, a2, a3
-        |FROM d JOIN asum USING (doc_id) JOIN bands USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // container walk + full JPEG decode per frame; block-level sums with
-    // edge-crop visibility factors (vw x vh) replay each frame's luma
-    "q_mm_video_px" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 400),
-        |fr AS (SELECT doc_id,
-        |    unnest(generate_series(0, doc_id % 4 + 1)) AS frame_idx FROM d),
-        |g AS (SELECT doc_id, frame_idx, doc_id * 7 + frame_idx AS fid FROM fr),
-        |dim AS (SELECT *,
-        |    (2 + fid % 3) * 8 - (fid % 3) AS w,
-        |    (2 + fid % 4) * 8 - (fid % 5) AS h FROM g),
-        |bxs AS (SELECT unnest(generate_series(0, 3)) AS bx),
-        |bys AS (SELECT unnest(generate_series(0, 4)) AS byy),
-        |bl AS (SELECT dim.*, bx, byy FROM dim CROSS JOIN bxs CROSS JOIN bys
-        |       WHERE bx < 2 + fid % 3 AND byy < 2 + fid % 4),
-        |s AS (SELECT doc_id, frame_idx, w, h,
-        |    sum((least(255,
-        |          ((11 * fid + 23 * bx + 37 * byy + bx * byy) % 256)
-        |          + ((11 * fid + 23 * bx + 37 * byy + bx * byy) % 256) % 2))
-        |        * least(8, w - bx * 8) * least(8, h - byy * 8)) AS luma_sum
-        |  FROM bl GROUP BY 1, 2, 3, 4)
-        |SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-        |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(w * h AS BIGINT) AS n_pixels, CAST(luma_sum AS BIGINT) AS luma_sum
-        |FROM s ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // same decoded-luma preamble as q_mm_video_px, then the lag window
-    // and the cross-multiplied cut test replayed on the closed form
-    "q_mm_scene_cuts" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 400),
-        |fr AS (SELECT doc_id,
-        |    unnest(generate_series(0, doc_id % 4 + 1)) AS frame_idx FROM d),
-        |g AS (SELECT doc_id, frame_idx, doc_id * 7 + frame_idx AS fid FROM fr),
-        |dim AS (SELECT *,
-        |    (2 + fid % 3) * 8 - (fid % 3) AS w,
-        |    (2 + fid % 4) * 8 - (fid % 5) AS h FROM g),
-        |bxs AS (SELECT unnest(generate_series(0, 3)) AS bx),
-        |bys AS (SELECT unnest(generate_series(0, 4)) AS byy),
-        |bl AS (SELECT dim.*, bx, byy FROM dim CROSS JOIN bxs CROSS JOIN bys
-        |       WHERE bx < 2 + fid % 3 AND byy < 2 + fid % 4),
-        |s AS (SELECT doc_id, frame_idx, w, h,
-        |    sum((least(255,
-        |          ((11 * fid + 23 * bx + 37 * byy + bx * byy) % 256)
-        |          + ((11 * fid + 23 * bx + 37 * byy + bx * byy) % 256) % 2))
-        |        * least(8, w - bx * 8) * least(8, h - byy * 8)) AS luma_sum
-        |  FROM bl GROUP BY 1, 2, 3, 4),
-        |f AS (SELECT doc_id, frame_idx,
-        |    CAST(w * h AS BIGINT) AS n_pixels, CAST(luma_sum AS BIGINT) AS luma_sum
-        |  FROM s),
-        |lg AS (SELECT doc_id, frame_idx, n_pixels, luma_sum,
-        |    lag(n_pixels) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev_px,
-        |    lag(luma_sum) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS prev_luma
-        |  FROM f),
-        |c AS (SELECT *,
-        |    abs(luma_sum * prev_px - prev_luma * n_pixels)
-        |      >= 16 * n_pixels * prev_px AS is_cut
-        |  FROM lg WHERE prev_luma IS NOT NULL)
-        |SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-        |  n_pixels, luma_sum, prev_px, prev_luma, is_cut,
-        |  CAST(sum(CASE WHEN is_cut THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY doc_id) AS BIGINT) AS n_cuts
-        |FROM c ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // same decoded-luma closed form as q_mm_video_px (identical frame
-    // JPEGs at pxSeed = doc_id*7 + frame_idx); the chunk columns replay
-    // the fixture's stsc plan (chunk 0 = samples 0,1; then 1 sample per
-    // chunk), which the Spark side must RECOVER from the sample tables
-    "q_mm_mp4_frames" ->
-      """WITH d AS (SELECT doc_id, doc_id % 4 + 2 AS nf
-        |           FROM documents WHERE doc_id < 400),
-        |fr AS (SELECT doc_id, nf,
-        |    unnest(generate_series(0, nf - 1)) AS frame_idx FROM d),
-        |g AS (SELECT doc_id, nf, frame_idx,
-        |    doc_id * 7 + frame_idx AS fid FROM fr),
-        |dim AS (SELECT *,
-        |    (2 + fid % 3) * 8 - (fid % 3) AS w,
-        |    (2 + fid % 4) * 8 - (fid % 5) AS h FROM g),
-        |bxs AS (SELECT unnest(generate_series(0, 3)) AS bx),
-        |bys AS (SELECT unnest(generate_series(0, 4)) AS byy),
-        |bl AS (SELECT dim.*, bx, byy FROM dim CROSS JOIN bxs CROSS JOIN bys
-        |       WHERE bx < 2 + fid % 3 AND byy < 2 + fid % 4),
-        |s AS (SELECT doc_id, nf, frame_idx, w, h,
-        |    sum((least(255,
-        |          ((11 * fid + 23 * bx + 37 * byy + bx * byy) % 256)
-        |          + ((11 * fid + 23 * bx + 37 * byy + bx * byy) % 256) % 2))
-        |        * least(8, w - bx * 8) * least(8, h - byy * 8)) AS luma_sum
-        |  FROM bl GROUP BY 1, 2, 3, 4, 5)
-        |SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-        |  CAST(CASE WHEN frame_idx < 2 THEN 0 ELSE frame_idx - 1 END
-        |    AS INTEGER) AS chunk_idx,
-        |  CAST(nf - 1 AS INTEGER) AS n_chunks, 'jpeg' AS codec,
-        |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(w * h AS BIGINT) AS n_pixels, CAST(luma_sum AS BIGINT) AS luma_sum
-        |FROM s ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // the LOSSY codec replayed exactly: a constant 8x8 block quantizes to
-    // DC-only, and round(DC/16)*16/8 collapses to g = least(255, v + v%2)
-    // — the whole Huffman+IDCT chain must land on that closed form
-    "q_mm_jpeg_px" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    (2 + doc_id % 3) * 8 - (doc_id % 3) AS w,
-        |    (2 + doc_id % 4) * 8 - (doc_id % 5) AS h
-        |  FROM documents WHERE doc_id < 600),
-        |xs AS (SELECT unnest(generate_series(0, 29)) AS x),
-        |ys AS (SELECT unnest(generate_series(0, 39)) AS y),
-        |pix AS (
-        |  SELECT doc_id, w, h, x, y,
-        |    least(255,
-        |      ((11 * doc_id + 23 * (x // 8) + 37 * (y // 8) + (x // 8) * (y // 8)) % 256)
-        |      + ((11 * doc_id + 23 * (x // 8) + 37 * (y // 8) + (x // 8) * (y // 8)) % 256) % 2) AS g
-        |  FROM d CROSS JOIN xs CROSS JOIN ys WHERE x < w AND y < h),
-        |cells AS (
-        |  SELECT doc_id, (y * 8) // h AS r, (x * 9) // w AS c,
-        |    CAST(sum(g) AS BIGINT) AS cs, COUNT(*) AS cn
-        |  FROM pix GROUP BY 1, 2, 3),
-        |bits AS (
-        |  SELECT a.doc_id, a.r * 8 + a.c AS idx,
-        |    CASE WHEN a.cs * b.cn < b.cs * a.cn THEN 1 ELSE 0 END AS bit
-        |  FROM cells a JOIN cells b
-        |    ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-        |  WHERE a.c < 8),
-        |bands AS (
-        |  SELECT doc_id,
-        |    CAST(sum(CASE WHEN idx // 16 = 0 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p0,
-        |    CAST(sum(CASE WHEN idx // 16 = 1 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p1,
-        |    CAST(sum(CASE WHEN idx // 16 = 2 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p2,
-        |    CAST(sum(CASE WHEN idx // 16 = 3 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p3
-        |  FROM bits GROUP BY doc_id),
-        |gs AS (SELECT doc_id, CAST(sum(g) AS BIGINT) AS gray_sum
-        |  FROM pix GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(w * h AS BIGINT) AS n_pixels, gray_sum, p0, p1, p2, p3
-        |FROM d JOIN gs USING (doc_id) JOIN bands USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
     // the whole pixel pipeline (LZW decode -> palette luma -> 9x8 cells
     // -> dHash bands) replayed from the fixture formulas without parsing
     // a single byte — agreement pins the codec chain end to end
@@ -1800,44 +1330,6 @@ object SimilarityQueries extends QueryGroup {
         |  CAST(('0x' || substr(md5(text || CAST(frame_idx AS VARCHAR)), 1, 2)) AS INTEGER) AS brightness
         |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
 
-    // the whole PCM pipeline (LE sample decode -> 65-window energies ->
-    // fingerprint bands) replayed from the fixture formulas
-    "q_mm_audio_fp" ->
-      s"""WITH ${audioFpSqlPrefix("")}
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_samples, abs_sum, p0, p1, p2, p3
-         |FROM af ORDER BY doc_id""".stripMargin,
-
-    // same smp/wins/asum closed form; the 9/10-mean silence test and the
-    // island grouping replayed in SQL
-    "q_mm_silence" ->
-      s"""WITH ${audioFpSqlPrefix("")},
-         |v AS (SELECT w.doc_id, w.w, w.e, w.c
-         |      FROM wins w JOIN asum USING (doc_id) JOIN d USING (doc_id)
-         |      WHERE w.e * 10 * d.n >= 9 * asum.abs_sum * w.c),
-         |isl AS (SELECT doc_id, w, e,
-         |    w - row_number() OVER (PARTITION BY doc_id ORDER BY w) AS island
-         |  FROM v),
-         |seg AS (SELECT doc_id, island, min(w) AS start_w, max(w) AS end_w,
-         |    count(*) AS n_windows, CAST(sum(e) AS BIGINT) AS seg_energy
-         |  FROM isl GROUP BY 1, 2)
-         |SELECT doc_id,
-         |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_w)
-         |    AS INTEGER) AS seg_idx,
-         |  CAST(start_w AS INTEGER) AS start_w,
-         |  CAST(end_w AS INTEGER) AS end_w, n_windows, seg_energy
-         |FROM seg ORDER BY doc_id, seg_idx""".stripMargin,
-
-    // brute-force pair twin: complete at hamming <= 3 (pigeonhole over
-    // the 4 bands), so it agrees exactly with the banded join
-    "q_mm_audio_dup" ->
-      s"""WITH ${audioFpSqlPrefix("WHERE doc_id < 120")}
-         |SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming FROM (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    bit_count(xor(a.p0, b.p0)) + bit_count(xor(a.p1, b.p1))
-         |      + bit_count(xor(a.p2, b.p2)) + bit_count(xor(a.p3, b.p3)) AS hamming
-         |  FROM af a JOIN af b ON a.doc_id < b.doc_id)
-         |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin,
-
     // full brute-force pair set restricted to pairs touching the new
     // batch (doc_id >= 100) — what the incremental banded join must equal
     "q_mm_phash_incr" ->
@@ -1849,129 +1341,5 @@ object SimilarityQueries extends QueryGroup {
          |  FROM ph x JOIN ph y ON x.doc_id < y.doc_id)
          |WHERE hamming <= 3 AND (doc_a >= 100 OR doc_b >= 100)
          |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "q_mm_audio_incr" ->
-      s"""WITH ${audioFpSqlPrefix("WHERE doc_id < 120")}
-         |SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming FROM (
-         |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         |    bit_count(xor(x.p0, y.p0)) + bit_count(xor(x.p1, y.p1))
-         |      + bit_count(xor(x.p2, y.p2)) + bit_count(xor(x.p3, y.p3)) AS hamming
-         |  FROM af x JOIN af y ON x.doc_id < y.doc_id)
-         |WHERE hamming <= 3 AND (doc_a >= 100 OR doc_b >= 100)
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // both fingerprint preambles share one WITH via parameterized CTE
-    // prefixes (i/a); pair sets brute-forced (complete at hamming <= 3)
-    // then full-outer merged exactly like the Spark side
-    "q_mm_ensemble" ->
-      s"""WITH ${phashSqlPrefix("WHERE doc_id < 120", "i")},
-         |${audioFpSqlPrefix("WHERE doc_id < 120", "a")},
-         |ip AS (
-         |  SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS img_hamming FROM (
-         |    SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         |      bit_count(xor(x.p0, y.p0)) + bit_count(xor(x.p1, y.p1))
-         |        + bit_count(xor(x.p2, y.p2)) + bit_count(xor(x.p3, y.p3)) AS hamming
-         |    FROM iph x JOIN iph y ON x.doc_id < y.doc_id)
-         |  WHERE hamming <= 3),
-         |ap AS (
-         |  SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS aud_hamming FROM (
-         |    SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         |      bit_count(xor(x.p0, y.p0)) + bit_count(xor(x.p1, y.p1))
-         |        + bit_count(xor(x.p2, y.p2)) + bit_count(xor(x.p3, y.p3)) AS hamming
-         |    FROM aaf x JOIN aaf y ON x.doc_id < y.doc_id)
-         |  WHERE hamming <= 3)
-         |SELECT COALESCE(ip.doc_a, ap.doc_a) AS doc_a,
-         |  COALESCE(ip.doc_b, ap.doc_b) AS doc_b,
-         |  img_hamming, aud_hamming,
-         |  CAST((CASE WHEN img_hamming IS NOT NULL THEN 1 ELSE 0 END)
-         |     + (CASE WHEN aud_hamming IS NOT NULL THEN 1 ELSE 0 END) AS INTEGER) AS n_modalities
-         |FROM ip FULL JOIN ap ON ip.doc_a = ap.doc_a AND ip.doc_b = ap.doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // audio = doc_id % 3 = 1 (asMedia's type tag); text bytes are never
-    // RIFF, so every row takes the md5-derived stand-in the SQL replays:
-    // rate in 8000..47999 (division-safe), integer-floor duration
-    "q_mm_audio" ->
-      """WITH a AS (
-        |  SELECT doc_id, octet_length(encode(text)) AS byte_len, md5(text) AS checksum
-        |  FROM documents WHERE doc_id % 3 = 1),
-        |f AS (
-        |  SELECT doc_id, byte_len, checksum,
-        |    8000 + CAST(('0x' || substr(checksum, 5, 4)) AS INTEGER) % 40000 AS sample_rate,
-        |    CAST(('0x' || substr(checksum, 9, 1)) AS INTEGER) % 2 + 1 AS channels,
-        |    8 * (CAST(('0x' || substr(checksum, 10, 1)) AS INTEGER) % 2 + 1) AS bits_per_sample
-        |  FROM a)
-        |SELECT doc_id, CAST(byte_len AS BIGINT) AS byte_len, checksum,
-        |  CAST(sample_rate AS INTEGER) AS sample_rate,
-        |  CAST(channels AS INTEGER) AS channels,
-        |  CAST(bits_per_sample AS INTEGER) AS bits_per_sample,
-        |  CAST(byte_len AS BIGINT) AS n_samples,
-        |  CAST(byte_len * 1000 // sample_rate AS BIGINT) AS duration_ms
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // real AVI decode replayed from the AviFixtures formulas: MJPEG frame
-    // geometry/byte counts are closed-form; raw-frame luma sums re-derive
-    // every pixel from the formula (the sum is CAST out of DuckDB's
-    // HUGEINT promotion). A hash match proves the RIFF walk + per-frame
-    // SOF parse + exact byte sums against the independent encoder.
-    "q_mm_video_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 4 + 2 AS nf,
-        |    16 * (doc_id % 5 + 1) AS w, 8 * (doc_id % 7 + 1) AS h
-        |  FROM documents WHERE doc_id < 600),
-        |f AS (SELECT doc_id, nf, w, h, unnest(generate_series(0, nf - 1)) AS i FROM d),
-        |mj AS (
-        |  SELECT doc_id, i, nf,
-        |    CAST(42 + (doc_id + 3 * i) % 11 AS BIGINT) AS frame_bytes,
-        |    w + i AS width, h + 2 * i AS height
-        |  FROM f WHERE i % 2 = 0),
-        |xs AS (SELECT unnest(generate_series(0, 79)) AS x),
-        |ys AS (SELECT unnest(generate_series(0, 55)) AS y),
-        |rawsum AS (
-        |  SELECT doc_id, i, CAST(sum((doc_id + 3 * x + 7 * y + 11 * i) % 256) AS BIGINT) AS luma_sum
-        |  FROM f CROSS JOIN xs CROSS JOIN ys
-        |  WHERE i % 2 = 1 AND x < w AND y < h
-        |  GROUP BY doc_id, i)
-        |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-        |  CAST(nf AS INTEGER) AS n_frames, 'mjpeg' AS codec, frame_bytes,
-        |  CAST(width AS INTEGER) AS width, CAST(height AS INTEGER) AS height,
-        |  CAST(NULL AS BIGINT) AS luma_sum, CAST(NULL AS BIGINT) AS mean_luma
-        |FROM mj
-        |UNION ALL
-        |SELECT f.doc_id, CAST(f.i AS INTEGER), CAST(f.nf AS INTEGER), 'raw',
-        |  CAST(f.w * f.h AS BIGINT),
-        |  CAST(f.w AS INTEGER), CAST(f.h AS INTEGER),
-        |  r.luma_sum, r.luma_sum // (f.w * f.h)
-        |FROM f JOIN rawsum r ON f.doc_id = r.doc_id AND f.i = r.i
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // video = doc_id % 3 = 2; text bytes never walk as ISO-BMFF boxes, so
-    // every row takes the md5 stand-in: timescale in the conventional
-    // mvhd band 600..90599 (division-safe), ticks = byte length
-    "q_mm_video" ->
-      """WITH v AS (
-        |  SELECT doc_id, octet_length(encode(text)) AS byte_len, md5(text) AS checksum
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |f AS (
-        |  SELECT doc_id, byte_len, checksum,
-        |    600 + CAST(('0x' || substr(checksum, 5, 4)) AS INTEGER) % 90000 AS timescale
-        |  FROM v)
-        |SELECT doc_id, CAST(byte_len AS BIGINT) AS byte_len, checksum,
-        |  CAST(timescale AS INTEGER) AS timescale,
-        |  CAST(byte_len AS BIGINT) AS duration_ticks,
-        |  CAST(byte_len * 1000 // timescale AS BIGINT) AS duration_ms
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    "q_mm_features" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |       WHEN doc_id % 3 = 1 THEN 'audio'
-        |       ELSE 'video' END AS media_type,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-        |  md5(text) AS checksum,
-        |  CAST(('0x' || substr(md5(text), 1, 2)) AS INTEGER) AS width,
-        |  CAST(('0x' || substr(md5(text), 3, 2)) AS INTEGER) AS height,
-        |  CAST(octet_length(encode(text)) % 7 + 1 AS INTEGER) AS n_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
   )
 }

@@ -12,9 +12,12 @@ import org.apache.spark.sql.SparkSession
   * a structural change (fused rounds, fewer driver actions) can pay at all.
   *
   * Usage: runMain graft.tools.JobCount <n_reps> <query substring>...
-  * Same session config as graft.Bench; shared frames are prewarmed (their
-  * jobs are NOT attributed to the queries), then each matching query runs
-  * n_reps times with jobs/stages/task-time counted per evaluation.
+  * Session: local[SPARK_GRAFT_CPUS] (default 32) with as many shuffle
+  * partitions, ANSI off, UI off, the graft optimizer rules installed and
+  * scan caching on; data dir from SPARK_GRAFT_SF_DIR. Shared frames are
+  * prewarmed (their jobs are NOT attributed to the queries), then each
+  * matching query runs n_reps times with jobs/stages/task-time counted per
+  * evaluation.
   */
 object JobCount {
   def main(args: Array[String]): Unit = {

@@ -5,9 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Repeated-run timer for a subset of SparkEntry queries.
   *
   * Usage: runMain graft.tools.MicroBench <n_reps> <query substring>...
-  * Times each matching query n_reps times in one JVM (same config as
-  * graft.Bench) so first-run costs (cache build, codegen) separate from
-  * steady-state cost, so a regression can be attributed to one or the other.
+  * Times each matching query n_reps times in one JVM so first-run costs
+  * (cache build, codegen) separate from steady-state cost, so a regression
+  * can be attributed to one or the other. Session: local[SPARK_GRAFT_CPUS]
+  * (default 32) with as many shuffle partitions, ANSI off, UI off, scan
+  * caching on; the lineitem and documents scans and every shared frame are
+  * warmed before the first timed run. Data dir: SPARK_GRAFT_SF_DIR.
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
@@ -24,7 +27,7 @@ object MicroBench {
     spark.sparkContext.setLogLevel("WARN")
     graft.core.Tables.cacheScans = true
     try {
-      // same warmup + shared-frame prewarm as graft.Bench
+      // warm the two big scans and every shared frame before timing
       graft.core.Tables.t(spark, sfDir, "lineitem").count()
       graft.core.Tables.documents(spark, sfDir).count()
       graft.SparkEntry.sharedFrames.foreach { case (name, fn) =>

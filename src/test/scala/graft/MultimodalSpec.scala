@@ -2,213 +2,14 @@ package graft
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.functions._
-import graft.ops.{AudioHeaders, GifFixtures, GifHeaders, ImageHeaders, Multimodal, VideoHeaders}
+import graft.ops.{GifFixtures, GifHeaders, Multimodal}
 
-/** Real image-header decode (PNG IHDR / JPEG SOF) on hand-built fixture
-  * bytes, plus the decodeFeatures fallback contract: parseable payloads
-  * get true dimensions, unknown formats keep the deterministic
-  * checksum-derived stand-in (what the oracle-gated q_mm_features pins on
-  * the text-byte corpus).
+/** Real GIF block walk on hand-built and fixture bytes, plus the two
+  * partition-wise decoders over it: [[Multimodal.sampleFrames]] (real
+  * frames for GIF, the md5 stand-in the oracle-gated q_mm_frames pins
+  * otherwise) and [[Multimodal.decodeGifFrames]] (typed metadata rows).
   */
 class MultimodalSpec extends SparkSuite {
-
-  /** Minimal PNG: signature + IHDR (len 13, w x h, bit depth 8, color 2,
-    * compression/filter/interlace 0) + 4 dummy CRC bytes. */
-  private def pngBytes(w: Int, h: Int): Array[Byte] = {
-    def be32(v: Int) = Array[Byte](
-      ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
-      be32(13) ++ "IHDR".getBytes(StandardCharsets.US_ASCII) ++
-      be32(w) ++ be32(h) ++
-      Array[Byte](8, 2, 0, 0, 0) ++
-      Array[Byte](0, 0, 0, 0)
-  }
-
-  /** Minimal JPEG: SOI, APP0 (JFIF), DHT (must be SKIPPED by the walker),
-    * then SOF0 carrying the dimensions. */
-  private def jpegBytes(w: Int, h: Int): Array[Byte] = {
-    def be16(v: Int) = Array[Byte](((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    val app0 = Array[Byte](0xff.toByte, 0xe0.toByte) ++ be16(16) ++
-      "JFIF".getBytes(StandardCharsets.US_ASCII) ++ Array.fill[Byte](10)(0)
-    val dht = Array[Byte](0xff.toByte, 0xc4.toByte) ++ be16(5) ++
-      Array[Byte](1, 2, 3)
-    val sof0 = Array[Byte](0xff.toByte, 0xc0.toByte) ++ be16(17) ++
-      Array[Byte](8) ++ be16(h) ++ be16(w) ++ Array.fill[Byte](10)(1)
-    Array[Byte](0xff.toByte, 0xd8.toByte) ++ app0 ++ dht ++ sof0
-  }
-
-  /** Minimal WAV: RIFF/WAVE header, a LIST chunk (must be skipped), the
-    * fmt chunk, then a data chunk of `dataLen` zero bytes. */
-  private def wavBytes(rate: Int, channels: Int, bits: Int, dataLen: Int): Array[Byte] = {
-    def le16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val blockAlign = channels * bits / 8
-    val list = "LIST".getBytes(StandardCharsets.US_ASCII) ++ le32(6) ++
-      "INFOab".getBytes(StandardCharsets.US_ASCII)
-    val fmt = "fmt ".getBytes(StandardCharsets.US_ASCII) ++ le32(16) ++
-      le16(1) ++ le16(channels) ++ le32(rate) ++ le32(rate * blockAlign) ++
-      le16(blockAlign) ++ le16(bits)
-    val data = "data".getBytes(StandardCharsets.US_ASCII) ++ le32(dataLen) ++
-      Array.fill[Byte](dataLen)(0)
-    val body = "WAVE".getBytes(StandardCharsets.US_ASCII) ++ list ++ fmt ++ data
-    "RIFF".getBytes(StandardCharsets.US_ASCII) ++ le32(body.length) ++ body
-  }
-
-  /** Minimal MP4: ftyp box, then moov containing a decoy udta box and the
-    * mvhd FullBox (v0 or v1) with the given timescale/duration. */
-  private def mp4Bytes(timescale: Int, duration: Long, v1: Boolean): Array[Byte] = {
-    def be32(v: Long) = Array[Byte](((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be64(v: Long) = be32(v >> 32) ++ be32(v & 0xffffffffL)
-    def box(tpe: String, payload: Array[Byte]): Array[Byte] =
-      be32(payload.length + 8L) ++ tpe.getBytes(StandardCharsets.US_ASCII) ++ payload
-    val ftyp = box("ftyp", "isom0000".getBytes(StandardCharsets.US_ASCII))
-    val udta = box("udta", Array.fill[Byte](5)(7)) // decoy sibling to skip
-    val mvhdPayload =
-      if (v1) Array[Byte](1, 0, 0, 0) ++ be64(1L) ++ be64(2L) ++
-        be32(timescale) ++ be64(duration) ++ Array.fill[Byte](80)(0)
-      else Array[Byte](0, 0, 0, 0) ++ be32(1L) ++ be32(2L) ++
-        be32(timescale) ++ be32(duration) ++ Array.fill[Byte](80)(0)
-    ftyp ++ box("moov", udta ++ box("mvhd", mvhdPayload))
-  }
-
-  test("MP4 mvhd timescale/duration parse for v0 and v1 boxes") {
-    assert(VideoHeaders.mp4Info(mp4Bytes(90000, 2700000L, v1 = false)) ===
-      Some((90000, 2700000L)))
-    assert(VideoHeaders.mp4Info(mp4Bytes(600, 3600L, v1 = true)) ===
-      Some((600, 3600L)))
-  }
-
-  test("non-MP4 and truncated payloads are rejected by the box walk") {
-    assert(VideoHeaders.mp4Info("just some text bytes here".getBytes) === None)
-    assert(VideoHeaders.mp4Info(Array.emptyByteArray) === None)
-    val good = mp4Bytes(90000, 2700000L, v1 = false)
-    assert(VideoHeaders.mp4Info(good.take(good.length - 60)) === None) // cut mvhd
-  }
-
-  test("mp4 sample-table walk recovers each frame's exact byte range and chunk") {
-    // doc 7: 5 frames, 4 chunks (chunk 0 = samples 0,1 per the 2-run stsc)
-    val b = graft.ops.Mp4Fixtures.synthMjpegMp4(7L)
-    val t = VideoHeaders.mp4Track(b).get
-    assert(t.codec == "jpeg" && t.nChunks == 4 && t.samples.length == 5)
-    assert(t.samples.map(_.chunkIdx) == Vector(0, 0, 1, 2, 3))
-    // independent re-location: every recovered range is a complete JPEG
-    // (SOI first, EOI last) — a one-byte offset/size slip fails this
-    t.samples.foreach { s =>
-      assert((b(s.start) & 0xff) == 0xff && (b(s.start + 1) & 0xff) == 0xd8)
-      assert((b(s.end - 2) & 0xff) == 0xff && (b(s.end - 1) & 0xff) == 0xd9)
-    }
-    // samples tile the mdat payload exactly: contiguous, no gap, no overlap
-    val sorted = t.samples.sortBy(_.start)
-    sorted.sliding(2).foreach { case Seq(a, c) => assert(a.end == c.start)
-      case _ => () }
-    // truncated moov (cut into the sample tables) is rejected, not misread
-    assert(VideoHeaders.mp4Track(b.take(b.length - 12)).isEmpty)
-    assert(VideoHeaders.mp4Track("plain text".getBytes).isEmpty)
-  }
-
-  test("decodeVideo: real mvhd values, md5 stand-in otherwise") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, mp4Bytes(30000, 900000L, v1 = false), "video"),
-      (2L, "not an mp4 container".getBytes(StandardCharsets.UTF_8), "video"))
-      .toDF("doc_id", "payload", "media_type")
-    val out = Multimodal.decodeVideo(spark, rows)
-      .collect().map(f => f.doc_id -> f).toMap
-    assert(out(1L).timescale === 30000)
-    assert(out(1L).duration_ticks === 900000L)
-    assert(out(1L).duration_ms === 30000L) // 900000 ticks / 30000 Hz = 30s
-    assert(out(2L).timescale >= 600 && out(2L).timescale < 90600)
-    assert(out(2L).duration_ms ===
-      out(2L).duration_ticks * 1000L / out(2L).timescale)
-  }
-
-  test("WAV fmt/data chunks parse after skipping a LIST chunk") {
-    // 44100 Hz stereo 16-bit, 400 data bytes -> 100 frames
-    assert(AudioHeaders.wavInfo(wavBytes(44100, 2, 16, 400)) ===
-      Some((44100, 2, 16, 100L)))
-    assert(AudioHeaders.wavInfo(wavBytes(8000, 1, 8, 123)) ===
-      Some((8000, 1, 8, 123L)))
-  }
-
-  test("non-WAV and truncated payloads are rejected") {
-    assert(AudioHeaders.wavInfo("RIFFnot really a wav".getBytes) === None)
-    assert(AudioHeaders.wavInfo(Array.emptyByteArray) === None)
-    assert(AudioHeaders.wavInfo(wavBytes(44100, 2, 16, 400).take(40)) === None)
-    // fmt present but no data chunk: reject (no sample count)
-    val noData = wavBytes(44100, 2, 16, 0)
-    assert(AudioHeaders.wavInfo(noData.take(noData.length - 8)) === None)
-  }
-
-  test("decodeAudio: real WAV header values, md5 stand-in otherwise") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, wavBytes(22050, 1, 16, 2000), "audio"),
-      (2L, "definitely not riff".getBytes(StandardCharsets.UTF_8), "audio"),
-      (3L, wavBytes(48000, 2, 24, 600), "video")) // wrong type tag: excluded
-      .toDF("doc_id", "payload", "media_type")
-    val out = Multimodal.decodeAudio(spark, rows)
-      .collect().map(f => f.doc_id -> f).toMap
-    assert(out.keySet === Set(1L, 2L))
-    assert(out(1L).sample_rate === 22050)
-    assert(out(1L).channels === 1)
-    assert(out(1L).bits_per_sample === 16)
-    assert(out(1L).n_samples === 1000L) // 2000 bytes / blockAlign 2
-    assert(out(1L).duration_ms === 1000L * 1000L / 22050L)
-    // fallback: rate derived from checksum slice, division-safe band
-    assert(out(2L).sample_rate >= 8000 && out(2L).sample_rate < 48000)
-    assert(out(2L).duration_ms ===
-      out(2L).n_samples * 1000L / out(2L).sample_rate)
-  }
-
-  test("PNG IHDR dimensions parse from real header bytes") {
-    assert(ImageHeaders.pngDims(pngBytes(640, 480)) === Some((640, 480)))
-    assert(ImageHeaders.pngDims(pngBytes(1, 1)) === Some((1, 1)))
-    assert(ImageHeaders.pngDims(pngBytes(16384, 9999)) === Some((16384, 9999)))
-  }
-
-  test("JPEG SOF dimensions parse after walking APP0 and DHT segments") {
-    assert(ImageHeaders.jpegDims(jpegBytes(1920, 1080)) === Some((1920, 1080)))
-    assert(ImageHeaders.jpegDims(jpegBytes(2, 3)) === Some((2, 3)))
-  }
-
-  test("non-image and truncated payloads are rejected") {
-    assert(ImageHeaders.dims("plain text payload".getBytes) === None)
-    assert(ImageHeaders.dims(Array.emptyByteArray) === None)
-    assert(ImageHeaders.dims(pngBytes(640, 480).take(20)) === None) // cut IHDR
-    assert(ImageHeaders.pngDims(pngBytes(0, 480)) === None) // nonpositive dim
-    // JPEG whose stream hits start-of-scan with no SOF
-    val noSof = Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xda.toByte, 0, 4, 0, 0)
-    assert(ImageHeaders.jpegDims(noSof) === None)
-  }
-
-  test("binaryFile media source feeds the decode with real files") {
-    val dir = java.nio.file.Files.createTempDirectory("graftmedia")
-    java.nio.file.Files.write(dir.resolve("cover.png"), pngBytes(640, 480))
-    java.nio.file.Files.write(dir.resolve("photo.jpg"), jpegBytes(1024, 768))
-    java.nio.file.Files.write(dir.resolve("notes.txt"),
-      "not media".getBytes(StandardCharsets.UTF_8))
-    val media = Multimodal.readMedia(spark, dir.toString)
-    val types = media.collect()
-      .map(r => r.getAs[String]("path").split('/').last -> r.getAs[String]("media_type"))
-      .toMap
-    assert(types == Map("cover.png" -> "image", "photo.jpg" -> "image",
-      "notes.txt" -> "binary"))
-    val feats = Multimodal.decodeFeatures(spark, media)
-      .collect().map(f => f.checksum -> ((f.width, f.height))).toMap
-    // find by checksum (doc_id is a path hash): dims must be the REAL ones
-    val pngSum = java.security.MessageDigest.getInstance("MD5")
-      .digest(pngBytes(640, 480)).map(b => f"${b & 0xff}%02x").mkString
-    val jpgSum = java.security.MessageDigest.getInstance("MD5")
-      .digest(jpegBytes(1024, 768)).map(b => f"${b & 0xff}%02x").mkString
-    assert(feats(pngSum) == ((640, 480)))
-    assert(feats(jpgSum) == ((1024, 768)))
-    // metadata-only projection must not fail (content pruning path)
-    assert(media.select("path", "media_type").count() == 3)
-  }
 
   /** Hand-assembled 2-frame GIF89a (independent of GifFixtures): global
     * color table (4 entries), a comment extension, per-frame graphic
@@ -310,82 +111,5 @@ class MultimodalSpec extends SparkSuite {
     assert(out.map(_.doc_id).toSet === Set(7L))
     assert(out.length === GifFixtures.frameCount(7L))
     assert(out.forall(_.n_frames === GifFixtures.frameCount(7L)))
-  }
-
-  test("decodeFeatures: real dims for PNG/JPEG, checksum stand-in otherwise") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, pngBytes(800, 600), "image"),
-      (2L, jpegBytes(320, 240), "image"),
-      (3L, "not an image".getBytes(StandardCharsets.UTF_8), "audio"))
-      .toDF("doc_id", "payload", "media_type")
-    val out = Multimodal.decodeFeatures(spark, rows)
-      .collect().map(f => f.doc_id -> f).toMap
-    assert((out(1L).width, out(1L).height) === (800, 600))
-    assert((out(2L).width, out(2L).height) === (320, 240))
-    // unknown format: md5-derived stand-in == first two checksum bytes
-    val c = out(3L).checksum
-    assert(out(3L).width === Integer.parseInt(c.substring(0, 2), 16))
-    assert(out(3L).height === Integer.parseInt(c.substring(2, 4), 16))
-  }
-
-  test("AviFixtures round-trip: container walk rediscovers every frame") {
-    import graft.ops.{AviFixtures, AviHeaders}
-    for (docId <- 0L to 40L) {
-      val bytes = AviFixtures.synthAvi(docId)
-      val info = AviHeaders.aviInfo(bytes)
-        .getOrElse(fail(s"doc $docId did not parse"))
-      assert(info.usPerFrame === AviFixtures.usPerFrame(docId))
-      assert(info.totalFrames === AviFixtures.nFrames(docId).toLong)
-      assert(info.width === AviFixtures.width(docId))
-      assert(info.height === AviFixtures.height(docId))
-      assert(info.frames.length === AviFixtures.nFrames(docId))
-      info.frames.zipWithIndex.foreach { case (f, i) =>
-        assert(f.stream === 0)
-        if (i % 2 == 0) {
-          assert(f.codeType === "dc")
-          assert(f.dataEnd - f.dataStart === AviFixtures.jpegBytes(docId, i))
-          // the per-frame SOF dimensions, not the container header's
-          val dims = ImageHeaders.jpegDims(java.util.Arrays.copyOfRange(
-            bytes, f.dataStart, f.dataEnd))
-          assert(dims === Some((AviFixtures.jpegW(docId, i),
-            AviFixtures.jpegH(docId, i))))
-        } else {
-          assert(f.codeType === "db")
-          val w = AviFixtures.width(docId); val h = AviFixtures.height(docId)
-          assert(f.dataEnd - f.dataStart === w * h)
-          val expSum = (for (y <- 0 until h; x <- 0 until w)
-            yield AviFixtures.pixel(docId, i, x, y).toLong).sum
-          assert(AviHeaders.byteSum(bytes, f.dataStart, f.dataEnd) === expSum)
-        }
-      }
-    }
-  }
-
-  test("non-AVI and truncated payloads are rejected by the RIFF walk") {
-    import graft.ops.{AviFixtures, AviHeaders}
-    assert(AviHeaders.aviInfo("RIFFxxxxWAVE".getBytes(StandardCharsets.US_ASCII)) === None)
-    assert(AviHeaders.aviInfo("plain text, no container".getBytes(StandardCharsets.UTF_8)) === None)
-    val good = AviFixtures.synthAvi(6L) // has JUNK (6%3=0) and idx1 (6%2=0)
-    assert(AviHeaders.aviInfo(good).nonEmpty)
-    assert(AviHeaders.aviInfo(good.take(40)) === None) // cut mid-header
-  }
-
-  test("decodeAviFrames: per-frame features, non-AVI payloads dropped") {
-    import spark.implicits._
-    import graft.ops.AviFixtures
-    val rows = Seq(
-      (5L, AviFixtures.synthAvi(5L), "video"),
-      (6L, "not a container".getBytes(StandardCharsets.UTF_8), "video"))
-      .toDF("doc_id", "payload", "media_type")
-    val out = Multimodal.decodeAviFrames(spark, rows).collect()
-    assert(out.map(_.doc_id).toSet === Set(5L))
-    assert(out.length === AviFixtures.nFrames(5L))
-    val byIdx = out.map(f => f.frame_idx -> f).toMap
-    assert(byIdx(0).codec === "mjpeg" && byIdx(0).luma_sum.isEmpty)
-    assert(byIdx(0).width === AviFixtures.jpegW(5L, 0))
-    assert(byIdx(1).codec === "raw" && byIdx(1).luma_sum.nonEmpty)
-    assert(byIdx(1).mean_luma ===
-      byIdx(1).luma_sum.map(_ / (AviFixtures.width(5L) * AviFixtures.height(5L))))
   }
 }

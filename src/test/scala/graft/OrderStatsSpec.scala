@@ -52,7 +52,8 @@ class OrderStatsSpec extends SparkSuite {
     val rnd = new scala.util.Random(3)
     val df = (0 until 1003).map(i => (i.toLong, rnd.nextInt(5000).toLong))
       .toDF("id", "v")
-    val h = OrderStats.equiDepthHistogram(df, "v", "id", buckets = 10)
+    val h = OrderStats.equiDepthHistogram(df, "v", "id", knownSize = 1003L,
+        buckets = 10)
       .orderBy("bucket").collect()
     assert(h.map(_.getAs[Long]("n_rows")).sum == 1003L)
     val sizes = h.map(_.getAs[Long]("n_rows"))
@@ -67,11 +68,12 @@ class OrderStatsSpec extends SparkSuite {
 
   test("empty input: consumers get schema-correct empty results, not an AnalysisException") {
     val empty = Seq.empty[(Long, Long)].toDF("id", "v")
-    assert(OrderStats.equiDepthHistogram(empty, "v", "id").count() == 0L)
+    assert(OrderStats.equiDepthHistogram(empty, "v", "id", knownSize = 0L)
+      .count() == 0L)
     val allNull = Seq((1L, null.asInstanceOf[java.lang.Long]))
       .toDF("id", "v")
     assert(OrderStats.equiDepthHistogram(allNull.filter(col("v").isNotNull),
-      "v", "id").count() == 0L)
+      "v", "id", knownSize = 0L).count() == 0L)
     // the stratified form resolves its strata columns on the empty offsets
     val emptyG = Seq.empty[(Long, String, Long)].toDF("id", "g", "v")
     assert(OrderStats.valueRankedBy(emptyG, Seq("g"), "v", "id").count() == 0L)
@@ -97,12 +99,9 @@ class OrderStatsSpec extends SparkSuite {
       "med1" -> "(n + 1) div 2",
       "med2" -> "n div 2 + 1",
       "p99" -> "(99 * (n - 1)) div 100 + 1")
-    // both execution paths must return the same elements: knownSize=None
-    // (two driver actions, literal grid) and knownSize=Some (ONE driver
-    // action, broadcast-joined grid with step-division cells)
-    for (strata <- Seq(Nil, Seq("g")); known <- Seq(None, Some(4000L))) {
+    for (strata <- Seq(Nil, Seq("g"))) {
       val got = OrderStats.rankElements(df, strata, "v", "id", formulas,
-          cells = 64, knownSize = known)
+          knownSize = 4000L, cells = 64)
         .collect()
         .map(r => (if (strata.isEmpty) "" else r.getAs[String]("g"),
           r.getAs[String]("tag"), r.getAs[Long]("rank_target"),
@@ -118,17 +117,15 @@ class OrderStatsSpec extends SparkSuite {
             tag, r.getAs[Long]("val_rank"), r.getAs[Long]("v"),
             r.getAs[Long]("id"), r.getAs[Long]("n")))
       }.toSet
-      assert(got == truth, s"strata=$strata known=$known: " +
+      assert(got == truth, s"strata=$strata: " +
         s"missing=${truth -- got} extra=${got -- truth}")
     }
-    // empty input → schema-correct empty frame (both paths)
+    // empty input → schema-correct empty frame
     val empty = Seq.empty[(Long, Long)].toDF("id", "v")
-    for (known <- Seq(None, Some(0L))) {
-      val e = OrderStats.rankElements(empty, Nil, "v", "id",
-        Seq("m" -> "(n + 1) div 2"), knownSize = known)
-      assert(e.columns.toSeq == Seq("tag", "rank_target", "v", "id", "n"))
-      assert(e.count() == 0L)
-    }
+    val e = OrderStats.rankElements(empty, Nil, "v", "id",
+      Seq("m" -> "(n + 1) div 2"), knownSize = 0L)
+    assert(e.columns.toSeq == Seq("tag", "rank_target", "v", "id", "n"))
+    assert(e.count() == 0L)
   }
 
   test("hash-sample quantiles: rank error within the sampling envelope") {

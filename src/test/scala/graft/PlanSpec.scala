@@ -128,16 +128,14 @@ class PlanSpec extends SparkSuite {
       s"expected 4 band joins with a hamming verify, found $verifies")
   }
 
-  test("fingerprint near-dup pair joins (image + audio) never plan a nested loop") {
-    for (q <- Seq("q_mm_phash_dup", "q_mm_audio_dup")) {
-      val plan = formatted(q)
-      assert(!plan.contains("BroadcastNestedLoopJoin") &&
-        !plan.contains("CartesianProduct"),
-        s"$q banding degraded to an all-pairs join:\n${plan.take(1500)}")
-      // candidates come from the stacked band explode, joined on the
-      // (band_idx, band_val) equi-key
-      assert(plan.contains("Generate"), s"$q lost the band explode")
-    }
+  test("fingerprint near-dup pair join (image) never plans a nested loop") {
+    val plan = formatted("q_mm_phash_dup")
+    assert(!plan.contains("BroadcastNestedLoopJoin") &&
+      !plan.contains("CartesianProduct"),
+      s"q_mm_phash_dup banding degraded to an all-pairs join:\n${plan.take(1500)}")
+    // candidates come from the stacked band explode, joined on the
+    // (band_idx, band_val) equi-key
+    assert(plan.contains("Generate"), "q_mm_phash_dup lost the band explode")
   }
 
   test("hot-path queries stay inside whole-stage codegen") {
@@ -462,7 +460,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("every partition-less window runs over an aggregated (domain-bounded) frame") {
-    // The Verify/Bench logs are saturated with WindowExec "No Partition
+    // The Verify logs are saturated with WindowExec "No Partition
     // Defined" warnings; each site was audited in r12 and is BOUNDED —
     // the window's input is a domain frame collapsed by an aggregation
     // (distinct values / thresholds / deciles / grid cells), never the
