@@ -41,25 +41,23 @@ object Graph {
     *                 hygiene instead of executor-local truncation — the
     *                 lost-executor-safe 100 TB configuration (see
     *                 [[RoundCheckpointer]]; requires `setCheckpointDir`)
+    * @param knownSize row count of `pairs`, which the caller has already
+    *                  persisted; it sizes the round planning
+    *                  ([[Rounds.scopedForSize]]), as in every op below
     * @return (doc_id, deg, pr_scaled) — pr_scaled sums to ~scale
     */
   def pageRank(pairs: DataFrame, iters: Int = 5, damp: Int = 85,
                scale: Long = 1000000000000000L,
                reliable: Boolean = false,
-               knownSize: Option[Long] = None): DataFrame = {
+               knownSize: Long): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100)
     val cp = new RoundCheckpointer(pairs.sparkSession, reliable)
-    // input persisted once, policy sized by it (|edges| <= 2|pairs|) so
-    // the edge-frame build runs under the scoped round planning too;
-    // `knownSize` callers vouch the frame is already persisted + counted
-    // (session-shared pair frames), skipping both jobs
-    knownSize.foreach(_ =>
-      graft.core.SharedFrames.assertPersisted(pairs, "Graph iterative op"))
-    val p = knownSize.fold(graft.core.SharedFrames.register(
-      pairs.select(col("id_a"), col("id_b"))))(_ =>
-      pairs.select(col("id_a"), col("id_b")))
-    val nPairs = knownSize.getOrElse(p.count())
-    Rounds.scopedForSize(pairs.sparkSession, nPairs) {
+    // the caller persists and counts the pair frame (session-shared pair
+    // frames); policy sized by it (|edges| <= 2|pairs|) so the edge-frame
+    // build runs under the scoped round planning too
+    graft.core.SharedFrames.assertPersisted(pairs, "Graph iterative op")
+    val p = pairs.select(col("id_a"), col("id_b"))
+    Rounds.scopedForSize(pairs.sparkSession, knownSize) {
       val fwd = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       val rev = p.select(col("id_b").as("src"), col("id_a").as("dst"))
       val undirected = fwd.unionByName(rev).distinct()
@@ -126,16 +124,12 @@ object Graph {
     */
   def labelPropagation(pairs: DataFrame, iters: Int = 4,
                        reliable: Boolean = false,
-                       knownSize: Option[Long] = None): DataFrame = {
+                       knownSize: Long): DataFrame = {
     require(iters >= 1)
     val cp = new RoundCheckpointer(pairs.sparkSession, reliable)
-    knownSize.foreach(_ =>
-      graft.core.SharedFrames.assertPersisted(pairs, "Graph iterative op"))
-    val p = knownSize.fold(graft.core.SharedFrames.register(
-      pairs.select(col("id_a"), col("id_b"))))(_ =>
-      pairs.select(col("id_a"), col("id_b")))
-    val nPairs = knownSize.getOrElse(p.count())
-    Rounds.scopedForSize(pairs.sparkSession, nPairs) {
+    graft.core.SharedFrames.assertPersisted(pairs, "Graph iterative op")
+    val p = pairs.select(col("id_a"), col("id_b"))
+    Rounds.scopedForSize(pairs.sparkSession, knownSize) {
       val fwd = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       val rev = p.select(col("id_b").as("src"), col("id_a").as("dst"))
       val edges = graft.core.SharedFrames.register(
@@ -184,20 +178,16 @@ object Graph {
     */
   def hopDistances(pairs: DataFrame, seeds: DataFrame, maxHops: Int,
                    reliable: Boolean = false,
-                   knownSize: Option[Long] = None): DataFrame = {
+                   knownSize: Long): DataFrame = {
     require(maxHops >= 0)
     // Two iterated lineages (frontier, settled set) that read each other's
     // PRIOR rounds — one checkpointer each, so neither's supersede-delete
     // can drop a dir the other still needs (see RoundCheckpointer scaladoc)
     val cpFrontier = new RoundCheckpointer(pairs.sparkSession, reliable)
     val cpDist = new RoundCheckpointer(pairs.sparkSession, reliable)
-    knownSize.foreach(_ =>
-      graft.core.SharedFrames.assertPersisted(pairs, "Graph iterative op"))
-    val p = knownSize.fold(graft.core.SharedFrames.register(
-      pairs.select(col("id_a"), col("id_b"))))(_ =>
-      pairs.select(col("id_a"), col("id_b")))
-    val nPairs = knownSize.getOrElse(p.count())
-    Rounds.scopedForSize(pairs.sparkSession, nPairs) {
+    graft.core.SharedFrames.assertPersisted(pairs, "Graph iterative op")
+    val p = pairs.select(col("id_a"), col("id_b"))
+    Rounds.scopedForSize(pairs.sparkSession, knownSize) {
       val fwd = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       val rev = p.select(col("id_b").as("src"), col("id_a").as("dst"))
       val edges = graft.core.SharedFrames.register(
@@ -254,16 +244,12 @@ object Graph {
     */
   def kCore(pairs: DataFrame, k: Int, iters: Int,
             reliable: Boolean = false,
-            knownSize: Option[Long] = None): DataFrame = {
+            knownSize: Long): DataFrame = {
     require(k >= 1 && iters >= 1)
     val cp = new RoundCheckpointer(pairs.sparkSession, reliable)
-    knownSize.foreach(_ =>
-      graft.core.SharedFrames.assertPersisted(pairs, "Graph.kCore"))
-    val pc = knownSize.fold(graft.core.SharedFrames.register(
-      pairs.select(col("id_a"), col("id_b"))))(_ =>
-      pairs.select(col("id_a"), col("id_b")))
-    val nPairs = knownSize.getOrElse(pc.count())
-    Rounds.scopedForSize(pairs.sparkSession, nPairs) {
+    graft.core.SharedFrames.assertPersisted(pairs, "Graph.kCore")
+    val pc = pairs.select(col("id_a"), col("id_b"))
+    Rounds.scopedForSize(pairs.sparkSession, knownSize) {
       val fwd = pc.select(col("id_a").as("src"), col("id_b").as("dst"))
       val rev = pc.select(col("id_b").as("src"), col("id_a").as("dst"))
       var edges = graft.core.SharedFrames.register(

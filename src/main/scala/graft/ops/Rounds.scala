@@ -3,33 +3,6 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-round lineage truncation for iterative ops ([[Dedup.connectedComponents]],
-  * [[Graph.pageRank]], [[Graph.labelPropagation]], [[Graph.hopDistances]]),
-  * shared between the local and durable configurations:
-  *
-  *  - `reliable = false`: `localCheckpoint` — truncates the logical plan so
-  *    round N does not replay rounds 1..N-1, storing blocks on executors.
-  *    Fast, but on a real cluster a lost executor kills the job
-  *    mid-iteration (blocks are not replicated and the lineage needed to
-  *    recompute them was just cut).
-  *  - `reliable = true`: durable `checkpoint` (requires
-  *    `spark.sparkContext.setCheckpointDir` on fault-tolerant storage — the
-  *    100 TB configuration), plus checkpoint-dir HYGIENE: Spark never
-  *    deletes superseded checkpoint data on its own
-  *    (`spark.cleaner.referenceTracking.cleanCheckpoints` defaults to
-  *    false), so a long iterative run would leak one full frame copy per
-  *    round on durable storage. Each instance tracks the `rdd-*` dirs its
-  *    own rounds create (never touching other checkpoint users') and
-  *    deletes a round's dirs once a later round has materialized; only the
-  *    final round's data — which the returned frame reads — survives.
-  *
-  * One instance per ITERATED FRAME LINEAGE: a loop that checkpoints two
-  * frames per round (e.g. BFS frontier + settled set) must use two
-  * instances, because instance-level cleanup assumes "a dir from a prior
-  * round of THIS lineage is superseded once the current round
-  * materializes" — true within one lineage, false across lineages that
-  * read each other's prior rounds.
-  */
 /** Execution policy for iterative rounds. */
 private[graft] object Rounds {
 
@@ -78,6 +51,33 @@ private[graft] object Rounds {
   }
 }
 
+/** Per-round lineage truncation for iterative ops ([[Dedup.connectedComponents]],
+  * [[Graph.pageRank]], [[Graph.labelPropagation]], [[Graph.hopDistances]],
+  * [[Graph.kCore]]), shared between the local and durable configurations:
+  *
+  *  - `reliable = false`: `localCheckpoint` — truncates the logical plan so
+  *    round N does not replay rounds 1..N-1, storing blocks on executors.
+  *    Fast, but on a real cluster a lost executor kills the job
+  *    mid-iteration (blocks are not replicated and the lineage needed to
+  *    recompute them was just cut).
+  *  - `reliable = true`: durable `checkpoint` (requires
+  *    `spark.sparkContext.setCheckpointDir` on fault-tolerant storage — the
+  *    100 TB configuration), plus checkpoint-dir HYGIENE: Spark never
+  *    deletes superseded checkpoint data on its own
+  *    (`spark.cleaner.referenceTracking.cleanCheckpoints` defaults to
+  *    false), so a long iterative run would leak one full frame copy per
+  *    round on durable storage. Each instance tracks the `rdd-*` dirs its
+  *    own rounds create (never touching other checkpoint users') and
+  *    deletes a round's dirs once a later round has materialized; only the
+  *    final round's data — which the returned frame reads — survives.
+  *
+  * One instance per ITERATED FRAME LINEAGE: a loop that checkpoints two
+  * frames per round (e.g. BFS frontier + settled set) must use two
+  * instances, because instance-level cleanup assumes "a dir from a prior
+  * round of THIS lineage is superseded once the current round
+  * materializes" — true within one lineage, false across lineages that
+  * read each other's prior rounds.
+  */
 private[graft] final class RoundCheckpointer(spark: SparkSession,
                                              reliable: Boolean) {
   private val sc = spark.sparkContext

@@ -645,7 +645,7 @@ object DedupQueries extends QueryGroup {
     val seeds = Tables.documents(s, dir)
       .filter(col("doc_id") < 10).select("doc_id")
     graft.ops.Graph.hopDistances(pairs, seeds, maxHops = HopRadius,
-        knownSize = Some(sharedJaccardPairsCount(s, dir)))
+        knownSize = sharedJaccardPairsCount(s, dir))
       .orderBy("doc_id")
   }
 
@@ -656,7 +656,7 @@ object DedupQueries extends QueryGroup {
     * min-label tiebreak, replayed exactly as unrolled SQL stages. */
   private def communities(s: SparkSession, dir: String): DataFrame =
     graft.ops.Graph.labelPropagation(sharedJaccardPairs(s, dir), iters = LpIters,
-        knownSize = Some(sharedJaccardPairsCount(s, dir)))
+        knownSize = sharedJaccardPairsCount(s, dir))
       .orderBy("doc_id")
 
   /** Shared ExactSubstr-span oracle preamble: 8-gram seeds (corpus count
@@ -820,7 +820,7 @@ object DedupQueries extends QueryGroup {
     * rounds). */
   private def kcore(s: SparkSession, dir: String): DataFrame =
     graft.ops.Graph.kCore(sharedJaccardPairs(s, dir), CoreK, CoreIters,
-        knownSize = Some(sharedJaccardPairsCount(s, dir)))
+        knownSize = sharedJaccardPairsCount(s, dir))
       .orderBy("doc_id")
 
   /** Unrolled peeling rounds e1..e`n` over the CTE `e0` (mirrors
@@ -890,7 +890,7 @@ object DedupQueries extends QueryGroup {
     * replay exactly as five unrolled SQL stages. */
   private def pagerank(s: SparkSession, dir: String): DataFrame =
     graft.ops.Graph.pageRank(sharedJaccardPairs(s, dir), iters = PrIters,
-        knownSize = Some(sharedJaccardPairsCount(s, dir)))
+        knownSize = sharedJaccardPairsCount(s, dir))
       .orderBy("doc_id")
 
   private val PrIters = 5

@@ -3,13 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{SharedFrames, Tables}
-import graft.ops.{ImageHash, Multimodal, Similarity}
+import graft.ops.Similarity
 
-/** Similarity search over `embeddings` and multimodal feature extraction
-  * over binary payloads: brute-force cosine top-k (the correctness
-  * baseline), random-hyperplane LSH bucketed near-dup pairs, seeded IVF
-  * ANN (both scale paths), and the partition-wise GIF decode (frame walk,
-  * LZW pixels, dHash near-dup pairs).
+/** Similarity search over `embeddings`: brute-force cosine top-k (the
+  * correctness baseline), random-hyperplane LSH bucketed near-dup pairs
+  * and seeded IVF ANN (both scale paths).
   * Every query is oracle-verified — the LSH plane matrix is inlined into
   * the generated SQL, and the IVF centroid seeding is recomputed by the
   * SQL itself.
@@ -190,45 +188,6 @@ object SimilarityQueries extends QueryGroup {
       .withColumn("from_batch", col("neighbor_id") % 10 === 9)
       .orderBy("query_id", "rank")
 
-  /** Frame sampling over video payloads: per-frame rows fan out AFTER
-    * partition-wise feature extraction, so media bytes are never
-    * duplicated per frame (see [[Multimodal.sampleFrames]]). */
-  private def mmFrames(s: SparkSession, dir: String): DataFrame =
-    Multimodal.sampleFrames(s, Multimodal.asMedia(Tables.documents(s, dir)))
-      .toDF()
-      .orderBy("doc_id", "frame_idx")
-
-  /** REAL GIF frame decode under an oracle gate: every doc_id is encoded
-    * into a structurally varied well-formed GIF ([[graft.ops.GifFixtures]]
-    * — color tables, comment extensions, graphic-control delays, multi-
-    * sub-block image data, all pure integer functions of doc_id), then
-    * decoded back by the real block walk [[GifHeaders.gifInfo]]. The SQL
-    * oracle predicts the metadata from the same formulas WITHOUT parsing
-    * bytes, so a hash match proves the parser rediscovers exactly what the
-    * independent encoder wrote. */
-  private def mmGif(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val media = Tables.documents(s, dir)
-      .select(col("doc_id")).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.GifFixtures.synthGif(id), "image"))
-      .toDF()
-    Multimodal.decodeGifFrames(s, media).toDF().orderBy("doc_id", "frame_idx")
-  }
-
-  /** Pixel-level fixture corpus: every doc_id encoded as a 4-color GIF
-    * with REAL LZW-compressed pixels ([[graft.ops.GifPixelFixtures]] —
-    * an independent compressor; the decode side shares no code). */
-  private def pixelGifMedia(s: SparkSession, dir: String,
-                            limit: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    limit.fold(ids)(n => ids.filter(col("doc_id") < n)).as[Long]
-      .map(id => Multimodal.MediaRecord(
-        id, graft.ops.GifPixelFixtures.synthPixelGif(id), "image"))
-      .toDF()
-  }
-
   /** ANN index EVALUATION: recall@5 of the seeded IVF against the
     * brute-force exact top-5, per query — the accept/reject number an
     * index rollout is judged by, produced by the engine itself instead
@@ -249,48 +208,6 @@ object SimilarityQueries extends QueryGroup {
       .agg(count(col("ivf_neighbor")).as("n_hits"))
       .withColumn("recall", round(col("n_hits").cast("double") / 5, 6))
       .orderBy("query_id")
-  }
-
-  /** REAL pixel decode under an oracle gate: LZW-decompress frame 0,
-    * map the palette to integer luma, box-downscale to the 9x8 dHash
-    * grid, emit the 64 comparison bits as four 16-bit bands. The SQL
-    * oracle recomputes every pixel, cell sum, and bit from the fixture
-    * formulas WITHOUT touching bytes — a hash match proves the
-    * independent encode -> LZW decode -> downscale -> hash chain. */
-  private def mmPhash(s: SparkSession, dir: String): DataFrame =
-    ImageHash.phash(s, pixelGifMedia(s, dir)).toDF().orderBy("doc_id")
-
-  /** Image near-dup pairs over the perceptual hashes: banded equi-join
-    * candidates (4 x 16-bit bands — hamming <= 3 recall is EXACT by
-    * pigeonhole, same invariant as the SimHash64 text detector), then
-    * the full 64-bit hamming verify. Restricted to doc_id < 120 to keep
-    * the oracle's brute-force twin bounded; the Spark side never goes
-    * all-pairs at any corpus size. */
-  private def mmPhashDup(s: SparkSession, dir: String): DataFrame =
-    ImageHash.phashPairs(
-        ImageHash.phash(s, pixelGifMedia(s, dir, Some(120L))).toDF(),
-        maxHamming = 3)
-      .orderBy("doc_a", "doc_b")
-
-  /** Frame sampling with REAL pixel decode: every frame of every
-    * (1-or-2-frame) fixture GIF is LZW-decoded and summarized by exact
-    * luma sum — the animated-media version of the phash gate. */
-  private def mmFramePx(s: SparkSession, dir: String): DataFrame =
-    ImageHash.frameLumas(s, pixelGifMedia(s, dir)).toDF()
-      .orderBy("doc_id", "frame_idx")
-
-  /** Incremental image near-dup: docs >= 100 arrive as a new batch
-    * against the persisted fingerprint index of docs < 100 —
-    * batch-vs-index + batch-vs-batch banded joins only. The oracle is
-    * the FULL brute-force pair set restricted to batch-touching pairs
-    * (exact restriction, since fingerprints are per-doc). */
-  private def mmPhashIncr(s: SparkSession, dir: String): DataFrame = {
-    val fpAll = ImageHash.phash(s, pixelGifMedia(s, dir, Some(120L))).toDF()
-    ImageHash.incrementalPhashPairs(
-        fpAll.filter(col("doc_id") < 100),
-        fpAll.filter(col("doc_id") >= 100),
-        maxHamming = 3)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Distributed Gram / covariance matrix over the embedding corpus —
@@ -645,55 +562,7 @@ object SimilarityQueries extends QueryGroup {
     "q_sim_ivf" -> ivf,
     "q_sim_ivf_incr" -> ivfIncr,
     "q_ann_recall" -> annRecall,
-    "q_mm_frames" -> mmFrames,
-    "q_mm_gif" -> mmGif,
-    "q_mm_phash" -> mmPhash,
-    "q_mm_phash_dup" -> mmPhashDup,
-    "q_mm_frame_px" -> mmFramePx,
-    "q_mm_phash_incr" -> mmPhashIncr,
   )
-
-  /** Shared phash oracle preamble: replays the ENTIRE pixel pipeline of
-    * [[graft.ops.GifPixelFixtures]] + [[graft.ops.ImageHash]] from the
-    * fixture formulas — per-pixel luma, 9x8 floor-div cell sums, the 64
-    * cross-multiplied comparison bits, and the four 16-bit bands — ending
-    * in a `ph(doc_id, w, h, gray_sum, p0..p3)` CTE. `docFilter` bounds
-    * the doc set (e.g. "WHERE doc_id < 120" for the pair twin). */
-  private def phashSqlPrefix(docFilter: String): String =
-    s"""d AS (
-       |  SELECT doc_id, doc_id % 7 AS base, doc_id % 40 AS poff,
-       |    9 * ((doc_id % 7) % 3 + 2) AS w, 8 * ((doc_id % 7) % 4 + 2) AS h,
-       |    CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END AS pert
-       |  FROM documents $docFilter),
-       |xs AS (SELECT unnest(generate_series(0, 35)) AS x),
-       |ys AS (SELECT unnest(generate_series(0, 39)) AS y),
-       |pix AS (
-       |  SELECT doc_id, w, h, x, y,
-       |    40 * ((CAST(base + 1 AS BIGINT) * (3 * x + 7 * y + x * y + 1)
-       |           + CASE WHEN pert = 1 AND x = y THEN 1 ELSE 0 END) % 4) + poff AS g
-       |  FROM d CROSS JOIN xs CROSS JOIN ys
-       |  WHERE x < w AND y < h),
-       |cells AS (
-       |  SELECT doc_id, (y * 8) // h AS r, (x * 9) // w AS c,
-       |    CAST(sum(g) AS BIGINT) AS cs, COUNT(*) AS cn
-       |  FROM pix GROUP BY 1, 2, 3),
-       |bits AS (
-       |  SELECT a.doc_id, a.r * 8 + a.c AS idx,
-       |    CASE WHEN a.cs * b.cn < b.cs * a.cn THEN 1 ELSE 0 END AS bit
-       |  FROM cells a JOIN cells b
-       |    ON a.doc_id = b.doc_id AND a.r = b.r AND b.c = a.c + 1
-       |  WHERE a.c < 8),
-       |bands AS (
-       |  SELECT doc_id,
-       |    CAST(sum(CASE WHEN idx // 16 = 0 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p0,
-       |    CAST(sum(CASE WHEN idx // 16 = 1 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p1,
-       |    CAST(sum(CASE WHEN idx // 16 = 2 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p2,
-       |    CAST(sum(CASE WHEN idx // 16 = 3 THEN bit << (idx % 16) ELSE 0 END) AS INTEGER) AS p3
-       |  FROM bits GROUP BY doc_id),
-       |gs AS (SELECT doc_id, CAST(sum(g) AS BIGINT) AS gray_sum FROM pix GROUP BY doc_id),
-       |ph AS (
-       |  SELECT d.doc_id, w, h, gray_sum, p0, p1, p2, p3
-       |  FROM d JOIN gs USING (doc_id) JOIN bands USING (doc_id))""".stripMargin
 
   /** Shared PQ oracle preamble (after an `e(vec_id, v)` CTE): per
     * subspace j, `cent<j>(c, cv)` = the md5-seeded codebook and
@@ -1254,92 +1123,5 @@ object SimilarityQueries extends QueryGroup {
         |  FROM pairs)
         |SELECT query_id, neighbor_id, cosine, rank FROM ranked
         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // every doc becomes a synthetic GIF whose metadata is a pure integer
-    // function of doc_id (GifFixtures formulas, replayed here); the Spark
-    // side gets those values by PARSING the encoded bytes with the real
-    // block walk — agreement pins the decode path end to end
-    "q_mm_gif" ->
-      """WITH d AS (SELECT doc_id, doc_id % 3 + 1 AS nf FROM documents),
-        |f AS (SELECT doc_id, nf, unnest(generate_series(0, nf - 1)) AS i FROM d)
-        |SELECT doc_id,
-        |  CAST(i AS INTEGER) AS frame_idx,
-        |  CAST(nf AS INTEGER) AS n_frames,
-        |  CAST(doc_id % 300 + 20 AS INTEGER) AS screen_w,
-        |  CAST(doc_id % 200 + 20 AS INTEGER) AS screen_h,
-        |  CAST((doc_id + 3 * i) % 10 AS INTEGER) AS frame_left,
-        |  CAST((doc_id + 5 * i) % 8 AS INTEGER) AS frame_top,
-        |  CAST((doc_id + 11 * i) % 64 + 1 AS INTEGER) AS frame_w,
-        |  CAST((doc_id + 7 * i) % 48 + 1 AS INTEGER) AS frame_h,
-        |  CAST((doc_id + i) % 500 AS INTEGER) AS delay_cs
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // the whole pixel pipeline (LZW decode -> palette luma -> 9x8 cells
-    // -> dHash bands) replayed from the fixture formulas without parsing
-    // a single byte — agreement pins the codec chain end to end
-    "q_mm_phash" ->
-      s"""WITH ${phashSqlPrefix("")}
-         |SELECT doc_id, CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-         |  CAST(w * h AS BIGINT) AS n_pixels, gray_sum, p0, p1, p2, p3
-         |FROM ph ORDER BY doc_id""".stripMargin,
-
-    // brute-force pair twin of the banded join: at hamming <= 3 with 4
-    // bands the banded candidate set is provably complete (pigeonhole),
-    // so brute force and the banded join agree exactly
-    "q_mm_phash_dup" ->
-      s"""WITH ${phashSqlPrefix("WHERE doc_id < 120")}
-         |SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming FROM (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    bit_count(xor(a.p0, b.p0)) + bit_count(xor(a.p1, b.p1))
-         |      + bit_count(xor(a.p2, b.p2)) + bit_count(xor(a.p3, b.p3)) AS hamming
-         |  FROM ph a JOIN ph b ON a.doc_id < b.doc_id)
-         |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin,
-
-    // per-frame pixel decode: the multiplier advances per frame, so each
-    // frame's exact luma sum is an independent probe of the LZW stream
-    "q_mm_frame_px" ->
-      """WITH d AS (
-        |  SELECT doc_id, doc_id % 7 AS base, doc_id % 40 AS poff,
-        |    9 * ((doc_id % 7) % 3 + 2) AS w, 8 * ((doc_id % 7) % 4 + 2) AS h,
-        |    doc_id % 2 + 1 AS nf,
-        |    CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END AS pert
-        |  FROM documents),
-        |fr AS (SELECT d.*, unnest(generate_series(0, nf - 1)) AS f FROM d),
-        |xs AS (SELECT unnest(generate_series(0, 35)) AS x),
-        |ys AS (SELECT unnest(generate_series(0, 39)) AS y),
-        |pix AS (
-        |  SELECT doc_id, f, w, h,
-        |    40 * ((CAST((base + f) % 7 + 1 AS BIGINT) * (3 * x + 7 * y + x * y + 1)
-        |           + CASE WHEN pert = 1 AND x = y THEN 1 ELSE 0 END) % 4) + poff AS g
-        |  FROM fr CROSS JOIN xs CROSS JOIN ys WHERE x < w AND y < h)
-        |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
-        |  CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-        |  CAST(w * h AS BIGINT) AS n_pixels, CAST(sum(g) AS BIGINT) AS gray_sum
-        |FROM pix GROUP BY doc_id, f, w, h
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // videos = doc_id % 3 = 2 (asMedia's type tag); stub frame checksum =
-    // md5(payload || frame_idx digits), identical byte-wise in both engines
-    "q_mm_frames" ->
-      """WITH v AS (
-        |  SELECT doc_id, text, octet_length(encode(text)) % 7 + 1 AS n
-        |  FROM documents WHERE doc_id % 3 = 2),
-        |f AS (SELECT doc_id, text, unnest(generate_series(0, n - 1)) AS frame_idx FROM v)
-        |SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-        |  md5(text || CAST(frame_idx AS VARCHAR)) AS frame_checksum,
-        |  CAST(('0x' || substr(md5(text || CAST(frame_idx AS VARCHAR)), 1, 2)) AS INTEGER) AS brightness
-        |FROM f ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // full brute-force pair set restricted to pairs touching the new
-    // batch (doc_id >= 100) — what the incremental banded join must equal
-    "q_mm_phash_incr" ->
-      s"""WITH ${phashSqlPrefix("WHERE doc_id < 120")}
-         |SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming FROM (
-         |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-         |    bit_count(xor(x.p0, y.p0)) + bit_count(xor(x.p1, y.p1))
-         |      + bit_count(xor(x.p2, y.p2)) + bit_count(xor(x.p3, y.p3)) AS hamming
-         |  FROM ph x JOIN ph y ON x.doc_id < y.doc_id)
-         |WHERE hamming <= 3 AND (doc_a >= 100 OR doc_b >= 100)
-         |ORDER BY doc_a, doc_b""".stripMargin,
   )
 }

@@ -985,178 +985,6 @@ object TextQueries extends QueryGroup {
         length(col("record")).as("n_chars"))
       .orderBy("doc_id", "part_idx")
 
-  private val PcRounds = 3
-  private val PcFeats = Seq("x0", "x1", "x2", "x3")
-
-  /** Integer feature frame for the perceptron. Target label: the
-    * length-quality rule n_tokens >= 60 (the "substantial document"
-    * half of the corpus quality gate); features are CHEAP surface
-    * counts that correlate with length without being it — the distill-
-    * a-heavy-heuristic-into-a-fast-classifier shape (the corpus `lang`
-    * column is a random label with zero content signal, so a language
-    * target would only teach the majority class). Features are CENTERED
-    * by fixed integer offsets (part of the feature spec, mirrored in
-    * the oracle): an uncentered all-positive count vector makes every
-    * round-1 margin positive and the batch update degenerate — the
-    * integer analog of standardizing inputs. */
-  private def perceptronFeats(s: SparkSession, dir: String): DataFrame = {
-    val toks = org.apache.spark.sql.functions.split(trim(col("text")), "\\s+")
-    Tables.documents(s, dir).select(
-      col("doc_id"),
-      when(size(toks) >= 60, 1L).otherwise(-1L).as("y"),
-      lit(1L).as("x0"),
-      (size(regexp_extract_all(col("text"),
-        lit("""\b(the|a|and|is|of|to)\b"""), lit(0))).cast("long") - 4).as("x1"),
-      (size(array_distinct(toks)).cast("long") - 23).as("x2"),
-      (size(filter(toks, t => length(t) >= 6)).cast("long") - 11).as("x3"))
-  }
-
-  private val pcWeightCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Long]]
-
-  /** Session-cached feature frame + trained weights (shared by the gate
-    * query and the kappa agreement audit — train once per session). */
-  private def pcTrained(s: SparkSession, dir: String): (DataFrame, Array[Long]) = {
-    val f = graft.core.SharedFrames.cached(s, s"pcfeats:$dir") {
-      perceptronFeats(s, dir)
-    }
-    val w = pcWeightCache.getOrElseUpdate(
-      s"${s.sparkContext.applicationId}:${System.identityHashCode(s)}:$dir",
-      graft.ops.Perceptron.train(f, PcFeats, "y", PcRounds).last)
-    (f, w)
-  }
-
-  /** TRAINED quality gate: a batch perceptron ([[graft.ops.Perceptron]])
-    * learns the n_tokens >= 60 length-quality rule from cheap surface
-    * counts in {{PcRounds}} exact-integer rounds — the fastText-shape
-    * "distill the heavy heuristic into a fast classifier" gate (learning
-    * capability itself is pinned by PerceptronSpec on planted separable
-    * data). Each round is one map-side-combined aggregation; only the
-    * 4-long weight vector reaches the driver and re-enters as literals,
-    * so the rounds replay bit-for-bit as unrolled SQL stages. */
-  private def perceptronGate(s: SparkSession, dir: String): DataFrame = {
-    val (f, w) = pcTrained(s, dir)
-    val m = graft.ops.Perceptron.margin(PcFeats, w)
-    f.select(col("doc_id"), col("y"), m.as("margin"),
-        (m > 0).as("pred_keep"), ((m > 0) === (col("y") === 1L)).as("correct"))
-      .orderBy("doc_id")
-  }
-
-  /** Exact rank-free AUC ([[graft.ops.Eval.aucByScore]]) of the trained
-    * perceptron margin against its quality label — the classifier-eval
-    * statistic a distilled quality gate ships with. The corpus collapses
-    * to its distinct integer margins in one aggregation; no per-row
-    * ranking anywhere. */
-  private def auc(s: SparkSession, dir: String): DataFrame = {
-    val (f, w) = pcTrained(s, dir)
-    val m = graft.ops.Perceptron.margin(PcFeats, w)
-    graft.ops.Eval.aucByScore(
-      f.select(m.as("s"), (col("y") === 1L).as("pos")), "s", "pos")
-  }
-
-  /** Calibration table: the distinct-margin frame bucketed into 8
-    * fixed-width integer bins over [min, max] (the OrderStats grid
-    * trick at report granularity), each bin reporting its doc count,
-    * observed positive rate, and margin envelope — the reliability
-    * diagram a gate owner reads before treating the margin as a
-    * confidence. Integer bin arithmetic; one rounded division per bin. */
-  private def calibration(s: SparkSession, dir: String): DataFrame = {
-    val (f, w) = pcTrained(s, dir)
-    val m = graft.ops.Perceptron.margin(PcFeats, w)
-    val scored = f.select(m.as("sv"), (col("y") === 1L).as("pos"))
-    // bounds stay IN the lazy plan (a broadcast 1-row cross join), so the
-    // whole query is one job and the oracle is a straight transcription —
-    // no eager driver pull in the query body
-    val bounds = scored.agg(min(col("sv")).as("lo"), max(col("sv")).as("hi"))
-    scored
-      .crossJoin(broadcast(bounds))
-      .withColumn("bin", expr("CAST(((sv - lo) * 8) div (hi - lo + 1) AS INT) + 1"))
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("pos"), 1L).otherwise(0L)).as("n_pos"),
-        min(col("sv")).as("lo_margin"), max(col("sv")).as("hi_margin"))
-      .select(col("bin"), col("n_docs"), col("n_pos"),
-        round(col("n_pos").cast("double") / col("n_docs").cast("double"), 6)
-          .as("pos_rate"),
-        col("lo_margin"), col("hi_margin"))
-      .orderBy("bin")
-  }
-
-  /** Operating-point table ([[graft.ops.Eval.prCurve]]): precision and
-    * recall at every distinct margin threshold — the table read to pick
-    * the gate's cut. Same distinct-margin collapse as `q_auc`. */
-  private def prCurve(s: SparkSession, dir: String): DataFrame = {
-    val (f, w) = pcTrained(s, dir)
-    val m = graft.ops.Perceptron.margin(PcFeats, w)
-    graft.ops.Eval.prCurve(
-        f.select(m.as("s"), (col("y") === 1L).as("pos")), "s", "pos")
-      .orderBy(col("threshold").desc)
-  }
-
-  /** Cohen's kappa agreement audit between the EXACT length-quality
-    * rule (the perceptron's training target) and the TRAINED decision —
-    * the labeler-QA statistic a weak-supervision pipeline runs before
-    * trusting a distilled classifier: chance-corrected agreement, not
-    * raw accuracy (a majority-class predictor scores high accuracy and
-    * kappa ~ 0). All-integer confusion counts; po and pe stay rational
-    * (pe_num/n²) until one final double division: kappa =
-    * (po_num − pe_num)/(n² − pe_num) with po_num = (n11+n00)·n. One
-    * map-side-combined aggregation over the cached feature frame. */
-  private def annotatorKappa(s: SparkSession, dir: String): DataFrame = {
-    val (f, w) = pcTrained(s, dir)
-    val a = col("y") === 1L
-    val b = graft.ops.Perceptron.margin(PcFeats, w) > 0
-    val conf = f.agg(
-      count(lit(1)).as("n"),
-      sum(when(a && b, 1L).otherwise(0L)).as("n11"),
-      sum(when(a && !b, 1L).otherwise(0L)).as("n10"),
-      sum(when(!a && b, 1L).otherwise(0L)).as("n01"),
-      sum(when(!a && !b, 1L).otherwise(0L)).as("n00"))
-    val peNum = (col("n11") + col("n10")) * (col("n11") + col("n01")) +
-      (col("n01") + col("n00")) * (col("n10") + col("n00"))
-    val poNum = (col("n11") + col("n00")) * col("n")
-    val den = col("n") * col("n") - peNum
-    conf.select(col("n"), col("n11"), col("n10"), col("n01"), col("n00"),
-      round((col("n11") + col("n00")).cast("double") / col("n"), 6).as("po"),
-      round(peNum.cast("double") / (col("n") * col("n")), 6).as("pe"),
-      when(den === 0, lit(null).cast("double"))
-        .otherwise(round((poNum - peNum).cast("double") / den, 6)).as("kappa"))
-  }
-
-  /** w·x over the oracle CTE alias `w`. */
-  private def pcMarginSql: String =
-    PcFeats.zipWithIndex.map { case (x, i) => s"w.w$i*$x" }.mkString(" + ")
-
-  /** Shared oracle feature CTE (mirrors [[perceptronFeats]]). */
-  private def pcFeatsSql: String =
-    """f AS (
-      |  SELECT doc_id,
-      |    CAST(CASE WHEN len(string_split_regex(trim(text), '\s+')) >= 60
-      |         THEN 1 ELSE -1 END AS BIGINT) AS y,
-      |    CAST(1 AS BIGINT) AS x0,
-      |    CAST(len(regexp_extract_all(text, '\b(the|a|and|is|of|to)\b')) AS BIGINT) - 4 AS x1,
-      |    CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS BIGINT) - 23 AS x2,
-      |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-      |         t -> len(t) >= 6)) AS BIGINT) - 11 AS x3
-      |  FROM documents)""".stripMargin
-
-  /** Unrolled perceptron rounds w1..w`n` over the feature CTE `f`
-    * (mirrors Perceptron.train; round 1 is the plain class sum because
-    * w0 = 0 misclassifies every row). */
-  private def pcRoundsSql(n: Int): String = {
-    val r1 = s"""w1 AS (SELECT ${PcFeats.zipWithIndex.map { case (x, i) =>
-      s"CAST(coalesce(sum(y*$x), 0) AS BIGINT) AS w$i" }.mkString(", ")} FROM f)"""
-    val rest = (2 to n).map { k =>
-      s"""u$k AS (SELECT ${PcFeats.zipWithIndex.map { case (x, i) =>
-        s"CAST(coalesce(sum(CASE WHEN y*($pcMarginSql) <= 0 THEN y*$x ELSE 0 END), 0) AS BIGINT) AS d$i"
-      }.mkString(", ")}
-         |  FROM f, w${k - 1} w),
-         |w$k AS (SELECT ${PcFeats.indices.map(i =>
-        s"w.w$i + u.d$i AS w$i").mkString(", ")} FROM w${k - 1} w, u$k u)""".stripMargin
-    }
-    (r1 +: rest).mkString(",\n")
-  }
-
   /** The bigram LM mass frame is built once per session and consumed by
     * q_lm_score + q_ppl_buckets — declared so the bench attributes its
     * build time to the shared stage, not to whichever query runs first. */
@@ -1166,11 +994,6 @@ object TextQueries extends QueryGroup {
       "ppl_buckets" -> (pplBucketFrame(_, _)))
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_perceptron_gate" -> perceptronGate,
-    "q_annotator_kappa" -> annotatorKappa,
-    "q_auc" -> auc,
-    "q_pr_curve" -> prCurve,
-    "q_calibration" -> calibration,
     "q_text_split" -> textSplitRecords,
     "q_text_chunks" -> textChunks,
     "q_bpe_pairs" -> bpePairs,
@@ -1220,102 +1043,6 @@ object TextQueries extends QueryGroup {
   override def oracle: Map[String, String] = Map(
     // fixed-point LM scoring: integer // keeps every term exact, the HUGEINT
     // sum mirrors Spark's long sum, and bucketing compares integer-scaled
-    // batch perceptron, PcRounds unrolled rounds; ALL integer (update =
-    // class-sum of misclassified rows), margin-0 counts as wrong so the
-    // w0=0 first round is the plain class sum both engines agree on
-    "q_perceptron_gate" ->
-      s"""WITH $pcFeatsSql,
-         |${pcRoundsSql(PcRounds)}
-         |SELECT doc_id, y, CAST($pcMarginSql AS BIGINT) AS margin,
-         |  ($pcMarginSql) > 0 AS pred_keep,
-         |  (($pcMarginSql) > 0) = (y = 1) AS correct
-         |FROM f, w$PcRounds w ORDER BY doc_id""".stripMargin,
-
-    // rank-free Mann-Whitney U over the distinct-margin frame; ties get
-    // half credit through the integer U2 form; one double at the end
-    "q_auc" ->
-      s"""WITH $pcFeatsSql,
-         |${pcRoundsSql(PcRounds)},
-         |sc AS (SELECT CAST($pcMarginSql AS BIGINT) AS s, y
-         |       FROM f, w$PcRounds w),
-         |g AS (SELECT s,
-         |    sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS np,
-         |    sum(CASE WHEN y = -1 THEN 1 ELSE 0 END) AS nn
-         |  FROM sc GROUP BY s),
-         |c AS (SELECT s, np, nn,
-         |    coalesce(sum(nn) OVER (ORDER BY s
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_nn
-         |  FROM g),
-         |a AS (SELECT sum(np * cum_nn * 2 + np * nn) AS u2,
-         |    sum(np) AS n_pos, sum(nn) AS n_neg FROM c)
-         |SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
-         |  CAST(u2 AS BIGINT) AS u2,
-         |  round(CAST(CAST(u2 AS BIGINT) AS DOUBLE)
-         |    / CAST(2 * n_pos * n_neg AS DOUBLE), 6) AS auc
-         |FROM a""".stripMargin,
-
-    // cumulative TP/FP down the distinct-margin order; integer ratios
-    // until the final rounded divisions
-    "q_pr_curve" ->
-      s"""WITH $pcFeatsSql,
-         |${pcRoundsSql(PcRounds)},
-         |sc AS (SELECT CAST($pcMarginSql AS BIGINT) AS threshold, y
-         |       FROM f, w$PcRounds w),
-         |g AS (SELECT threshold,
-         |    sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS np,
-         |    sum(CASE WHEN y = -1 THEN 1 ELSE 0 END) AS nn
-         |  FROM sc GROUP BY threshold),
-         |c AS (SELECT threshold,
-         |    sum(np) OVER (ORDER BY threshold DESC) AS tp,
-         |    sum(nn) OVER (ORDER BY threshold DESC) AS fp
-         |  FROM g),
-         |tot AS (SELECT sum(np) AS n_pos FROM g)
-         |SELECT threshold, CAST(tp + fp AS BIGINT) AS n_pred,
-         |  CAST(tp AS BIGINT) AS tp,
-         |  round(CAST(tp AS DOUBLE) / (tp + fp), 6) AS precision,
-         |  round(CAST(tp AS DOUBLE) / n_pos, 6) AS recall
-         |FROM c, tot ORDER BY threshold DESC""".stripMargin,
-
-    // integer confusion counts against the unrolled-perceptron decision;
-    // kappa = (po_num - pe_num)/(n^2 - pe_num), one double at the end
-    "q_annotator_kappa" ->
-      s"""WITH $pcFeatsSql,
-         |${pcRoundsSql(PcRounds)},
-         |conf AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CASE WHEN y = 1 AND ($pcMarginSql) > 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n11,
-         |    CAST(coalesce(sum(CASE WHEN y = 1 AND NOT ($pcMarginSql) > 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n10,
-         |    CAST(coalesce(sum(CASE WHEN y = -1 AND ($pcMarginSql) > 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n01,
-         |    CAST(coalesce(sum(CASE WHEN y = -1 AND NOT ($pcMarginSql) > 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n00
-         |  FROM f, w$PcRounds w)
-         |SELECT n, n11, n10, n01, n00,
-         |  round(CAST(n11 + n00 AS DOUBLE) / n, 6) AS po,
-         |  round(CAST((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00) AS DOUBLE)
-         |    / (n * n), 6) AS pe,
-         |  CASE WHEN n * n = (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)
-         |    THEN NULL
-         |    ELSE round(CAST((n11 + n00) * n
-         |        - ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)) AS DOUBLE)
-         |      / (n * n - ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))), 6)
-         |  END AS kappa
-         |FROM conf""".stripMargin,
-
-    // 8 fixed-width integer bins over [min,max] of the unrolled margin;
-    // integer bin arithmetic, one rounded division per bin
-    "q_calibration" ->
-      s"""WITH $pcFeatsSql,
-         |${pcRoundsSql(PcRounds)},
-         |sc AS (SELECT CAST($pcMarginSql AS BIGINT) AS sv, (y = 1) AS pos
-         |       FROM f, w$PcRounds w),
-         |b AS (SELECT min(sv) AS lo, max(sv) AS hi FROM sc)
-         |SELECT CAST(((sv - lo) * 8) // (hi - lo + 1) AS INT) + 1 AS bin,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         |  round(CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / count(*), 6) AS pos_rate,
-         |  min(sv) AS lo_margin, max(sv) AS hi_margin
-         |FROM sc, b GROUP BY 1 ORDER BY bin""".stripMargin,
-
     // thresholds -- no float enters until the displayed score
     "q_lm_score" ->
       """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS words FROM documents),

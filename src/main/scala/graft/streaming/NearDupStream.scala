@@ -37,46 +37,20 @@ object NearDupStream {
     * doc_id rows. */
   def runIngestDedup(spark: SparkSession, docs: DataFrame, indexPath: String,
                      keptPath: String, checkpoint: String,
-                     maxHamming: Int = 3): Unit =
-    runIngestDedupWith(spark, docs, indexPath, keptPath, checkpoint,
-      Dedup.simhashIndex(_),
-      (o, n) => Dedup.incrementalSimhashPairs(o, n, maxHamming))
-
-  /** Image-fingerprint variant: a streaming media frame
-    * (doc_id, payload, media_type) is perceptually hashed per batch
-    * ([[graft.ops.ImageHash.phash]] — real pixel decode) and deduped
-    * against the persisted dHash band index. Same suppression semantics,
-    * different fingerprint family — the generic core below is shared. */
-  def runImageIngestDedup(spark: SparkSession, media: DataFrame,
-                          indexPath: String, keptPath: String,
-                          checkpoint: String, maxHamming: Int = 3): Unit =
-    runIngestDedupWith(spark, media, indexPath, keptPath, checkpoint,
-      b => graft.ops.ImageHash.phash(b.sparkSession, b).toDF(),
-      (o, n) => graft.ops.ImageHash.incrementalPhashPairs(o, n, maxHamming)
-        .withColumnRenamed("doc_a", "id_a")
-        .withColumnRenamed("doc_b", "id_b"))
-
-  /** Generic ingest-dedup core: `fingerprint` turns a micro-batch into a
-    * per-doc fingerprint frame (must carry doc_id), `incrementalPairs`
-    * produces the batch-touching near-dup pairs oriented (id_a < id_b)
-    * against the index — the suppression/append logic is fingerprint-
-    * family-agnostic. */
-  def runIngestDedupWith(spark: SparkSession, docs: DataFrame,
-                         indexPath: String, keptPath: String, checkpoint: String,
-                         fingerprint: DataFrame => DataFrame,
-                         incrementalPairs: (DataFrame, DataFrame) => DataFrame): Unit = {
+                     maxHamming: Int = 3): Unit = {
     val q = docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
-        val batchIdx = fingerprint(batch).persist()
+        val batchIdx = Dedup.simhashIndex(batch).persist()
         try {
           val oldIdx =
             if (new java.io.File(indexPath).exists()) s.read.parquet(indexPath)
             else s.createDataFrame(
               s.sparkContext.emptyRDD[org.apache.spark.sql.Row], batchIdx.schema)
-          val pairs = incrementalPairs(oldIdx, batchIdx).persist()
+          val pairs =
+            Dedup.incrementalSimhashPairs(oldIdx, batchIdx, maxHamming).persist()
           val batchIds = batchIdx.select("doc_id")
           val oldIds = oldIdx.select("doc_id")
           // vs the index: the batch doc may sit on EITHER side of the

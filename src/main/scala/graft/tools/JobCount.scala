@@ -5,8 +5,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Per-query Spark-job / stage / task-time attribution — the §1 measurement
-  * companion of [[MicroBench]]. At local scale the per-job fixed cost
+/** Per-query Spark-job / stage / task-time attribution over the
+  * registered queries. At local scale the per-job fixed cost
   * (~0.3–0.5 s) dominates every query in the 0.3–2 s band, so "how many
   * driver jobs does this query launch" is the number that decides whether
   * a structural change (fused rounds, fewer driver actions) can pay at all.

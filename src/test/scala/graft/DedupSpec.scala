@@ -324,6 +324,14 @@ class DedupSpec extends SparkSuite {
       .toSeq
   }
 
+  /** The graph ops take a persisted pair frame and its row count, as the
+    * registered queries pass their session-shared pair frames. */
+  def persistedPairs(pairs: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, Long) = {
+    val p = graft.core.SharedFrames.register(pairs)
+    (p, p.count())
+  }
+
   test("reliable CC: superseded per-round checkpoints are deleted (no leak)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-leak")
     spark.sparkContext.setCheckpointDir(dir.toString)
@@ -348,18 +356,20 @@ class DedupSpec extends SparkSuite {
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
       df.collect().toSeq.sortBy(_.toString)
 
-    val prLocal = sorted(graft.ops.Graph.pageRank(pairs, iters = 5))
-    val lpaLocal = sorted(graft.ops.Graph.labelPropagation(pairs, iters = 4))
-    val hopLocal = sorted(graft.ops.Graph.hopDistances(pairs, seeds, maxHops = 3))
+    val (p, n) = persistedPairs(pairs)
+    val prLocal = sorted(graft.ops.Graph.pageRank(p, iters = 5, knownSize = n))
+    val lpaLocal = sorted(graft.ops.Graph.labelPropagation(p, iters = 4, knownSize = n))
+    val hopLocal = sorted(graft.ops.Graph.hopDistances(p, seeds, maxHops = 3, knownSize = n))
     graft.core.SharedFrames.clear()
 
-    for ((name, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      ("pageRank", () => graft.ops.Graph.pageRank(pairs, iters = 5, reliable = true)),
-      ("labelPropagation", () => graft.ops.Graph.labelPropagation(pairs, iters = 4, reliable = true)),
-      ("hopDistances", () => graft.ops.Graph.hopDistances(pairs, seeds, maxHops = 3, reliable = true)))) {
+    type Run = (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame
+    for ((name, run) <- Seq[(String, Run)](
+      ("pageRank", (p, n) => graft.ops.Graph.pageRank(p, iters = 5, reliable = true, knownSize = n)),
+      ("labelPropagation", (p, n) => graft.ops.Graph.labelPropagation(p, iters = 4, reliable = true, knownSize = n)),
+      ("hopDistances", (p, n) => graft.ops.Graph.hopDistances(p, seeds, maxHops = 3, reliable = true, knownSize = n)))) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-$name-ckpt")
       spark.sparkContext.setCheckpointDir(dir.toString)
-      val reliableRows = sorted(run())
+      val reliableRows = sorted(run.tupled(persistedPairs(pairs)))
       val expected = name match {
         case "pageRank" => prLocal
         case "labelPropagation" => lpaLocal
@@ -378,8 +388,8 @@ class DedupSpec extends SparkSuite {
     // simulate the misconfigured-cluster case: no durable checkpoint dir
     sc.setCheckpointDir(null)
     try intercept[IllegalArgumentException] {
-      graft.ops.Graph.pageRank(
-        Seq((1L, 2L)).toDF("id_a", "id_b"), iters = 2, reliable = true)
+      val (p, n) = persistedPairs(Seq((1L, 2L)).toDF("id_a", "id_b"))
+      graft.ops.Graph.pageRank(p, iters = 2, reliable = true, knownSize = n)
     } finally saved.foreach(sc.setCheckpointDir)
   }
 
@@ -390,7 +400,8 @@ class DedupSpec extends SparkSuite {
       (10L, 11L), (10L, 12L), (11L, 12L),
       (3L, 10L)
     ).toDF("id_a", "id_b")
-    val got = graft.ops.Graph.labelPropagation(pairs, iters = 4)
+    val (p, n) = persistedPairs(pairs)
+    val got = graft.ops.Graph.labelPropagation(p, iters = 4, knownSize = n)
       .as[(Long, Long)].collect().toMap
     assert(got.size == 6)
     assert(got(1L) == got(2L) && got(2L) == got(3L), s"left clique split: $got")
@@ -407,19 +418,21 @@ class DedupSpec extends SparkSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (1L, 5L))
       .toDF("id_a", "id_b")
     val seeds = Seq(Tuple1(1L)).toDF("doc_id")
-    val got = graft.ops.Graph.hopDistances(pairs, seeds, maxHops = 3)
+    val (p, n) = persistedPairs(pairs)
+    val got = graft.ops.Graph.hopDistances(p, seeds, maxHops = 3, knownSize = n)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 0L, 2L -> 1L, 5L -> 1L, 3L -> 2L, 4L -> 2L, 6L -> 2L),
       s"wrong distances: $got")
     // radius 1 cuts everything past the direct neighbors
-    val r1 = graft.ops.Graph.hopDistances(pairs, seeds, maxHops = 1)
+    val r1 = graft.ops.Graph.hopDistances(p, seeds, maxHops = 1, knownSize = n)
       .as[(Long, Long)].collect().toMap
     assert(r1 == Map(1L -> 0L, 2L -> 1L, 5L -> 1L), s"radius-1 wrong: $r1")
   }
 
   test("pagerank: hub outranks leaves; integer recurrence matches driver replay") {
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L), (10L, 11L))
-    val got = graft.ops.Graph.pageRank(pairs.toDF("id_a", "id_b"), iters = 5)
+    val (p, nPairs) = persistedPairs(pairs.toDF("id_a", "id_b"))
+    val got = graft.ops.Graph.pageRank(p, iters = 5, knownSize = nPairs)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
     // exact driver replay of the integer recurrence
@@ -588,13 +601,14 @@ class DedupSpec extends SparkSuite {
     // 4-clique {1,2,3,4} + pendant 5 hanging off 1 + chain 6-7-8 off 2
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (1L, 5L), (2L, 6L), (6L, 7L), (7L, 8L)).toDF("id_a", "id_b")
-    val core2 = graft.ops.Graph.kCore(pairs, k = 2, iters = 4)
+    val (p, n) = persistedPairs(pairs)
+    val core2 = graft.ops.Graph.kCore(p, k = 2, iters = 4, knownSize = n)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // chain/pendant peel over successive rounds; clique keeps degree 3
     assert(core2.keySet == Set(1L, 2L, 3L, 4L))
     assert(core2.values.forall(_ == 3L))
     // k=4 empties the graph entirely (clique internal degree is 3)
-    assert(graft.ops.Graph.kCore(pairs, k = 4, iters = 4).isEmpty)
+    assert(graft.ops.Graph.kCore(p, k = 4, iters = 4, knownSize = n).isEmpty)
     graft.core.SharedFrames.clear()
   }
 

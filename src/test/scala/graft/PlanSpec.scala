@@ -128,16 +128,6 @@ class PlanSpec extends SparkSuite {
       s"expected 4 band joins with a hamming verify, found $verifies")
   }
 
-  test("fingerprint near-dup pair join (image) never plans a nested loop") {
-    val plan = formatted("q_mm_phash_dup")
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"),
-      s"q_mm_phash_dup banding degraded to an all-pairs join:\n${plan.take(1500)}")
-    // candidates come from the stacked band explode, joined on the
-    // (band_idx, band_val) equi-key
-    assert(plan.contains("Generate"), "q_mm_phash_dup lost the band explode")
-  }
-
   test("hot-path queries stay inside whole-stage codegen") {
     // the scan -> filter -> project pipeline must fuse into generated
     // code; a non-codegen Expression in the hot path would break the
@@ -468,11 +458,10 @@ class PlanSpec extends SparkSuite {
     // global Window in the optimized plan must cross an Aggregate, so a
     // new global window over raw rows fails here and must either take a
     // partition key or justify its bound.
-    // every query family with an audited global-window site: AUC/PR
-    // (distinct scores), CUSUM (distinct days), gini / curriculum / vocab
-    // growth (grid-cell offset cumsums, decile cumsums), stratified
-    // sample (tier offsets)
-    val names = Seq("q_auc", "q_pr_curve",
+    // every query family with an audited global-window site: CUSUM
+    // (distinct days), gini / curriculum / vocab growth (grid-cell offset
+    // cumsums, decile cumsums), stratified sample (tier offsets)
+    val names = Seq(
       "q_cusum_drift", "q_gini", "q_vocab_growth", "q_stratified_sample",
       "q_curriculum_order", "q_ppl_buckets")
     for (n <- names) {

@@ -319,36 +319,6 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("ingest near-dup suppression for IMAGES against a persisted phash index") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val tmp = Files.createTempDirectory("graftimgdd").toFile.getAbsolutePath
-    def gif(id: Long) = graft.ops.GifPixelFixtures.synthPixelGif(id)
-    val src = MemoryStream[(Long, Array[Byte])]
-    val media = src.toDF().toDF("doc_id", "payload")
-      .withColumn("media_type", org.apache.spark.sql.functions.lit("image"))
-    def run(): Unit = graft.streaming.NearDupStream.runImageIngestDedup(
-      spark, media, s"$tmp/index", s"$tmp/kept", s"$tmp/ckpt")
-    // batch 1: 1 kept; 8 (same base 1 -> pixel-identical dHash) suppressed
-    // intra-batch; 2 (base 2) kept
-    src.addData((1L, gif(1L)), (8L, gif(8L)), (2L, gif(2L)))
-    run()
-    // batch 2: 15 (base 1) duplicates the INDEXED doc 1 -> suppressed;
-    // 4 (base 4, hamming 8 from doc 1 and far from doc 2) -> kept.
-    // (NOT doc 3: bases 2 and 3 both produce all-zero dHashes here —
-    // flat/monotone patterns collapse under dHash, the documented
-    // limitation of comparison-based perceptual hashes)
-    src.addData((15L, gif(15L)), (4L, gif(4L)))
-    run()
-    val kept = spark.read.parquet(s"$tmp/kept")
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 2L, 4L), s"wrong survivors: $kept")
-    val idx = spark.read.parquet(s"$tmp/index")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(idx == kept, s"index diverged from survivors: $idx")
-  }
-
   test("ingest near-dup suppression against a persisted simhash index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
@@ -517,7 +487,7 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("simhash ingest-dedup index resumes across a session boundary") {
-    // the phash/simhash index is parquet on disk; a batch screened by a
+    // the simhash index is parquet on disk; a batch screened by a
     // resumed session suppresses exactly what the in-session chain would
     // have suppressed.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
